@@ -156,9 +156,7 @@ def main() -> None:
                 "ingest_sec": r["ingest_sec"],
                 "rollup_sec": r["rollup_sec"],
                 "total_sec": round(r["ingest_sec"] + r["rollup_sec"], 2),
-                "compression_ratio": r["metrics"].get("blocks_30m", {}).get(
-                    "compression_ratio"
-                ),
+                "compression_ratio": r["compression_ratio"],
             }
             if cores not in pipeline or cur["total_sec"] < pipeline[cores]["total_sec"]:
                 pipeline[cores] = cur

@@ -9,13 +9,11 @@ Composition (no UDF, no driver loop):
 2. spine: ``F.sequence(min_ts, max_ts, interval)`` + ``explode`` —
    executor-side row generation, scales with series count;
 3. left join spine <- observed on (series, ts). Both sides are
-   hash-partitioned on the same keys, and at scale both tables are
-   bucketed by series-hash, so this is a co-partitioned join;
+   hash-partitioned on the same keys, so this is a co-partitioned join;
 4. forward-fill: ``last(value, ignorenulls=True)`` over
    ``partitionBy(series).orderBy(ts).rowsBetween(unboundedPreceding,
    currentRow)``. One shuffle on series (window requires per-series
-   locality) — at scale the tier tables are already partitioned by
-   series-hash bucket so this is shuffle-free.
+   locality).
 
 Properties (tested): idempotent on dense input; fills injected gaps with
 the previous observation; leading gaps (before first observation) remain
@@ -87,10 +85,9 @@ def interpolate_gaps(
     Same spine + co-partitioned left join as :func:`gap_fill`; the
     prev/next observation scans are two O(n) RUNNING frames (ascending
     for prev, descending for next) sharing ONE series-keyed exchange —
-    a single shuffle (zero when the tier table is series-bucketed) and
-    one extra in-partition sort. Exact integer microsecond math for the
-    time ratio; the arithmetic shape is kept identical to the DuckDB
-    oracle so doubles match bit-for-bit.
+    a single shuffle and one extra in-partition sort. Exact integer
+    microsecond math for the time ratio; the arithmetic shape is kept
+    identical to the DuckDB oracle so doubles match bit-for-bit.
     """
     spans = df.groupBy(series_col).agg(
         F.min(ts_col).alias("_min_ts"), F.max(ts_col).alias("_max_ts")

@@ -144,21 +144,19 @@ def build_tiers(
     ts_col: str = "warc_ts",
     value_col: str = "value",
     sum_cast: str | None = None,
-    pre_partition_series: bool = True,
 ) -> dict[str, DataFrame]:
     """The full cascade raw -> 30m -> 1d -> 1mo. One raw scan total.
 
-    ``pre_partition_series`` hash-partitions the input on the series key
-    ONCE up front: HashPartitioning(series) satisfies the clustered
-    distribution of every tier's groupBy (series, bucket) AND of the
-    per-series gap-fill window, so the whole cascade runs on a single
-    shuffle instead of one per tier (~35% faster at bench scale;
-    storage-side equivalent: Catalog.write_bucketed). Tradeoff: the
-    partial (map-side combine) pre-aggregation of the first tier is
-    skipped — a win when series are numerous and slots-per-series
-    modest (the 10^12-doc web-table shape), a loss only when a few
-    series dominate the row count; set False there."""
-    base = df.repartition(F.col(series_col)) if pre_partition_series else df
+    The input is hash-partitioned on the series key ONCE up front:
+    HashPartitioning(series) satisfies the clustered distribution of
+    every tier's groupBy (series, bucket) AND of the per-series gap-fill
+    window, so the whole cascade runs on a single shuffle instead of one
+    per tier (~35% faster at bench scale). Tradeoff: the partial
+    (map-side combine) pre-aggregation of the first tier is skipped — a
+    win when series are numerous and slots-per-series modest (the
+    10^12-doc web-table shape), a loss only when a few series dominate
+    the row count."""
+    base = df.repartition(F.col(series_col))
     t30 = rollup_raw(base, series_col, ts_col, value_col, TIER_SECONDS["30m"], sum_cast)
     t1d = rollup_cascade(t30, TIER_SECONDS["1d"])
     t1mo = monthly_from_daily(t1d)

@@ -12,9 +12,10 @@ bursts. These operators are the standard remedies (TimescaleDB
 expressions.
 
 Scale notes:
-- All three are one shuffle each: a window partitioned by series (the
-  storage bucketing key — zero exchange when read from a bucketed tier
-  table) followed by a groupBy on (series, bucket) that AQE coalesces.
+- All three are one shuffle each: a window partitioned by series
+  followed by a groupBy on (series, bucket) that reuses the window's
+  partitioning. On input already hash-partitioned on series (e.g.
+  after ``repartition(series)``) the window and agg add no exchange.
 - Exact integer microsecond math throughout (unix_micros), no float
   time arithmetic: results are engine-portable and oracle-able.
 - No UDFs; everything stays inside whole-stage codegen.
@@ -52,9 +53,8 @@ def time_weighted_avg(
     all share one timestamp (zero total hold inside the bucket) falls
     back to the plain mean of those samples.
 
-    One window (series time order) + one groupBy — the window partition
-    key equals the tier tables' bucket key, so reading from a bucketed
-    tier runs exchange-free.
+    One window (series time order) + one groupBy sharing a single
+    series-keyed exchange.
 
     ``sum_cast`` (e.g. ``rollup.DEC``): cast values to decimal BEFORE
     weighting, making the weighted sum exact integer-scaled arithmetic
@@ -211,10 +211,9 @@ def gap_report(
 
     The operational complement of gap-fill: retention auditing, crawl
     health dashboards, and deciding WHERE to backfill before running
-    the fill. One lag window over the series sort (a single exchange;
-    zero on bucketed tier tables) and a filter — no spine, no join:
-    the cost is O(present rows), not O(grid), which is the difference
-    at 100 TB where grids are sparse. Exact integer microsecond math;
+    the fill. One lag window over the series sort (a single exchange)
+    and a filter — no spine, no join: the cost is O(present rows), not
+    O(grid), which is the difference at 100 TB where grids are sparse. Exact integer microsecond math;
     timestamps are assumed unique per (series, ts) — grid data after a
     rollup, where the bucket IS the key.
     """
@@ -314,8 +313,8 @@ def ewma(
     ``mapInArrow`` over series-repartitioned, series-sorted partitions,
     the recurrence run per contiguous series slice inside each Arrow
     batch with per-series state carried across batch splits. One
-    exchange (zero on series-bucketed tables); parallelism is across
-    series, which is the only axis a sequential recurrence admits.
+    exchange; parallelism is across series, which is the only axis a
+    sequential recurrence admits.
 
     The PRODUCTION path (default) runs each slice through the
     numpy blocked-rescaled closed form (``_ewma_closed_form``) — no

@@ -129,24 +129,13 @@ def run_rollup_pipeline(
     now: datetime.datetime | None = None,
     encode_blocks: bool = True,
     block_size: str = "7 days",
-    bucketed_tiers: bool = False,
-    tier_buckets: int = 16,
     sum_cast: str | None = None,
     histogram_bin_width: float | None = None,
     distinct_key: str | None = None,
-    distinct_lgk: int = 14,
 ) -> PipelineResult:
     """``block_size``: Gorilla block span. Weekly blocks (336 half-hour
     points) amortize per-block overhead and compress better than daily
     (48-point) blocks; choose by tier resolution x target points/block.
-
-    ``bucketed_tiers``: persist agg_30m/agg_1d as series-bucketed
-    catalog tables (Catalog.write_bucketed) while keeping the day/month
-    hive partitioning and the partition-granular dynamic overwrite.
-    Downstream reads then run groupBy/window/join on the series key
-    with ZERO exchanges (docs/DESIGN.md). Off by default: identical
-    results either way (tests/test_pipeline.py pins parity), flip on
-    when the tier tables are query-serving hot paths.
 
     ``sum_cast``: e.g. ``rollup.DEC`` stores EXACT decimal partial sums
     in every tier — summation-order-independent, so tier points are
@@ -165,7 +154,11 @@ def run_rollup_pipeline(
     cardinality tiers ``dist_30m``/``dist_1d`` over this raw column
     (distinct ``distinct_key`` per (url, bucket)) — sketch union is
     lossless, so the cascade is exact w.r.t. the sketch; served by
-    ``TierStore.distinct``. ``distinct_lgk`` sizes the sketches.
+    ``TierStore.distinct``. The sketches use lgK = 14.
+
+    The Gorilla compression ratio is not computed here (it would cost a
+    full re-read of ``blocks_30m`` per build); take it on demand with
+    ``codec.compression_report(cat.read("blocks_30m"))``.
     """
     res = PipelineResult()
 
@@ -212,28 +205,15 @@ def run_rollup_pipeline(
             "input_state": in_state,
             "recomputed_partitions": changed,
         }
-        if bucketed_tiers and partition_by:
-            snap = cat.write_bucketed(
-                out,
-                name,
-                bucket_by=["series"],
-                n_buckets=tier_buckets,
-                sort_by=sort_within,
-                partition_by=partition_by,
-                mode="dynamic" if cat.exists(name) else "overwrite",
-                lineage=lineage,
-                touched_partitions=touched,
-            )
-        else:
-            snap = cat.write(
-                out,
-                name,
-                partition_by=partition_by,
-                sort_within=sort_within,
-                mode="dynamic" if partition_by else "overwrite",
-                lineage=lineage,
-                touched_partitions=touched,
-            )
+        snap = cat.write(
+            out,
+            name,
+            partition_by=partition_by,
+            sort_within=sort_within,
+            mode="dynamic" if partition_by else "overwrite",
+            lineage=lineage,
+            touched_partitions=touched,
+        )
         res.metrics[name] = {"files": snap["files"], "bytes": snap["bytes"]}
         res.stages_run.append(name)
 
@@ -308,7 +288,7 @@ def run_rollup_pipeline(
             raw_table,
             "day_bucket",
             lambda src: rollup.distinct_tier(
-                src, "url", "warc_ts", distinct_key, 1800, distinct_lgk
+                src, "url", "warc_ts", distinct_key, 1800, 14
             ).withColumn(
                 "day_bucket",
                 F.to_date(F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND")),
@@ -375,13 +355,6 @@ def run_rollup_pipeline(
             sort_within=["series"],
             expand_days=_expand_to_blocks,
         )
-        if "blocks_30m" in res.stages_run:
-            ratio = (
-                cat.read("blocks_30m")
-                .agg((F.sum("raw_bytes") / F.sum("enc_bytes")).alias("r"))
-                .collect()[0]["r"]
-            )
-            res.metrics["blocks_30m"]["compression_ratio"] = ratio
 
     # -- retention ------------------------------------------------------
     if policy is not None and now is not None:

@@ -80,25 +80,8 @@ class Catalog:
     def exists(self, name: str) -> bool:
         return os.path.exists(self._snapshot_log(name))
 
-    def _ident(self, name: str) -> str:
-        """Session-catalog identifier for bucketed tables: unique per
-        (warehouse, name) so two Catalog instances in one SparkSession
-        (common in tests) never collide."""
-        h = hashlib.md5(self.warehouse.encode()).hexdigest()[:8]
-        return f"bkt_{h}_{name}"
-
     # -- IO ----------------------------------------------------------------
     def read(self, name: str, merge_schema: bool = False) -> DataFrame:
-        # bucketed tables come back through the session catalog so the
-        # scan carries the HashPartitioning metadata (shuffle-free
-        # groupBy/window/join on the bucket key); self-registers from
-        # the snapshot's bucket spec in a fresh session
-        spec = self._bucket_spec(name)
-        if spec is not None:
-            ident = self._ident(name)
-            if not self.spark.catalog.tableExists(ident):
-                self.register_bucketed(name)
-            return self.spark.table(ident)
         # basePath keeps partition columns typed + present after pruning.
         # merge_schema: additive schema evolution — an appended tranche
         # may carry NEW columns (Iceberg add-column analog); older files
@@ -110,129 +93,6 @@ class Catalog:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(self.table_path(name))
 
-    def _bucket_spec(self, name: str) -> dict[str, Any] | None:
-        snap = self.last_snapshot(name) if self.exists(name) else None
-        return (snap or {}).get("bucket_spec")
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_by: list[str],
-        n_buckets: int,
-        sort_by: list[str] | None = None,
-        partition_by: list[str] | None = None,
-        mode: str = "overwrite",
-        lineage: dict[str, Any] | None = None,
-        touched_partitions: list[str] | None = None,
-    ) -> dict[str, Any]:
-        """Hash-bucketed, per-bucket-sorted table (Iceberg
-        ``bucket(N, col)`` partition-transform analog via Spark
-        bucketing), optionally hive-partitioned on top. Reading it back
-        gives scans whose output is already HashPartitioning(bucket_by)
-        — every downstream groupBy / window / join keyed on (a superset
-        of) ``bucket_by`` runs with ZERO exchanges, which at 100 TB
-        removes the dominant shuffle of the tier cascade and the
-        gap-fill window (pinned by tests/test_plans.py).
-
-        ``mode='overwrite'`` replaces the table (snapshot history
-        restarts, like an Iceberg REPLACE TABLE). ``mode='dynamic'``
-        (requires ``partition_by`` and an existing table) replaces only
-        the hive partitions present in ``df`` via ``insertInto`` under
-        dynamic partitionOverwriteMode — the incremental-pipeline write
-        path, now with bucketing preserved."""
-        ident = self._ident(name)
-        path = self.table_path(name)
-        spec = {
-            "bucket_by": bucket_by,
-            "n_buckets": n_buckets,
-            "sort_by": sort_by or [],
-            "partition_by": partition_by or [],
-        }
-        if mode == "dynamic":
-            if not partition_by:
-                raise ValueError("dynamic mode requires partition_by")
-            if not self.spark.catalog.tableExists(ident):
-                self.register_bucketed(name)
-            prev = self.spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                # insertInto is positional: partition cols go last
-                cols = self.spark.table(ident).columns
-                df.select(*cols).write.mode("overwrite").insertInto(ident)
-            finally:
-                self.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-        else:
-            writer = df.write.format("parquet")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer = writer.bucketBy(n_buckets, *bucket_by)
-            if sort_by:
-                writer = writer.sortBy(*sort_by)
-            writer.option("path", path).mode(mode).saveAsTable(ident)
-        if (
-            touched_partitions is None
-            and mode == "dynamic"
-            and self.exists(name)
-        ):
-            touched_partitions = self._df_partitions(df, partition_by)
-        if mode != "dynamic":
-            touched_partitions = None  # full replace -> full stat
-        return self.commit_snapshot(
-            name,
-            operation=f"write_bucketed:{mode}",
-            partition_by=partition_by or [],
-            lineage=lineage or {},
-            extra={"bucket_spec": spec},
-            touched_partitions=touched_partitions,
-        )
-
-    def register_bucketed(self, name: str) -> None:
-        """Re-attach a bucketed table in a fresh SparkSession from its
-        on-disk files + the snapshot's bucket spec (external
-        ``CREATE TABLE ... CLUSTERED BY ... LOCATION`` DDL; partitioned
-        tables get their partition list recovered with MSCK REPAIR)."""
-        spec = self._bucket_spec(name)
-        if spec is None:
-            raise ValueError(f"{name} has no bucket_spec snapshot")
-        path = self.table_path(name)
-        part_by = spec.get("partition_by") or []
-        schema = (
-            self.spark.read.option("basePath", path).parquet(path).schema
-        )
-        data_cols = [f for f in schema if f.name not in part_by]
-        part_cols = [f for f in schema if f.name in part_by]
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in data_cols + part_cols
-        )
-        part_clause = (
-            "PARTITIONED BY (" + ", ".join(f"`{c}`" for c in part_by) + ")"
-            if part_by
-            else ""
-        )
-        sort_clause = (
-            "SORTED BY (" + ", ".join(f"`{c}`" for c in spec["sort_by"]) + ")"
-            if spec["sort_by"]
-            else ""
-        )
-        ident = self._ident(name)
-        self.spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {ident} ({cols}) "
-            f"USING parquet {part_clause} "
-            f"CLUSTERED BY ({', '.join(f'`{c}`' for c in spec['bucket_by'])}) "
-            f"{sort_clause} INTO {spec['n_buckets']} BUCKETS "
-            f"LOCATION '{path}'"
-        )
-        if part_by:
-            self.spark.sql(f"MSCK REPAIR TABLE {ident}")
-
     def write(
         self,
         df: DataFrame,
@@ -242,7 +102,6 @@ class Catalog:
         mode: str = "overwrite",
         repartition: bool = True,
         lineage: dict[str, Any] | None = None,
-        dist_by: list[str] | None = None,
         dist_buckets: int | str | None = "auto",
         touched_partitions: list[str] | None = None,
     ) -> dict[str, Any]:
@@ -255,13 +114,13 @@ class Catalog:
         Write parallelism: repartitioning on the partition columns alone
         would put each partition VALUE through exactly one reducer — a
         hot day at 100x scale funnels tens of GB through a single task.
-        So the shuffle key is ``(*partition_by, salt)`` where salt =
-        ``xxhash64(dist_by) % dist_buckets``. ``dist_by`` defaults to the
-        leading ``sort_within`` column (the series key), keeping each
-        series whole within one file while a hot partition fans out
-        across up to ``dist_buckets`` tasks. ``dist_buckets='auto'``
-        scales with the cluster (defaultParallelism/8, >=2); pass None to
-        force the old one-file-per-partition layout.
+        So the shuffle key is ``(*partition_by, salt)`` where salt is
+        the xxhash64 of the leading ``sort_within`` column (the series
+        key) modulo ``dist_buckets``, keeping each series whole within
+        one file while a hot partition fans out across up to
+        ``dist_buckets`` tasks. ``dist_buckets='auto'`` scales with the
+        cluster (defaultParallelism/8, >=2); pass None to force the old
+        one-file-per-partition layout.
 
         ``touched_partitions``: relative partition dirs this write
         replaces/appends (e.g. ``["day=2024-01-01"]``) — lets the
@@ -276,10 +135,9 @@ class Catalog:
         if partition_by:
             if repartition:
                 cols = [F.col(c) for c in partition_by]
-                salt_src = dist_by if dist_by is not None else (
-                    [sort_within[0]] if sort_within else []
-                )
-                salt_src = [c for c in salt_src if c not in partition_by]
+                salt_src = [
+                    c for c in (sort_within or [])[:1] if c not in partition_by
+                ]
                 nb = dist_buckets
                 if nb == "auto":
                     nb = max(2, self.spark.sparkContext.defaultParallelism // 8)
@@ -406,7 +264,6 @@ class Catalog:
         operation: str,
         partition_by: list[str] | None = None,
         lineage: dict[str, Any] | None = None,
-        extra: dict[str, Any] | None = None,
         touched_partitions: list[str] | None = None,
         removed_partitions: list[str] | None = None,
     ) -> dict[str, Any]:
@@ -456,18 +313,30 @@ class Catalog:
             "rows": total_rows,
             "partitions": part_metrics,
             "lineage": lineage or {},
-            **(extra or {}),
         }
-        with open(self._snapshot_log(name), "a") as fh:
-            fh.write(json.dumps(snap) + "\n")
+        with open(self._snapshot_log(name), "a+b") as fh:
+            end = fh.seek(0, os.SEEK_END)
+            if end:
+                fh.seek(end - 1)
+                if fh.read(1) != b"\n":
+                    # a crash tore the last append: drop that uncommitted
+                    # tail so this record starts on a fresh line
+                    fh.seek(0)
+                    fh.truncate(fh.read().rfind(b"\n") + 1)
+            fh.write((json.dumps(snap) + "\n").encode())
         return snap
 
     def snapshots(self, name: str) -> list[dict[str, Any]]:
+        """Committed snapshot records, oldest first. A record is
+        committed once its line ends in a newline: an unterminated final
+        line is a torn append and is ignored; a corrupt line anywhere
+        else raises."""
         log = self._snapshot_log(name)
         if not os.path.exists(log):
             return []
         with open(log) as fh:
-            return [json.loads(line) for line in fh if line.strip()]
+            lines = fh.read().split("\n")
+        return [json.loads(line) for line in lines[:-1] if line.strip()]
 
     def last_snapshot(self, name: str) -> dict[str, Any] | None:
         snaps = self.snapshots(name)
@@ -484,8 +353,7 @@ class Catalog:
         files eagerly (this shim's storage is single-copy; Iceberg
         retains old files until ``expire_snapshots``), so a snapshot
         whose files are gone raises a clear error instead of silently
-        returning partial data. Bucketed scan metadata is not attached
-        to a time-travel read (it is a plain file-list scan).
+        returning partial data.
         """
         snap = next(
             (s for s in self.snapshots(name) if s["snapshot_id"] == snapshot_id),
@@ -648,22 +516,9 @@ class Catalog:
         surviving data — at 100 TB retention must never touch live rows.
         """
         path = self.table_path(name)
-        # bucketed (session-catalog) tables track partitions in catalog
-        # metadata — drop through DDL so listing stays consistent, then
-        # remove the files (external table: DROP PARTITION keeps data)
-        ident = self._ident(name)
-        is_catalog_table = (
-            self._bucket_spec(name) is not None
-            and self.spark.catalog.tableExists(ident)
-        )
         dropped = []
         for v in values:
             pdir = os.path.join(path, f"{partition_col}={v}")
-            if is_catalog_table:
-                self.spark.sql(
-                    f"ALTER TABLE {ident} DROP IF EXISTS "
-                    f"PARTITION (`{partition_col}` = '{v}')"
-                )
             if os.path.exists(pdir):
                 shutil.rmtree(pdir)
                 dropped.append(v)
@@ -717,11 +572,6 @@ class Catalog:
         anything is rewritten. ``target_rows_per_file`` is accepted for
         back-compat and converted to a bytes target assuming ~64 B/row.
         """
-        if self._bucket_spec(name) is not None:
-            raise ValueError(
-                "compact() would destroy bucket file naming; rewrite "
-                "bucketed tables via write_bucketed instead"
-            )
         if target_rows_per_file is not None:
             target_file_bytes = max(1, target_rows_per_file * 64)
         path = self.table_path(name)

@@ -67,6 +67,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from isp_trace_parser_spark import synth
+    from isp_trace_parser_spark.operators import codec
     from isp_trace_parser_spark.operators.retention import RetentionPolicy
     from isp_trace_parser_spark.pipeline import ingest_pages, run_rollup_pipeline
     from isp_trace_parser_spark.session import get_spark
@@ -110,6 +111,7 @@ def main() -> None:
         distinct_key=args.distinct_key,
     )
     rollup_dt = time.perf_counter() - t1
+    ratio = codec.compression_report(cat.read("blocks_30m")).first()["ratio"]
 
     compacted = {}
     if args.compact:
@@ -138,6 +140,7 @@ def main() -> None:
                 "stages_run": res.stages_run,
                 "stages_skipped": res.stages_skipped,
                 "metrics": res.metrics,
+                "compression_ratio": ratio,
                 "compacted": compacted,
                 "vacuumed_orphans": vacuumed,
             },

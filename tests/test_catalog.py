@@ -212,11 +212,35 @@ def test_compact_partition_scoped_and_atomic(spark, cat):
     assert snap["partitions"] == cat._stat_tree(path)
 
 
-def test_compact_refuses_bucketed_tables(spark, cat):
-    df = _df(spark, 200)
-    cat.write_bucketed(df, "b", bucket_by=["k"], n_buckets=4)
-    with pytest.raises(ValueError, match="bucket"):
-        cat.compact("b")
+def test_torn_snapshot_log_tail_is_ignored_and_replaced(spark, cat):
+    """A crash mid-append leaves an unterminated last line in the
+    snapshot log. That record never committed: the table still reads,
+    the last committed snapshot is the one before it, and the next
+    commit replaces the torn tail. A corrupt line before the tail still
+    raises."""
+    import json
+
+    s1 = cat.write(_df(spark), "t", partition_by=["k"])
+    log = cat._snapshot_log("t")
+    with open(log, "a") as fh:
+        fh.write('{"snapshot_id": "torn", "partit')
+    assert cat.last_snapshot("t")["snapshot_id"] == s1["snapshot_id"]
+    assert cat.read("t").count() == 1000
+
+    s2 = cat.write(_df(spark).where("k = 'p0'"), "t", partition_by=["k"],
+                   mode="dynamic")
+    with open(log) as fh:
+        lines = fh.read().split("\n")
+    assert lines[-1] == ""
+    assert [json.loads(x)["snapshot_id"] for x in lines[:-1]] == [
+        s1["snapshot_id"], s2["snapshot_id"],
+    ]
+    assert cat.last_snapshot("t")["snapshot_id"] == s2["snapshot_id"]
+
+    with open(log, "w") as fh:
+        fh.write("not json\n" + json.dumps(s2) + "\n")
+    with pytest.raises(json.JSONDecodeError):
+        cat.snapshots("t")
 
 
 def test_hive_partition_rel_escaping():

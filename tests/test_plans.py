@@ -71,76 +71,6 @@ def test_no_python_udf_in_jvm_queries(spark):
         assert "ArrowEvalPython" not in plan, q
 
 
-def test_bucketed_table_cascade_is_shuffle_free(spark, tmp_path):
-    """Storage-partitioned execution: a tier table bucketed by series
-    must feed the next cascade level, the gap-fill window, and a
-    same-bucketing join with ZERO exchanges — at 100 TB this removes
-    the dominant shuffle of every downstream stage."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from isp_trace_parser_spark import synth
-    from isp_trace_parser_spark.operators import rollup
-    from isp_trace_parser_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    pages = synth.pages(spark, n_urls=50, n_slots=48 * 7, gap_pct=0).select(
-        "url", "warc_ts", "value"
-    )
-    t30 = rollup.rollup_raw(pages, "url", "warc_ts", "value")
-    cat.write_bucketed(t30, "agg_30m_b", bucket_by=["series"], n_buckets=8,
-                       sort_by=["series", "bucket_ts"])
-    back = cat.read("agg_30m_b")
-
-    def n_exchanges(df):
-        return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
-
-    t1d = rollup.rollup_cascade(back, rollup.TIER_SECONDS["1d"])
-    assert n_exchanges(t1d) == 0
-    assert t1d.count() == 50 * 7  # and it actually computes
-
-    w = Window.partitionBy("series").orderBy("bucket_ts")
-    assert n_exchanges(back.withColumn("p", F.lag("avg_value").over(w))) == 0
-
-    # same-spec bucketed join: both sides pre-hashed -> no shuffle
-    cat.write_bucketed(
-        t30.groupBy("series").agg(F.count("*").alias("n")),
-        "series_dim_b", bucket_by=["series"], n_buckets=8,
-    )
-    joined = back.join(cat.read("series_dim_b").hint("shuffle_merge"), "series")
-    assert n_exchanges(joined) == 0
-
-    # unbucketed baseline pays the exchange
-    t30.write.mode("overwrite").parquet(str(tmp_path / "plain"))
-    plain = spark.read.parquet(str(tmp_path / "plain"))
-    assert n_exchanges(rollup.rollup_cascade(plain, rollup.TIER_SECONDS["1d"])) >= 1
-
-
-def test_bucketed_table_survives_fresh_session(spark, tmp_path):
-    """Dropping the session-catalog entry (= a new SparkSession) must
-    not lose bucketing: read() re-registers from the snapshot's bucket
-    spec and plans stay exchange-free."""
-    from pyspark.sql import functions as F
-
-    from isp_trace_parser_spark import synth
-    from isp_trace_parser_spark.operators import rollup
-    from isp_trace_parser_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh2"))
-    pages = synth.pages(spark, n_urls=20, n_slots=48, gap_pct=0).select(
-        "url", "warc_ts", "value"
-    )
-    t30 = rollup.rollup_raw(pages, "url", "warc_ts", "value")
-    cat.write_bucketed(t30, "t", bucket_by=["series"], n_buckets=4,
-                       sort_by=["series", "bucket_ts"])
-    spark.sql(f"DROP TABLE {cat._ident('t')}")  # simulate a new session
-    back = cat.read("t")  # re-registers via CLUSTERED BY ... LOCATION DDL
-    agg = back.groupBy("series").agg(F.sum("cnt_value").alias("n"))
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 0
-    assert agg.count() == 20
-
-
 def test_serving_routes_prune_at_scan(spark):
     """Every TierStore route (avg, percentile, distinct, auto) must
     reach the parquet scan with BOTH partition pruning (day_bucket

