@@ -2310,7 +2310,7 @@ def q_codec_range_decode(spark, sf_dir):
 
 def q_time_travel_read(spark, sf_dir):
     """Snapshot time travel (Iceberg VERSION AS OF analog): land even
-    event_ids, snapshot, append the odd ones — then read_at() the first
+    event_ids, snapshot, append the odd ones — then read the first
     snapshot's file manifest. The result must equal a SELECT of only
     the first tranche even though the live table holds everything;
     manifest-based reads never see files a snapshot didn't commit."""
@@ -2336,7 +2336,7 @@ def q_time_travel_read(spark, sf_dir):
         sort_within=["user_id", "ts"],
         mode="append",
     )
-    back = cat.read_at("ev", s1["snapshot_id"])
+    back = cat.read("ev", snapshot_id=s1["snapshot_id"])
     return back.select(
         "user_id", "event_id", "ts", _q("value", 4).alias("value"), "day"
     )

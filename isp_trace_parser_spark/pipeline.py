@@ -177,21 +177,20 @@ def run_rollup_pipeline(
         if changed == []:
             res.stages_skipped.append(name)
             return
-        src = cat.read(in_table)
         touched = None  # full recompute -> full snapshot stat
-        if changed is not None:
+        if changed is None:
+            src = cat.read(in_table)
+        else:
+            # the read keeps only the input partitions this run needs
+            # (``in_col`` is the input's top-level partition column)
             if to_months:
                 # day-level changes -> recompute the affected months in
                 # full from the retained finer tier
-                months = sorted({d[:7] for d in changed})
-                src = src.where(
-                    F.date_format(F.col(in_col), "yyyy-MM").isin(months)
-                )
-                out_values = months
+                out_values = sorted({d[:7] for d in changed})
+                src = cat.read(in_table, partitions=lambda v: v[:7] in out_values)
             else:
-                days = expand_days(changed) if expand_days else changed
-                src = src.where(F.col(in_col).isin(days))
-                out_values = days
+                out_values = expand_days(changed) if expand_days else changed
+                src = cat.read(in_table, partitions=set(out_values).__contains__)
             if partition_by:
                 # the snapshot-diff already names the recomputed output
                 # partitions: pass them so the commit stats only those

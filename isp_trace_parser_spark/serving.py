@@ -8,9 +8,11 @@ router does:
 1. pick the COARSEST stored tier whose resolution divides the request
    (a 2h request reads the 30m tier, a 1-week request reads the 1d
    tier) — never the raw table;
-2. prune partitions from the hive layout (day_bucket / month_bucket)
-   BEFORE the scan, so a 2-day window over a 10-year table touches two
-   directories;
+2. prune partitions (day_bucket / month_bucket) BEFORE the scan is
+   planned: the catalog read keeps only the window's files from the
+   committed snapshot's manifest, so a 2-day window over a 10-year
+   table plans from two partitions' files, with no directory listing
+   and no Spark job;
 3. re-aggregate the tier's partial aggregates to the requested
    resolution with the same weighted cascade the pipeline uses
    (rollup.rollup_cascade) — avg recombines exactly via sum/cnt.
@@ -61,6 +63,12 @@ def block_span_seconds(block_span: str) -> int:
     return int(m.group(1)) * _SPAN_SECONDS[m.group(2).lower()]
 
 
+def _in_range(lo: str | None, hi: str | None):
+    """Predicate on a partition value: inside ``[lo, hi]``, where a
+    None bound is open."""
+    return lambda v: (lo is None or v >= lo) and (hi is None or v <= hi)
+
+
 def resolution_seconds(resolution: str) -> int:
     """'30m' -> 1800, '2h' -> 7200, '1d' -> 86400 (calendar-month tiers
     are addressed as the literal '1mo')."""
@@ -96,14 +104,11 @@ class TierStore:
         the half-open window ``(start, end]`` (the engine-wide
         convention, matching the FY/calendar windows of the API)."""
         if resolution.strip() == "1mo":
-            df = self.cat.read("agg_1mo")
-            return self._slice(df, series, start, end, partition_col=None)
+            return self._slice("agg_1mo", series, start, end, partition_col=None)
         res_s = resolution_seconds(resolution)
         for table, tier_s, part_col, _fmt in self.TIERS:
             if res_s % tier_s == 0 and self.cat.exists(table):
-                df = self._slice(
-                    self.cat.read(table), series, start, end, part_col
-                )
+                df = self._slice(table, series, start, end, part_col)
                 if res_s == tier_s:
                     return df
                 return rollup.rollup_cascade(
@@ -203,9 +208,7 @@ class TierStore:
         res_s = resolution_seconds(resolution)
         for table, tier_s, part_col in self.HIST_TIERS:
             if res_s % tier_s == 0 and self.cat.exists(table):
-                hist = self._slice(
-                    self.cat.read(table), series, start, end, part_col
-                )
+                hist = self._slice(table, series, start, end, part_col)
                 if res_s != tier_s:
                     hist = rollup.histogram_cascade(
                         hist.drop(part_col), res_s
@@ -234,9 +237,7 @@ class TierStore:
         res_s = resolution_seconds(resolution)
         for table, tier_s, part_col in self.HIST_TIERS:
             if res_s % tier_s == 0 and self.cat.exists(table):
-                hist = self._slice(
-                    self.cat.read(table), series, start, end, part_col
-                )
+                hist = self._slice(table, series, start, end, part_col)
                 if res_s != tier_s:
                     hist = rollup.histogram_cascade(
                         hist.drop(part_col), res_s
@@ -271,9 +272,7 @@ class TierStore:
         res_s = resolution_seconds(resolution)
         for table, tier_s, part_col in self.DIST_TIERS:
             if res_s % tier_s == 0 and self.cat.exists(table):
-                tier = self._slice(
-                    self.cat.read(table), series, start, end, part_col
-                )
+                tier = self._slice(table, series, start, end, part_col)
                 if res_s != tier_s:
                     tier = rollup.distinct_cascade(
                         tier.drop(part_col), res_s
@@ -284,7 +283,18 @@ class TierStore:
             " — run the pipeline with distinct_key set"
         )
 
-    def _slice(self, df, series, start, end, partition_col):
+    def _slice(self, table, series, start, end, partition_col):
+        # the pruning predicate: partition values are derived from
+        # bucket_ts, so the window's date range on the partition value
+        # is a superset of the bucket_ts filter below; the read keeps
+        # only those partitions' files
+        lo = start.date().isoformat() if start is not None else None
+        hi = end.date().isoformat() if end is not None else None
+        if partition_col == "month_bucket":
+            lo, hi = lo and lo[:7], hi and hi[:7]
+        df = self.cat.read(
+            table, partitions=_in_range(lo, hi) if partition_col else None
+        )
         if series is not None:
             vals = series if isinstance(series, list) else [series]
             df = df.where(F.col("series").isin(vals))
@@ -292,19 +302,6 @@ class TierStore:
             df = df.where(F.col("bucket_ts") > F.lit(start))
         if end is not None:
             df = df.where(F.col("bucket_ts") <= F.lit(end))
-        if partition_col and start is not None and end is not None:
-            # the pruning predicate: hive partition values are derived
-            # from bucket_ts, so a date-range filter on the partition
-            # column reaches the scan as partition pruning (a superset
-            # of the bucket_ts filter — harmless, and the directory
-            # listing shrinks to the window)
-            lo, hi = start.date().isoformat(), end.date().isoformat()
-            if partition_col == "month_bucket":
-                lo, hi = lo[:7], hi[:7]
-            df = df.where(
-                (F.col(partition_col).cast("string") >= lo)
-                & (F.col(partition_col).cast("string") <= hi)
-            )
         return df
 
 
@@ -320,12 +317,13 @@ def series_30m_from_blocks(
 
     The hot path serves from the agg tables (TierStore); once a
     retention policy expires those, the compressed blocks are the
-    surviving copy. Reads prune twice before any decode work:
-    day_bucket partition pruning (directory listing) and a
-    ``block_start`` predicate bounding the window to overlapping
-    blocks — both reach the scan, so only the window's blocks cross
-    into the decode ``mapInPandas``. Output schema matches the 30m
-    tier's (series, bucket_ts, avg_value).
+    surviving copy. Reads prune twice before any decode work: the
+    catalog read keeps only the files of the day_bucket partitions
+    that can hold an overlapping block (the lower bound backed off by
+    the block span), and a ``block_start`` predicate bounds the scan to
+    overlapping blocks, so only the window's blocks cross into the
+    decode ``mapInPandas``. Output schema matches the 30m tier's
+    (series, bucket_ts, avg_value).
 
     ``block_span`` must match the span blocks were encoded with
     (pipeline ``block_size``); a larger value only widens pruning
@@ -334,32 +332,28 @@ def series_30m_from_blocks(
     """
     from isp_trace_parser_spark.operators import codec
 
-    df = cat.read(table)
-    if series is not None:
-        vals = series if isinstance(series, list) else [series]
-        df = df.where(F.col("series").isin(vals))
     span_s = block_span_seconds(block_span)
     # day_bucket is the block START's date, so the lower partition
     # bound backs off a whole number of days covering the span
     span_days = max(1, -(-span_s // 86400))
+    lo = hi = None
+    if start is not None:
+        lo = (start - datetime.timedelta(days=span_days)).date().isoformat()
+    if end is not None:
+        hi = end.date().isoformat()
+    df = cat.read(table, partitions=_in_range(lo, hi))
+    if series is not None:
+        vals = series if isinstance(series, list) else [series]
+        df = df.where(F.col("series").isin(vals))
     if end is not None:
         df = df.where(F.col("block_start") < F.lit(end))
-        if "day_bucket" in df.columns:
-            df = df.where(
-                F.col("day_bucket") <= F.lit(end.date().isoformat())
-            )
     if start is not None:
-        # a block overlaps the window if it STARTS within span of it;
-        # the partition bound mirrors that (day_bucket = block start's
-        # date, so the lower bound backs off a full span)
+        # a block overlaps the window if it STARTS within span of it
         df = df.where(
             F.col("block_start")
             + F.expr(f"INTERVAL {span_s} SECONDS")
             > F.lit(start)
         )
-        if "day_bucket" in df.columns:
-            lo = (start - datetime.timedelta(days=span_days)).date()
-            df = df.where(F.col("day_bucket") >= F.lit(lo.isoformat()))
     out = codec.decode_blocks(df.drop("day_bucket", "n_points", "raw_bytes",
                                       "enc_bytes"))
     if start is not None:

@@ -16,9 +16,25 @@ Layout per table::
     <warehouse>/<name>/<part_col>=<v>/.../part-*.parquet
     <warehouse>/<name>/_snapshots.jsonl      # append-only snapshot log
 
-Each write appends a snapshot record with operation, row/byte/partition
-counts and free-form lineage — the per-partition lineage + metrics the
-north_rule requires, and the checkpoint marker the pipeline resumes from.
+Each commit appends one JSON line to the snapshot log. Its fields:
+``snapshot_id``, ``ts``, ``operation``, ``partition_by``, ``schema``
+(the data columns: the written frame's columns minus the partition
+columns, as a Spark ``StructType`` JSON value; an append or dynamic
+overwrite stores the union with the previous schema), table totals
+``files``/``bytes``/``rows``, ``partitions`` (per leaf partition dir:
+``files``, ``bytes``, ``rows``, a fingerprint ``sig`` and the file
+``names``) and free-form ``lineage``. Commits that write no data
+(expire, vacuum, rollback, compact) carry ``partition_by`` and
+``schema`` forward.
+
+Reads plan from a committed snapshot, never from the directory tree:
+``read`` takes the snapshot's file list, drops the partitions outside
+the caller's filter and scans those files with the recorded schema. A
+read therefore lists no directory and infers no schema, sees only
+committed files, and launches no Spark job while it plans a window of
+up to 32 files (Spark lists more paths than that with a job).
+Partition column types still come from Spark's inference over the
+paths read.
 
 Replaces the reference's file-per-entity layout + manual per-partition
 DuckDB COPY loop (reference: src/isp_trace_parser/optimise_parquet.py:21-95)
@@ -35,11 +51,12 @@ import os
 import shutil
 import time
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # characters Spark escapes in hive partition directory names
 # (ExternalCatalogUtils.escapePathName charset)
@@ -81,17 +98,89 @@ class Catalog:
         return os.path.exists(self._snapshot_log(name))
 
     # -- IO ----------------------------------------------------------------
-    def read(self, name: str, merge_schema: bool = False) -> DataFrame:
-        # basePath keeps partition columns typed + present after pruning.
-        # merge_schema: additive schema evolution — an appended tranche
-        # may carry NEW columns (Iceberg add-column analog); older files
-        # surface them as NULL. Off by default: schema merging lists
-        # every file's footer at planning time, a cost only evolution
-        # readers should pay.
-        reader = self.spark.read.option("basePath", self.table_path(name))
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(self.table_path(name))
+    def read(
+        self,
+        name: str,
+        snapshot_id: str | None = None,
+        partitions: Callable[[str], bool] | None = None,
+    ) -> DataFrame:
+        """The table as of a committed snapshot: the last one, or
+        ``snapshot_id`` (Iceberg ``VERSION AS OF`` analog).
+
+        ``partitions`` is a predicate on the top-level partition value
+        in its on-disk string form (e.g. ``"2024-01-05"`` for
+        ``day_bucket=2024-01-05``); partitions it rejects are dropped
+        before the scan is planned. Files of an unpartitioned table are
+        always read. A filter that keeps no partition returns an empty
+        frame with the table's full schema.
+
+        Time travel is valid across append history: overwrites,
+        compaction and expiry delete files eagerly (single-copy storage;
+        Iceberg keeps them until ``expire_snapshots``), so a snapshot
+        whose files are gone raises instead of returning partial data.
+        """
+        snap = self._snapshot(name, snapshot_id)
+        path = self.table_path(name)
+        files = self._manifest_files(snap, path, partitions)
+        missing = [fp for fp in files if not os.path.exists(fp)]
+        if missing:
+            raise ValueError(
+                f"snapshot {snap['snapshot_id']!r} of {name!r} is no longer "
+                f"readable: {len(missing)} file(s) were rewritten or "
+                "expired by a later overwrite/compact/expire (time "
+                "travel is retained across appends only); first "
+                f"missing: {missing[0]}"
+            )
+        # basePath keeps partition columns typed + present after pruning
+        reader = self.spark.read.option("basePath", path)
+        if snap.get("schema"):
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        if files:
+            return reader.parquet(*files)
+        every = self._manifest_files(snap, path)
+        if not every:
+            raise ValueError(
+                f"table {name!r} has no data files at snapshot "
+                f"{snap['snapshot_id']!r}"
+            )
+        # one file plans the full schema (partition columns included);
+        # the false filter folds to an empty relation
+        return reader.parquet(every[0]).where(F.lit(False))
+
+    def _snapshot(self, name: str, snapshot_id: str | None) -> dict[str, Any]:
+        if snapshot_id is None:
+            snap = self.last_snapshot(name)
+            if snap is None:
+                raise ValueError(f"unknown table {name!r}")
+            return snap
+        for snap in self.snapshots(name):
+            if snap["snapshot_id"] == snapshot_id:
+                return snap
+        raise ValueError(f"unknown snapshot {snapshot_id!r} for {name!r}")
+
+    def _manifest_files(
+        self,
+        snap: dict[str, Any],
+        path: str,
+        partitions: Callable[[str], bool] | None = None,
+    ) -> list[str]:
+        """Absolute data-file paths a snapshot's manifest references,
+        in the partitions whose top-level value ``partitions`` keeps.
+        Raises for a snapshot that predates file manifests."""
+        out: list[str] = []
+        for rel, m in sorted(snap.get("partitions", {}).items()):
+            if "names" not in m:
+                raise ValueError(
+                    f"snapshot {snap['snapshot_id']!r} predates file "
+                    "manifests; commit once with this engine version"
+                )
+            if partitions is not None and rel and not partitions(
+                rel.split("/", 1)[0].split("=", 1)[1]
+            ):
+                continue
+            pdir = os.path.join(path, rel) if rel else path
+            out.extend(os.path.join(pdir, fn) for fn in m["names"])
+        return out
 
     def write(
         self,
@@ -176,10 +265,24 @@ class Catalog:
             and self.exists(name)
         ):
             touched_partitions = self._df_partitions(df, partition_by)
+        fields = [
+            f.jsonValue()
+            for f in df.schema.fields
+            if f.name not in (partition_by or [])
+        ]
+        if mode != "overwrite":
+            # files of the earlier schema stay in place: store the union
+            prev = (self.last_snapshot(name) or {}).get("schema")
+            if prev:
+                known = {f["name"] for f in prev["fields"]}
+                fields = prev["fields"] + [
+                    f for f in fields if f["name"] not in known
+                ]
         return self.commit_snapshot(
             name,
             operation=f"write:{mode}",
             partition_by=partition_by or [],
+            schema={"type": "struct", "fields": fields},
             lineage=lineage or {},
             touched_partitions=touched_partitions,
         )
@@ -248,10 +351,9 @@ class Catalog:
                 "bytes": b,
                 "rows": rows,
                 "sig": sig,
-                # file-level manifest: makes snapshots READABLE, not just
-                # diffable — read_at() reconstructs the table as of any
-                # snapshot whose files still exist (append-only history;
-                # Iceberg time-travel analog). Name lists are metadata-
+                # file-level manifest: every read plans its scan from
+                # these names (the latest snapshot or an earlier one
+                # whose files still exist). Name lists are metadata-
                 # scale: O(files in partition), recorded only for touched
                 # partitions per commit.
                 "names": sorted(pqs),
@@ -266,8 +368,13 @@ class Catalog:
         lineage: dict[str, Any] | None = None,
         touched_partitions: list[str] | None = None,
         removed_partitions: list[str] | None = None,
+        schema: dict[str, Any] | None = None,
     ) -> dict[str, Any]:
         """Append a snapshot record with per-partition file/byte metrics.
+
+        ``partition_by`` and ``schema`` (the data columns as a
+        ``StructType`` JSON value) default to the previous snapshot's,
+        so a commit that writes no data keeps the table's layout.
 
         When ``touched_partitions`` and/or ``removed_partitions`` are
         given (relative partition dirs, e.g. ``day=2024-01-01``), only
@@ -279,11 +386,15 @@ class Catalog:
         exist to avoid). ``None``/``None`` (e.g. a full overwrite) stats
         the whole tree."""
         path = self.table_path(name)
+        prev = self.last_snapshot(name) or {}
+        if partition_by is None:
+            partition_by = prev.get("partition_by", [])
+        if schema is None:
+            schema = prev.get("schema")
         if touched_partitions is None and removed_partitions is None:
             part_metrics = self._stat_tree(path)
         else:
-            prev = self.last_snapshot(name)
-            part_metrics = dict((prev or {}).get("partitions", {}))
+            part_metrics = dict(prev.get("partitions", {}))
             for rp in list(removed_partitions or []) + list(
                 touched_partitions or []
             ):
@@ -307,7 +418,8 @@ class Catalog:
             "snapshot_id": uuid.uuid4().hex[:16],
             "ts": time.time(),
             "operation": operation,
-            "partition_by": partition_by or [],
+            "partition_by": partition_by,
+            "schema": schema,
             "files": n_files,
             "bytes": total_bytes,
             "rows": total_rows,
@@ -339,64 +451,28 @@ class Catalog:
         return [json.loads(line) for line in lines[:-1] if line.strip()]
 
     def last_snapshot(self, name: str) -> dict[str, Any] | None:
-        snaps = self.snapshots(name)
-        return snaps[-1] if snaps else None
-
-    def read_at(self, name: str, snapshot_id: str) -> DataFrame:
-        """Time travel (Iceberg ``VERSION AS OF`` analog): read the
-        table exactly as the given snapshot saw it, from its file-level
-        manifest.
-
-        Scope: valid across APPEND history — appends add files without
-        touching existing ones, so every earlier snapshot stays
-        readable. Overwrites, compaction and expiry REWRITE/DELETE
-        files eagerly (this shim's storage is single-copy; Iceberg
-        retains old files until ``expire_snapshots``), so a snapshot
-        whose files are gone raises a clear error instead of silently
-        returning partial data.
-        """
-        snap = next(
-            (s for s in self.snapshots(name) if s["snapshot_id"] == snapshot_id),
-            None,
-        )
-        if snap is None:
-            raise ValueError(f"unknown snapshot {snapshot_id!r} for {name!r}")
-        path = self.table_path(name)
-        files: list[str] = []
-        missing: list[str] = []
-        for rel, m in sorted(snap.get("partitions", {}).items()):
-            names = m.get("names")
-            if names is None:
-                raise ValueError(
-                    f"snapshot {snapshot_id!r} predates file manifests; "
-                    "time travel needs a commit from this engine version"
-                )
-            pdir = os.path.join(path, rel) if rel else path
-            for fn in names:
-                fp = os.path.join(pdir, fn)
-                (files if os.path.exists(fp) else missing).append(fp)
-        if missing:
-            raise ValueError(
-                f"snapshot {snapshot_id!r} of {name!r} is no longer "
-                f"readable: {len(missing)} file(s) were rewritten or "
-                "expired by a later overwrite/compact/expire (time "
-                "travel is retained across appends only); first "
-                f"missing: {missing[0]}"
-            )
-        if not files:
-            raise ValueError(
-                f"snapshot {snapshot_id!r} of {name!r} lists no data files"
-            )
-        return self.spark.read.option("basePath", path).parquet(*files)
-
-    def _manifest_files(self, snap: dict[str, Any], path: str) -> set[str]:
-        """Absolute data-file paths a snapshot's manifest references."""
-        out: set[str] = set()
-        for rel, m in snap.get("partitions", {}).items():
-            pdir = os.path.join(path, rel) if rel else path
-            for fn in m.get("names", []):
-                out.add(os.path.join(pdir, fn))
-        return out
+        """The last committed record, read back from the end of the log:
+        O(1) in table history. A torn final line is ignored, as in
+        :meth:`snapshots`."""
+        try:
+            fh = open(self._snapshot_log(name), "rb")
+        except FileNotFoundError:
+            return None
+        with fh:
+            pos = fh.seek(0, os.SEEK_END)
+            tail = b""
+            while pos:
+                step = min(pos, 1 << 16)
+                pos -= step
+                fh.seek(pos)
+                tail = fh.read(step) + tail
+                end = tail.rfind(b"\n")
+                if end >= 0 and (pos == 0 or tail.rfind(b"\n", 0, end) >= 0):
+                    break
+        end = tail.rfind(b"\n")
+        if end < 0:
+            return None
+        return json.loads(tail[tail.rfind(b"\n", 0, end) + 1 : end])
 
     def vacuum(self, name: str) -> dict[str, Any]:
         """Remove orphan files (Iceberg ``remove_orphan_files`` analog):
@@ -408,17 +484,7 @@ class Catalog:
         only; never touches a file the current snapshot references, and
         refuses to run if the last snapshot predates file manifests."""
         path = self.table_path(name)
-        last = self.last_snapshot(name)
-        if last is None:
-            raise ValueError(f"unknown table {name!r}")
-        if any(
-            "names" not in m for m in last.get("partitions", {}).values()
-        ):
-            raise ValueError(
-                "last snapshot predates file manifests; commit once with "
-                "this engine version before vacuuming"
-            )
-        live = self._manifest_files(last, path)
+        live = set(self._manifest_files(self._snapshot(name, None), path))
         removed_files: list[str] = []
         removed_dirs: list[str] = []
         for root, dirs, files in os.walk(path):
@@ -453,13 +519,8 @@ class Catalog:
         snapshot. Fails loud (no partial rollback) if the target's files
         were rewritten by an overwrite/compact/expire in between."""
         path = self.table_path(name)
-        target = next(
-            (s for s in self.snapshots(name) if s["snapshot_id"] == snapshot_id),
-            None,
-        )
-        if target is None:
-            raise ValueError(f"unknown snapshot {snapshot_id!r} for {name!r}")
-        keep = self._manifest_files(target, path)
+        target = self._snapshot(name, snapshot_id)
+        keep = set(self._manifest_files(target, path))
         missing = [fp for fp in keep if not os.path.exists(fp)]
         if missing:
             raise ValueError(
@@ -489,6 +550,8 @@ class Catalog:
         return self.commit_snapshot(
             name,
             "rollback",
+            partition_by=target.get("partition_by"),
+            schema=target.get("schema"),
             lineage={
                 "rolled_back_to": snapshot_id,
                 "removed_files": sorted(removed),
@@ -536,7 +599,6 @@ class Catalog:
     def compact(
         self,
         name: str,
-        partition_by: list[str] | None = None,
         sort_within: list[str] | None = None,
         target_rows_per_file: int | None = None,
         target_file_bytes: int = 128 << 20,
@@ -641,8 +703,6 @@ class Catalog:
         return self.commit_snapshot(
             name,
             operation="compact",
-            partition_by=partition_by
-            or (snap or {}).get("partition_by", []),
             lineage={"compacted_partitions": compacted},
             touched_partitions=compacted,
         )

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 import sys
 
@@ -24,3 +26,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """Count the Spark jobs a block launches::
+
+        with spark_jobs() as jobs:
+            ...
+        assert jobs() == 0
+
+    The block runs under its own job group; on exit the listener bus is
+    drained, so every job the block started is in the status store
+    before ``jobs()`` is read."""
+    sc = spark.sparkContext
+    ids = itertools.count()
+
+    @contextlib.contextmanager
+    def counted():
+        group = f"counted-{next(ids)}"
+        sc.setJobGroup(group, "job count")
+        try:
+            yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc._jsc.clearJobGroup()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    return counted

@@ -310,9 +310,10 @@ def test_compact_unknown_partition_raises(spark, cat):
 
 
 def test_read_at_snapshot_time_travel_across_appends(spark, cat):
-    """read_at() reconstructs the table as of each append snapshot from
-    its file manifest; a later dynamic overwrite invalidates earlier
-    snapshots LOUDLY (single-copy storage, not silent partial data)."""
+    """read(snapshot_id=) reconstructs the table as of each append
+    snapshot from its file manifest; a later dynamic overwrite
+    invalidates earlier snapshots LOUDLY (single-copy storage, not
+    silent partial data)."""
     import pandas as pd
     import pytest
     from pyspark.sql import functions as F
@@ -324,10 +325,10 @@ def test_read_at_snapshot_time_travel_across_appends(spark, cat):
     s2 = cat.write(
         df.where("v >= 4"), "tt", partition_by=["k"], mode="append"
     )
-    assert cat.read_at("tt", s1["snapshot_id"]).count() == 4
-    assert cat.read_at("tt", s2["snapshot_id"]).count() == 8
+    assert cat.read("tt", snapshot_id=s1["snapshot_id"]).count() == 4
+    assert cat.read("tt", snapshot_id=s2["snapshot_id"]).count() == 8
     # partition column survives the file-list read
-    got = cat.read_at("tt", s1["snapshot_id"]).select("k").distinct().collect()
+    got = cat.read("tt", snapshot_id=s1["snapshot_id"]).select("k").distinct().collect()
     assert {r["k"] for r in got} == {"p0"}
     # latest snapshot == live read
     assert cat.read("tt").count() == 8
@@ -339,17 +340,17 @@ def test_read_at_snapshot_time_travel_across_appends(spark, cat):
         "tt", partition_by=["k"], mode="dynamic",
     )
     with pytest.raises(ValueError, match="no longer readable"):
-        cat.read_at("tt", s1["snapshot_id"])
+        cat.read("tt", snapshot_id=s1["snapshot_id"])
 
     # unknown id is a clear error too
     with pytest.raises(ValueError, match="unknown snapshot"):
-        cat.read_at("tt", "deadbeef")
+        cat.read("tt", snapshot_id="deadbeef")
 
 
 def test_read_merge_schema_additive_evolution(spark, cat):
     """Additive schema evolution: a later tranche lands an extra column;
-    merge_schema=True surfaces it (NULL for old files), default read
-    keeps the original schema untouched."""
+    the snapshot records the union schema, so a plain read surfaces it
+    (NULL for old files) after the original columns."""
     import pandas as pd
 
     t1 = spark.createDataFrame(
@@ -361,8 +362,8 @@ def test_read_merge_schema_additive_evolution(spark, cat):
     cat.write(t1, "evo", partition_by=["k"])
     cat.write(t2, "evo", partition_by=["k"], mode="append")
 
-    merged = cat.read("evo", merge_schema=True)
-    assert "quality" in merged.columns
+    merged = cat.read("evo")
+    assert merged.columns == ["v", "quality", "k"]
     rows = {r["k"]: r for r in merged.collect()}
     assert rows["c"]["quality"] == 0.9
     assert rows["a"]["quality"] is None
@@ -405,14 +406,14 @@ def test_vacuum_removes_orphans_keeps_live(spark, cat):
     orphan = os.path.join(path, "k=a", "part-orphan-junk.parquet")
     spark.createDataFrame(pd.DataFrame({"v": [99]})).toPandas().to_parquet(orphan)
     os.makedirs(os.path.join(path, ".k=zz.compact_tmp"))
-    before = cat.read("vac").count()  # dir-scan read WOULD see the orphan
+    before = cat.read("vac").count()  # the manifest read skips the orphan
     snap = cat.vacuum("vac")
     assert "k=a/part-orphan-junk.parquet" in snap["lineage"]["removed_files"]
     assert not os.path.exists(orphan)
     assert not os.path.exists(os.path.join(path, ".k=zz.compact_tmp"))
     assert cat.read("vac").count() == 2
     assert snap["operation"] == "vacuum"
-    assert before >= 2  # sanity: orphan was visible pre-vacuum
+    assert before == 2
 
 
 def test_rollback_restores_earlier_snapshot(spark, cat):
@@ -467,3 +468,80 @@ def test_rollback_never_touches_recovery_dirs(spark, cat):
     cat.rollback("rbh", s1["snapshot_id"])
     assert os.path.exists(stash), "rollback deleted a recovery-dir file"
     assert cat.read("rbh").count() == 2
+
+
+def test_read_ignores_uncommitted_files(spark, cat):
+    """A parquet file no commit recorded (a crashed write's leftover)
+    is invisible to reads, and vacuum still removes it."""
+    import shutil
+
+    cat.write(_df(spark), "t", partition_by=["k"])
+    pdir = os.path.join(cat.table_path("t"), "k=p0")
+    committed = sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))
+    copy = os.path.join(pdir, "part-99999-uncommitted.c000.snappy.parquet")
+    shutil.copy(os.path.join(pdir, committed[0]), copy)
+
+    assert cat.read("t").count() == 1000
+    assert cat.read("t", partitions=lambda v: v == "p0").count() == (
+        cat.last_snapshot("t")["partitions"]["k=p0"]["rows"]
+    )
+    snap = cat.vacuum("t")
+    assert snap["lineage"]["removed_files"] == [
+        "k=p0/part-99999-uncommitted.c000.snappy.parquet"
+    ]
+    assert not os.path.exists(copy)
+
+
+def test_commits_without_data_keep_partition_by_and_schema(spark, cat):
+    """Expire, vacuum and rollback write no data: each carries the
+    table's partition columns and schema forward."""
+    s1 = cat.write(_df(spark), "t", partition_by=["k"])
+    cat.write(_df(spark, 10), "t", partition_by=["k"], mode="append")
+    cat.rollback("t", s1["snapshot_id"])
+    cat.expire_partitions("t", "k", ["p0"])
+    cat.vacuum("t")
+    last = cat.last_snapshot("t")
+    assert last["operation"] == "vacuum"
+    assert last["partition_by"] == s1["partition_by"] == ["k"]
+    assert [f["name"] for f in s1["schema"]["fields"]] == ["ts", "v"]
+    assert last["schema"] == s1["schema"]
+    # compact inherits the layout too
+    assert cat.compact("t")["partition_by"] == ["k"]
+
+
+def test_read_partition_filter_prunes_before_planning(spark, cat):
+    """The partition filter keeps only the matching partitions' files;
+    a filter that keeps none returns an empty frame with the full
+    schema; a table with no files raises, naming the table."""
+    cat.write(_df(spark), "t", partition_by=["k"])
+    full = cat.read("t")
+    one = cat.read("t", partitions=lambda v: v == "p1")
+    assert one.inputFiles() and all("/k=p1/" in f for f in one.inputFiles())
+    assert {r["k"] for r in one.select("k").distinct().collect()} == {"p1"}
+    none = cat.read("t", partitions=lambda v: False)
+    assert none.schema == full.schema and none.count() == 0
+
+    cat.expire_partitions("t", "k", ["p0", "p1", "p2"])
+    with pytest.raises(ValueError, match="'t' has no data files"):
+        cat.read("t")
+    with pytest.raises(ValueError, match="unknown table 'nope'"):
+        cat.read("nope")
+
+
+def test_last_snapshot_reads_only_the_log_tail(spark, cat):
+    """last_snapshot parses only the final committed line: a corrupt
+    earlier line does not reach it, a torn tail is skipped, and a
+    record longer than one read chunk comes back whole."""
+    import json
+
+    cat.write(_df(spark, 30), "t", partition_by=["k"])
+    big = cat.commit_snapshot("t", "note", lineage={"pad": "x" * 200_000})
+    log = cat._snapshot_log("t")
+    with open(log) as fh:
+        lines = fh.read().split("\n")
+    with open(log, "w") as fh:
+        fh.write("\n".join(["not json"] + lines[1:]))
+        fh.write('{"snapshot_id": "torn"')
+    assert cat.last_snapshot("t") == json.loads(json.dumps(big))
+    with pytest.raises(json.JSONDecodeError):
+        cat.snapshots("t")

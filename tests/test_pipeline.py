@@ -11,6 +11,7 @@ import pytest
 from isp_trace_parser_spark import synth
 from isp_trace_parser_spark.operators import codec
 from isp_trace_parser_spark.operators.retention import RetentionPolicy
+from isp_trace_parser_spark.parse import parse_traces
 from isp_trace_parser_spark.pipeline import ingest_pages, run_rollup_pipeline
 from isp_trace_parser_spark.sources.catalog import Catalog
 
@@ -171,3 +172,34 @@ def test_retention_plan_is_dry_run(spark, tmp_path):
     assert len(cat.list_partitions("pages", "day_bucket")) == (
         n_raw_before - len(plan["pages"])
     )
+
+
+def test_manifest_read_matches_directory_scan(spark, cat):
+    """Catalog.read plans from the snapshot's file list and recorded
+    schema; on every table of a pipeline-built warehouse and on a
+    parsed traces table it returns the directory scan's schema and
+    rows."""
+    pages = synth.pages(spark, n_urls=4, n_slots=48 * 9, gap_pct=5)
+    ingest_pages(cat, pages, n_buckets=2)
+    run_rollup_pipeline(spark, cat, histogram_bin_width=0.5)
+    csv_dir = os.path.join(os.path.dirname(__file__), "fixtures", "aemo_csv")
+    mapping = {
+        "REZ_N1_Solar": {"entity": "N1", "entity_type": "zone",
+                         "resource_type": "solar", "parent": "NSW"},
+        "SNOWSTH1": {"entity": "Snowtown S2", "entity_type": "project",
+                     "resource_type": "wind", "parent": "S5"},
+        "SNOWNTH1": {"entity": "Snowtown S2", "entity_type": "project",
+                     "resource_type": "wind", "parent": "S5"},
+    }
+    parse_traces(spark, csv_dir, cat, "traces", mapping)
+
+    tables = sorted(t for t in os.listdir(cat.warehouse) if cat.exists(t))
+    assert tables == ["agg_1d", "agg_1mo", "agg_30m", "blocks_30m",
+                      "hist_1d", "hist_30m", "pages", "traces"]
+    for t in tables:
+        path = cat.table_path(t)
+        got = cat.read(t)
+        want = spark.read.option("basePath", path).parquet(path)
+        assert got.schema == want.schema, t
+        assert got.exceptAll(want).isEmpty(), t
+        assert want.exceptAll(got).isEmpty(), t

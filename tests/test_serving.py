@@ -4,6 +4,7 @@ partition pruning."""
 from __future__ import annotations
 
 import datetime
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -86,6 +87,16 @@ def test_serving_prunes_partitions(spark, store):
     df = TierStore(cat).series(start=start, end=end, resolution="2h")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "day_bucket" in plan
+    _assert_files_in_window(df, start, end)
+
+
+def _assert_files_in_window(df, start, end):
+    """Every file the plan scans lies in a day partition of the window."""
+    days = {start.date().isoformat(), end.date().isoformat()}
+    files = df.inputFiles()
+    assert files
+    for f in files:
+        assert re.search(r"/day_bucket=([^/]+)/", f).group(1) in days, f
 
 
 def test_serving_rejects_unservable_resolution(spark, store):
@@ -230,6 +241,39 @@ def test_percentile_serving_prunes_partitions(spark, store):
                                    resolution="2h")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "day_bucket" in plan
+    _assert_files_in_window(df, start, end)
+
+
+def test_window_reads_plan_without_spark_jobs(spark, tmp_path, spark_jobs):
+    """Planning a 2-day window over a tier of more than 32 day
+    partitions launches no Spark job: the catalog read takes the
+    window's files from the snapshot with the recorded schema, so
+    nothing lists directories or infers a schema. A full read of the
+    same tier still lists its files with a job."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    pages = synth.pages(spark, n_urls=2, n_slots=48 * 40, gap_pct=0).select(
+        "url", "warc_ts", "value"
+    )
+    ingest_pages(cat, pages, n_buckets=1)
+    run_rollup_pipeline(spark, cat, encode_blocks=False,
+                        histogram_bin_width=0.5)
+    assert len(cat.list_partitions("agg_30m", "day_bucket")) > 32
+    assert len(cat.list_partitions("hist_30m", "day_bucket")) > 32
+    url = pages.first()["url"]
+
+    start = datetime.datetime(2024, 1, 20)
+    end = start + datetime.timedelta(days=2)
+    store = TierStore(cat)
+    with spark_jobs() as jobs:
+        series = store.series(url, start=start, end=end, resolution="2h")
+        pcts = store.percentiles([0.5, 0.9], start=start, end=end,
+                                 resolution="2h")
+    assert jobs() == 0
+    assert series.count() == 24 and pcts.count() == 2 * 24 * 2
+
+    with spark_jobs() as jobs:
+        cat.read("agg_30m")
+    assert jobs() >= 1
 
 
 def test_percentile_daily_routes_to_hist_1d(spark, store):
