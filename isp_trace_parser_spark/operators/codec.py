@@ -28,15 +28,17 @@ Block layout (little-endian)::
      for repeated values, as a separate vectorizable stream)>
     <value bits: (xor >> v_trail) @ v_width for each NONZERO xor>
 
-Spark integration: ``encode_blocks`` groups points into
-(series, block_start) via ``applyInPandas`` (Arrow batches, numpy
-inside); ``decode_blocks`` is ``mapInPandas`` back to points. Blocks are
-keyed by the same time-bucket + url partitioning as the tier tables, so
-encoding adds no extra shuffle beyond the rollup's.
+Spark integration: ``encode_blocks`` shuffles points on
+(series, block_start), sorts within partitions and encodes each Arrow
+batch in one ``mapInArrow`` pass (numpy inside); ``decode_blocks`` is
+``mapInArrow`` back to points. Encoding pays its own exchange (none with
+``repartition=False`` over series-partitioned input), and the pipeline's
+partitioned ``blocks_30m`` write pays another.
 """
 
 from __future__ import annotations
 
+import re
 import struct
 
 import numpy as np
@@ -54,6 +56,35 @@ from pyspark.sql.types import (
 )
 
 _HEADER = struct.Struct("<IqqBBBQ")
+
+# the duration units Spark's F.window (and therefore encode_blocks)
+# accepts; anything else must fail loud rather than mis-prune
+_SPAN_RE = re.compile(
+    r"^\s*(\d+)\s*(week|day|hour|minute|second)s?\s*$", re.IGNORECASE
+)
+_SPAN_SECONDS = {
+    "week": 604800,
+    "day": 86400,
+    "hour": 3600,
+    "minute": 60,
+    "second": 1,
+}
+
+
+def block_span_seconds(block_span: str) -> int:
+    """Parse an ``encode_blocks`` span ('7 days', '36 hours', '2 weeks')
+    into seconds, with the same unit vocabulary Spark's ``F.window``
+    duration strings use. Raises for anything it cannot parse — a wrong
+    guess here silently drops boundary blocks from cold-tier reads."""
+    m = _SPAN_RE.match(block_span)
+    if not m:
+        raise ValueError(
+            f"unsupported block_span {block_span!r} — expected "
+            f"'<N> week|day|hour|minute|second(s)' (the F.window "
+            f"duration vocabulary encode_blocks accepts)"
+        )
+    return int(m.group(1)) * _SPAN_SECONDS[m.group(2).lower()]
+
 
 
 # ---------------------------------------------------------------- bit kit
@@ -283,7 +314,7 @@ def encode_blocks(
     history spreads across tasks instead of serializing one executor
     (the hot-domain skew the synth generator models). Sort within
     partitions by (series, block_start, ts), then a single
-    ``mapInPandas`` pass that encodes every complete block in each
+    ``mapInArrow`` pass that encodes every complete block in each
     Arrow batch, carrying the trailing partial block into the next
     batch. This amortizes the Python/Arrow boundary over thousands of
     blocks per call — ``applyInPandas`` per block pays that overhead

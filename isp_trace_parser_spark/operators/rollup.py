@@ -14,13 +14,19 @@ this to a 3-tier rollup engine. Design:
   end-of-interval convention (trace_formatter.py:12-15): the 30-min
   bucket ending at 00:30 covers (00:00, 00:30].
 - Aggregation is a plain ``groupBy`` -> Catalyst two-phase hash agg
-  (map-side partial combine), the optimal distributed plan. The shuffle
-  keys are (series, bucket), which is exactly the storage partitioning
-  (time-bucket + url-hash bucket), so the downstream partitioned write
-  needs no second shuffle.
+  (map-side partial combine). On its own it shuffles on its grouping
+  keys, and a partitioned catalog write then shuffles again on the
+  storage key ``(day_bucket, salt)``. The raw-tier builders therefore
+  take ``by``: leading group keys carried into the output. A caller that
+  repartitions once on the storage key and passes it as ``by`` gets one
+  exchange that serves both the aggregation and the write (the
+  pipeline's raw stages do). The cascades keep the map-side combine: it
+  shrinks a 30m tier ~48x before their shuffle.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -68,10 +74,13 @@ def rollup_raw(
     value_col: str = "value",
     tier_seconds: int = 1800,
     sum_cast: str | None = None,
+    by: Sequence[str] = (),
 ) -> DataFrame:
-    """Finest tier: raw points -> per-(series, bucket) aggregates."""
+    """Finest tier: raw points -> per-(series, bucket) aggregates.
+    ``by``: extra leading group keys, kept as output columns."""
     return (
         df.groupBy(
+            *by,
             F.col(series_col).alias("series"),
             bucket_end(F.col(ts_col), tier_seconds).alias("bucket_ts"),
         )
@@ -186,6 +195,7 @@ def histogram_tier(
     value_col: str = "value",
     bucket_seconds: int = 1800,
     bin_width: float = 0.5,
+    by: Sequence[str] = (),
 ) -> DataFrame:
     """Mergeable histogram tier: per (series, end-labeled bucket, bin)
     the observation count, with ``bin = floor(value / bin_width)``.
@@ -194,10 +204,12 @@ def histogram_tier(
     exact, order-independent, MERGEABLE sketch — any coarser resolution
     is a plain sum of finer-tier counts (:func:`histogram_cascade`),
     so percentile/shape dashboards read tiers, never raw data. Pure
-    two-phase groupBy (map-side combined); no UDF, no window.
+    two-phase groupBy (map-side combined); no UDF, no window. ``by`` as
+    in :func:`rollup_raw`.
     """
     return (
         df.groupBy(
+            *by,
             F.col(series_col).alias("series"),
             bucket_end(F.col(ts_col), bucket_seconds).alias("bucket_ts"),
             F.floor(F.col(value_col) / F.lit(bin_width)).cast("long").alias(
@@ -268,6 +280,7 @@ def distinct_tier(
     key_col: str = "user_id",
     bucket_seconds: int = 1800,
     lgk: int = 14,
+    by: Sequence[str] = (),
 ) -> DataFrame:
     """Mergeable distinct-count tier: per (series, end-labeled bucket)
     a Datasketches HLL sketch (binary) of ``key_col`` — the
@@ -283,9 +296,11 @@ def distinct_tier(
     (small per-bucket cardinalities; the ``distinct_rollup_1d``
     contract row pins estimate == exact at test scale, lgk=14 holds
     hundreds of keys exactly) and ~±1.6%/sqrt(2^lgk) beyond — the
-    standard trade every 100 TB cardinality pipeline makes.
+    standard trade every 100 TB cardinality pipeline makes. ``by`` as
+    in :func:`rollup_raw`.
     """
     return df.groupBy(
+        *by,
         F.col(series_col).alias("series"),
         bucket_end(F.col(ts_col), bucket_seconds).alias("bucket_ts"),
     ).agg(F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("hll"))

@@ -1,15 +1,37 @@
 """End-to-end rollup + retention pipeline with snapshot checkpointing
 and per-partition lineage — snapshot-diff incremental processing.
 
-Stage DAG (one raw scan total, reference §3.1 collapsed into declarative
-Spark per SURVEY §7.4)::
+Stage DAG (the raw table is scanned once per raw tier; every coarser
+tier reads the finer tier's stored partials)::
 
     pages (raw, day_bucket x url_bucket partitions)
-      └─ agg_30m   groupBy(url, 30m bucket)            [diff vs pages]
-           └─ agg_1d    re-agg partials                [diff vs agg_30m]
-                └─ agg_1mo  re-agg partials            [diff vs agg_1d]
-           └─ blocks_30m  Gorilla blocks               [diff vs agg_30m]
-      └─ retention: expire partitions past each tier's horizon
+      ├─ agg_30m   groupBy(url, 30m bucket)             [diff vs pages]
+      │    ├─ agg_1d    re-agg partials                 [diff vs agg_30m]
+      │    │    └─ agg_1mo  re-agg partials             [diff vs agg_1d]
+      │    └─ blocks_30m  Gorilla blocks                [diff vs agg_30m]
+      ├─ hist_30m  histogram counts (histogram_bin_width) [diff vs pages]
+      │    └─ hist_1d   count sums                      [diff vs hist_30m]
+      └─ dist_30m  HLL sketches (distinct_key)          [diff vs pages]
+           └─ dist_1d   sketch union                    [diff vs dist_30m]
+    then retention: expire partitions past each tier's horizon
+
+Concurrency: the stages form a table (``Stage``) in declaration order.
+Each stage is submitted to a thread pool as soon as its input stage has
+committed, so independent tiers build at the same time and Spark's
+default FIFO scheduler fills the cores a single small stage leaves idle.
+The pool is as wide as the DAG (its leaf count: no more stages can ever
+run at once). Stage threads inherit the caller's job group, description
+and tags. If a stage raises, the stages that read its output are not
+started, running stages finish and commit, and the first error is
+re-raised once every thread has stopped; each commit is per table, so a
+re-run resumes at the failed stage. Retention runs after every stage.
+
+Exchanges: a raw tier (agg_30m, hist_30m, dist_30m) attaches its
+storage key ``(day_bucket, salt)`` to the raw rows, shuffles once on it
+and groups with it as leading keys, so one exchange serves both the
+aggregation and the partitioned write (``partitioning.write_salt`` is
+the one salt formula both use). The cascades keep their map-side
+combine before their shuffle, and the write shuffles again.
 
 Incremental model (the Iceberg-snapshot analog): every catalog commit
 records a per-partition file fingerprint (catalog.py). Each stage stores
@@ -24,6 +46,8 @@ partition overwrite); unchanged and expired partitions are untouched, so
 - late rewrites of OLD raw days are detected (fingerprint change), not
   just appends — a plain high-watermark would miss them.
 
+An unpartitioned output (agg_1mo) is rebuilt from its full input.
+
 No driver-side per-partition loops: the diff is O(partitions) metadata;
 within a stage Spark's scheduler owns parallelism.
 """
@@ -32,9 +56,11 @@ from __future__ import annotations
 
 import datetime
 import hashlib
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,8 +68,11 @@ from isp_trace_parser_spark.operators import codec, rollup
 from isp_trace_parser_spark.operators.retention import RetentionPolicy, apply_retention
 from isp_trace_parser_spark.plans.partitioning import (
     DEFAULT_URL_BUCKETS,
+    day_bucket,
     month_bucket,
     with_partition_keys,
+    write_salt,
+    write_salt_buckets,
 )
 from isp_trace_parser_spark.sources.catalog import Catalog
 
@@ -76,8 +105,9 @@ def partition_state(cat: Catalog, table: str, col: str) -> dict[str, str]:
 
 
 def _recorded_state(cat: Catalog, table: str) -> dict[str, str]:
-    """Input state recorded by the table's last write stage."""
-    for snap in reversed(cat.snapshots(table)):
+    """Input state recorded by the table's last write stage, read back
+    from the end of the snapshot log up to that record only."""
+    for snap in cat.snapshots_newest_first(table):
         st = snap.get("lineage", {}).get("input_state")
         if st is not None:
             return st
@@ -97,6 +127,155 @@ def _changed_partitions(
     if not recorded:
         return None
     return [v for v, sig in in_state.items() if recorded.get(v) != sig]
+
+
+_SALT = "_salt"
+_DAY_S = 86400
+_EPOCH = datetime.date(1970, 1, 1)
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One node of the pipeline DAG: table ``name`` is built from table
+    ``input`` (top-level partition column ``input_col``) by ``build`` and
+    written partitioned by ``partition_by`` (None: unpartitioned),
+    sorted by ``sort_within``.
+
+    ``expand`` maps the changed input partitions of an incremental run
+    to (a predicate on the input partitions to read, the output
+    partitions to rewrite); without it a changed input partition
+    rewrites the output partition of the same value. ``prepartitioned``:
+    ``build`` already distributes its output on the write's key."""
+
+    name: str
+    input: str
+    input_col: str
+    build: Callable[[DataFrame], DataFrame]
+    partition_by: list[str] | None
+    sort_within: list[str]
+    expand: Callable[[list[str]], tuple[Callable[[str], bool], list[str]]] | None = None
+    prepartitioned: bool = False
+
+
+def _months(changed: list[str]) -> tuple[Callable[[str], bool], list[str]]:
+    """Day-level changes rebuild their whole months from the retained
+    finer tier."""
+    months = sorted({d[:7] for d in changed})
+    return (lambda v: v[:7] in months), months
+
+
+def _day(seconds: int) -> str:
+    """The day an epoch second falls on, as a ``day_bucket`` value."""
+    return str(_EPOCH + datetime.timedelta(days=seconds // _DAY_S))
+
+
+def _day_start(day: str) -> int:
+    """The epoch second a ``day_bucket`` value starts at."""
+    return (datetime.date.fromisoformat(day) - _EPOCH).days * _DAY_S
+
+
+def _block_partitions(
+    changed: list[str], span: int
+) -> tuple[Callable[[str], bool], list[str]]:
+    """Gorilla blocks are epoch-aligned ``span``-second windows (Spark
+    tumbling windows), stored in the ``day_bucket`` of their start day.
+    A changed day re-encodes every block that overlaps it, and a
+    rewritten partition must hold every block that starts on its day:
+    read every day those blocks cover, rewrite their start days."""
+    starts: set[str] = set()
+    for v in changed:
+        lo = _day_start(v)
+        hi = lo + _DAY_S - 1
+        # the first and the last block overlapping the day; any block
+        # between them starts on one of their two days
+        starts |= {_day(lo - lo % span), _day(hi - hi % span)}
+    read: set[str] = set()
+    for v in starts:
+        lo = _day_start(v)
+        hi = lo + _DAY_S - 1
+        first, last = lo + (-lo) % span, hi - hi % span
+        read.update(
+            _day(d * _DAY_S)
+            for d in range(first // _DAY_S, (last + span - 1) // _DAY_S + 1)
+        )
+    return read.__contains__, sorted(starts)
+
+
+def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
+    """Bring one stage up to date with its input: None when it already
+    is, else the files and bytes of the table it committed."""
+    in_state = partition_state(cat, st.input, st.input_col)
+    changed = _changed_partitions(cat, st.name, in_state)
+    if changed == []:
+        return None
+    keep = touched = None  # full recompute -> full read, full snapshot stat
+    if changed is not None and st.partition_by:
+        keep, out_values = (
+            st.expand(changed) if st.expand else (set(changed).__contains__, changed)
+        )
+        # the snapshot-diff already names the recomputed output
+        # partitions: pass them so the commit stats only those subtrees
+        # instead of walking the whole table (O(touched), not O(table age))
+        touched = [f"{st.partition_by[0]}={v}" for v in out_values]
+    out = st.build(cat.read(st.input, partitions=keep))
+    if st.expand and touched is not None:
+        # an expanded read can reach rows of output partitions this run
+        # does not rewrite (a block that starts before the first day read)
+        out = out.where(F.col(st.partition_by[0]).cast("string").isin(out_values))
+    snap = cat.write(
+        out,
+        st.name,
+        partition_by=st.partition_by,
+        sort_within=st.sort_within,
+        mode="dynamic" if st.partition_by else "overwrite",
+        repartition=not st.prepartitioned,
+        lineage={
+            "stage": st.name,
+            "input_table": st.input,
+            "input_state": in_state,
+            "recomputed_partitions": changed,
+        },
+        touched_partitions=touched,
+    )
+    return {"files": snap["files"], "bytes": snap["bytes"]}
+
+
+def _run_dag(
+    spark: SparkSession, stages: list[Stage], run: Callable[[Stage], Any]
+) -> dict[str, Any]:
+    """Run each stage once its input stage has finished; stages whose
+    input no stage produces start at once. Returns ``run``'s result per
+    stage name. On failure the failed stage's dependents never start,
+    every started stage finishes, and the first error is raised."""
+    produced = {st.name for st in stages}
+    children = {st.name: [c for c in stages if c.input == st.name] for st in stages}
+    # each stage has one input, so the DAG is a forest: its widest set of
+    # mutually independent stages is its leaves
+    width = sum(not kids for kids in children.values())
+    results: dict[str, Any] = {}
+    errors: list[BaseException] = []
+    with ThreadPoolExecutor(max_workers=width, thread_name_prefix="stage") as pool:
+
+        def submit(st: Stage):
+            # wrapped in the calling thread, when the stage is due: the
+            # stage's jobs join the caller's job group, description and
+            # tags, and each stage gets its own copy of those properties
+            return pool.submit(inheritable_thread_target(spark)(run), st)
+
+        running = {submit(st): st for st in stages if st.input not in produced}
+        while running:
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                st = running.pop(fut)
+                if fut.exception() is not None:
+                    errors.append(fut.exception())
+                    continue
+                results[st.name] = fut.result()
+                for child in children[st.name]:
+                    running[submit(child)] = child
+    if errors:
+        raise errors[0]
+    return results
 
 
 def ingest_pages(
@@ -160,202 +339,106 @@ def run_rollup_pipeline(
     full re-read of ``blocks_30m`` per build); take it on demand with
     ``codec.compression_report(cat.read("blocks_30m"))``.
     """
-    res = PipelineResult()
+    n_salts = write_salt_buckets(spark)
 
-    def _stage(
-        name: str,
-        in_table: str,
-        in_col: str,
-        build,  # (input_df) -> output df with its partition col attached
-        partition_by: list[str] | None,
-        sort_within: list[str],
-        to_months: bool = False,
-        expand_days=None,  # changed day-list -> enclosing recompute span
-    ) -> None:
-        in_state = partition_state(cat, in_table, in_col)
-        changed = _changed_partitions(cat, name, in_state)
-        if changed == []:
-            res.stages_skipped.append(name)
-            return
-        touched = None  # full recompute -> full snapshot stat
-        if changed is None:
-            src = cat.read(in_table)
-        else:
-            # the read keeps only the input partitions this run needs
-            # (``in_col`` is the input's top-level partition column)
-            if to_months:
-                # day-level changes -> recompute the affected months in
-                # full from the retained finer tier
-                out_values = sorted({d[:7] for d in changed})
-                src = cat.read(in_table, partitions=lambda v: v[:7] in out_values)
-            else:
-                out_values = expand_days(changed) if expand_days else changed
-                src = cat.read(in_table, partitions=set(out_values).__contains__)
-            if partition_by:
-                # the snapshot-diff already names the recomputed output
-                # partitions: pass them so the commit stats only those
-                # subtrees instead of walking the whole table (O(touched),
-                # not O(table age))
-                touched = [f"{partition_by[0]}={v}" for v in out_values]
-        out = build(src)
-        lineage = {
-            "stage": name,
-            "input_table": in_table,
-            "input_state": in_state,
-            "recomputed_partitions": changed,
-        }
-        snap = cat.write(
-            out,
-            name,
-            partition_by=partition_by,
-            sort_within=sort_within,
-            mode="dynamic" if partition_by else "overwrite",
-            lineage=lineage,
-            touched_partitions=touched,
-        )
-        res.metrics[name] = {"files": snap["files"], "bytes": snap["bytes"]}
-        res.stages_run.append(name)
+    def raw_tier(cols: list[str], build) -> Callable[[DataFrame], DataFrame]:
+        """A 30m tier over raw rows in one exchange: attach the storage
+        key (day_bucket of the 30m bucket end, write salt of the series),
+        shuffle once on it, group with it as leading keys (the shuffle
+        already clusters every group), then drop the salt. The write
+        then needs no shuffle of its own."""
 
-    # -- tier 30m: the one raw scan ------------------------------------
-    # The raw scan is hash-partitioned on the series key BEFORE the
-    # groupBy: per-(url, 30m) groups are ~1 row at crawl density, so the
-    # two-phase agg's map-side hash table combined nothing and the
-    # cluster paid a second full hash-agg pass after the exchange.
-    # Pre-partitioning satisfies the groupBy's clustering (one fused
-    # agg) at the same exchange count — measured 2.17s -> 1.67s on the
-    # stage incl. its partitioned write (OPTIMIZATION_r06.md). Exact
-    # grouping + order-independent partials => identical tier contents.
-    _stage(
-        "agg_30m",
-        raw_table,
-        "day_bucket",
-        lambda src: rollup.rollup_raw(
-            src.select("url", "warc_ts", "value").repartition(F.col("url")),
-            "url", "warc_ts", "value", sum_cast=sum_cast
-        ).withColumn(
-            "day_bucket", F.to_date(F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND"))
-        ),
-        partition_by=["day_bucket"],
-        sort_within=["series", "bucket_ts"],
-    )
+        def _build(src: DataFrame) -> DataFrame:
+            keyed = (
+                src.select(*cols)
+                .withColumn(
+                    "day_bucket", day_bucket(rollup.bucket_end(F.col("warc_ts"), 1800))
+                )
+                .withColumn(_SALT, write_salt(["url"], n_salts))
+                .repartition("day_bucket", _SALT)
+            )
+            return build(keyed, ["day_bucket", _SALT]).drop(_SALT)
 
-    # -- tier 1d from 30m partials --------------------------------------
-    _stage(
-        "agg_1d",
-        "agg_30m",
-        "day_bucket",
-        lambda src: rollup.rollup_cascade(
+        return _build
+
+    def cascade(build) -> Callable[[DataFrame], DataFrame]:
+        """A 1d tier from a day-partitioned 30m tier, month-partitioned."""
+        return lambda src: build(
             src.drop("day_bucket"), rollup.TIER_SECONDS["1d"]
-        ).withColumn("month_bucket", month_bucket("bucket_ts")),
-        partition_by=["month_bucket"],
-        sort_within=["series", "bucket_ts"],
-        to_months=True,
-    )
+        ).withColumn("month_bucket", month_bucket("bucket_ts"))
 
-    # -- histogram tiers (distribution analog of avg/min/max) -----------
+    tier_order = ["series", "bucket_ts"]
+    stages = [
+        Stage(
+            "agg_30m", raw_table, "day_bucket",
+            raw_tier(["url", "warc_ts", "value"], lambda df, by: rollup.rollup_raw(
+                df, "url", "warc_ts", "value", sum_cast=sum_cast, by=by
+            )),
+            ["day_bucket"], tier_order, prepartitioned=True,
+        ),
+        Stage(
+            "agg_1d", "agg_30m", "day_bucket", cascade(rollup.rollup_cascade),
+            ["month_bucket"], tier_order, expand=_months,
+        ),
+    ]
     if histogram_bin_width is not None:
         bw = float(histogram_bin_width)
-        _stage(
-            "hist_30m",
-            raw_table,
-            "day_bucket",
-            lambda src: rollup.histogram_tier(
-                src, "url", "warc_ts", "value", 1800, bw
-            ).withColumn(
-                "day_bucket",
-                F.to_date(F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND")),
+        stages += [
+            Stage(
+                "hist_30m", raw_table, "day_bucket",
+                raw_tier(["url", "warc_ts", "value"], lambda df, by: rollup.histogram_tier(
+                    df, "url", "warc_ts", "value", 1800, bw, by=by
+                )),
+                ["day_bucket"], [*tier_order, "bin"], prepartitioned=True,
             ),
-            partition_by=["day_bucket"],
-            sort_within=["series", "bucket_ts", "bin"],
-        )
-        _stage(
-            "hist_1d",
-            "hist_30m",
-            "day_bucket",
-            lambda src: rollup.histogram_cascade(
-                src.drop("day_bucket"), rollup.TIER_SECONDS["1d"]
-            ).withColumn("month_bucket", month_bucket("bucket_ts")),
-            partition_by=["month_bucket"],
-            sort_within=["series", "bucket_ts", "bin"],
-            to_months=True,
-        )
-
-    # -- distinct-count tiers (mergeable HLL cardinality) ----------------
+            Stage(
+                "hist_1d", "hist_30m", "day_bucket", cascade(rollup.histogram_cascade),
+                ["month_bucket"], [*tier_order, "bin"], expand=_months,
+            ),
+        ]
     if distinct_key is not None:
-        _stage(
-            "dist_30m",
-            raw_table,
-            "day_bucket",
-            lambda src: rollup.distinct_tier(
-                src, "url", "warc_ts", distinct_key, 1800, 14
-            ).withColumn(
-                "day_bucket",
-                F.to_date(F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND")),
+        stages += [
+            Stage(
+                "dist_30m", raw_table, "day_bucket",
+                raw_tier(["url", "warc_ts", distinct_key], lambda df, by: rollup.distinct_tier(
+                    df, "url", "warc_ts", distinct_key, 1800, 14, by=by
+                )),
+                ["day_bucket"], tier_order, prepartitioned=True,
             ),
-            partition_by=["day_bucket"],
-            sort_within=["series", "bucket_ts"],
+            Stage(
+                "dist_1d", "dist_30m", "day_bucket", cascade(rollup.distinct_cascade),
+                ["month_bucket"], tier_order, expand=_months,
+            ),
+        ]
+    stages.append(
+        Stage(
+            "agg_1mo", "agg_1d", "month_bucket",
+            lambda src: rollup.monthly_from_daily(src.drop("month_bucket")),
+            None, tier_order,
         )
-        _stage(
-            "dist_1d",
-            "dist_30m",
-            "day_bucket",
-            lambda src: rollup.distinct_cascade(
-                src.drop("day_bucket"), rollup.TIER_SECONDS["1d"]
-            ).withColumn("month_bucket", month_bucket("bucket_ts")),
-            partition_by=["month_bucket"],
-            sort_within=["series", "bucket_ts"],
-            to_months=True,
-        )
-
-    # -- tier 1mo from 1d partials (tiny: full rewrite when 1d changed) --
-    in_state_1mo = partition_state(cat, "agg_1d", "month_bucket")
-    changed_1mo = _changed_partitions(cat, "agg_1mo", in_state_1mo)
-    if changed_1mo == []:
-        res.stages_skipped.append("agg_1mo")
-    else:
-        t1mo = rollup.monthly_from_daily(cat.read("agg_1d").drop("month_bucket"))
-        snap = cat.write(
-            t1mo,
-            "agg_1mo",
-            sort_within=["series", "bucket_ts"],
-            mode="overwrite",
-            lineage={"stage": "agg_1mo", "input_table": "agg_1d",
-                     "input_state": in_state_1mo},
-        )
-        res.metrics["agg_1mo"] = {"files": snap["files"], "bytes": snap["bytes"]}
-        res.stages_run.append("agg_1mo")
-
-    # -- Gorilla blocks over the 30m tier --------------------------------
+    )
     if encode_blocks:
-        block_days = max(1, int(block_size.split()[0]) if "day" in block_size else 1)
-
-        def _expand_to_blocks(changed: list[str]) -> list[str]:
-            """A changed day must re-encode its WHOLE block: expand each
-            day to every day of its epoch-aligned block span (Spark
-            tumbling windows align to 1970-01-01)."""
-            epoch = datetime.date(1970, 1, 1)
-            out: set[str] = set()
-            for dstr in changed:
-                d = datetime.date.fromisoformat(dstr)
-                start = d - datetime.timedelta(days=(d - epoch).days % block_days)
-                out.update(
-                    str(start + datetime.timedelta(days=i)) for i in range(block_days)
-                )
-            return sorted(out)
-
-        _stage(
-            "blocks_30m",
-            "agg_30m",
-            "day_bucket",
-            lambda src: codec.encode_blocks(
-                src, "series", "bucket_ts", "avg_value", block=block_size
-            ).withColumn("day_bucket", F.to_date("block_start")),
-            partition_by=["day_bucket"],
-            sort_within=["series"],
-            expand_days=_expand_to_blocks,
+        span = codec.block_span_seconds(block_size)
+        stages.append(
+            Stage(
+                "blocks_30m", "agg_30m", "day_bucket",
+                lambda src: codec.encode_blocks(
+                    src, "series", "bucket_ts", "avg_value", block=block_size
+                ).withColumn("day_bucket", F.to_date("block_start")),
+                ["day_bucket"], ["series"],
+                expand=lambda changed: _block_partitions(changed, span),
+            )
         )
 
-    # -- retention ------------------------------------------------------
+    done = _run_dag(spark, stages, lambda st: _run_stage(cat, st))
+    res = PipelineResult()
+    for st in stages:
+        if done[st.name] is None:
+            res.stages_skipped.append(st.name)
+        else:
+            res.stages_run.append(st.name)
+            res.metrics[st.name] = done[st.name]
+
     if policy is not None and now is not None:
         res.metrics["retention"] = apply_retention(cat, policy, now, raw_table)
         res.stages_run.append("retention")

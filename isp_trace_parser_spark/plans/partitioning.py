@@ -20,7 +20,7 @@ Why these keys at 10^12 rows:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_URL_BUCKETS = 64
@@ -41,6 +41,20 @@ def day_bucket(ts: Column | str) -> Column:
 def month_bucket(ts: Column | str) -> Column:
     c = F.col(ts) if isinstance(ts, str) else ts
     return F.date_format(c - F.expr("INTERVAL 1 SECOND"), "yyyy-MM")
+
+
+def write_salt_buckets(spark: SparkSession) -> int:
+    """Salt count of a partitioned catalog write: scales with the
+    cluster (defaultParallelism / 8, at least 2)."""
+    return max(2, spark.sparkContext.defaultParallelism // 8)
+
+
+def write_salt(cols: list[str], n_salts: int) -> Column:
+    """The write distribution's salt: ``pmod(xxhash64(cols), n_salts)``.
+    ``Catalog.write`` shuffles on ``(*partition_by, write_salt(...))``;
+    a stage that shuffles on the same expression before its aggregation
+    hands the write an input it need not shuffle again."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salts))
 
 
 def with_partition_keys(

@@ -30,38 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from isp_trace_parser_spark.operators import rollup
+from isp_trace_parser_spark.operators.codec import block_span_seconds
 from isp_trace_parser_spark.sources.catalog import Catalog
 
 _RES_RE = re.compile(r"^(\d+)\s*(m|min|h|d)$")
-
-# the duration units Spark's F.window (and therefore codec.encode_blocks)
-# accepts; anything else must fail loud rather than mis-prune
-_SPAN_RE = re.compile(
-    r"^\s*(\d+)\s*(week|day|hour|minute|second)s?\s*$", re.IGNORECASE
-)
-_SPAN_SECONDS = {
-    "week": 604800,
-    "day": 86400,
-    "hour": 3600,
-    "minute": 60,
-    "second": 1,
-}
-
-
-def block_span_seconds(block_span: str) -> int:
-    """Parse an ``encode_blocks`` span ('7 days', '36 hours', '2 weeks')
-    into seconds, with the same unit vocabulary Spark's ``F.window``
-    duration strings use. Raises for anything it cannot parse — a wrong
-    guess here silently drops boundary blocks from cold-tier reads."""
-    m = _SPAN_RE.match(block_span)
-    if not m:
-        raise ValueError(
-            f"unsupported block_span {block_span!r} — expected "
-            f"'<N> week|day|hour|minute|second(s)' (the F.window "
-            f"duration vocabulary encode_blocks accepts)"
-        )
-    return int(m.group(1)) * _SPAN_SECONDS[m.group(2).lower()]
-
 
 def _in_range(lo: str | None, hi: str | None):
     """Predicate on a partition value: inside ``[lo, hi]``, where a

@@ -51,12 +51,14 @@ import os
 import shutil
 import time
 import uuid
-from typing import Any, Callable
+from typing import Any, BinaryIO, Callable, Iterator
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from isp_trace_parser_spark.plans.partitioning import write_salt, write_salt_buckets
 
 # characters Spark escapes in hive partition directory names
 # (ExternalCatalogUtils.escapePathName charset)
@@ -79,6 +81,21 @@ def hive_partition_rel(cols: list[str], values: list[Any]) -> str:
     return "/".join(
         f"{c}={_escape_hive_value(v)}" for c, v in zip(cols, values)
     )
+
+
+def _lines_from_end(fh: BinaryIO) -> Iterator[bytes]:
+    """The newline-separated pieces of a file, last first, read back in
+    64 KiB steps. The first piece is the text after the last newline."""
+    pos = fh.seek(0, os.SEEK_END)
+    head = b""  # the unread start of the earliest piece seen so far
+    while pos:
+        step = min(pos, 1 << 16)
+        pos -= step
+        fh.seek(pos)
+        pieces = (fh.read(step) + head).split(b"\n")
+        head = pieces[0]
+        yield from reversed(pieces[1:])
+    yield head
 
 
 class Catalog:
@@ -208,8 +225,10 @@ class Catalog:
         key) modulo ``dist_buckets``, keeping each series whole within
         one file while a hot partition fans out across up to
         ``dist_buckets`` tasks. ``dist_buckets='auto'`` scales with the
-        cluster (defaultParallelism/8, >=2); pass None to force the old
-        one-file-per-partition layout.
+        cluster (``partitioning.write_salt_buckets``); pass None to force
+        the old one-file-per-partition layout. ``repartition=False``
+        skips this shuffle for a frame the caller already distributed
+        on the same key (``partitioning.write_salt``).
 
         ``touched_partitions``: relative partition dirs this write
         replaces/appends (e.g. ``["day=2024-01-01"]``) — lets the
@@ -229,12 +248,11 @@ class Catalog:
                 ]
                 nb = dist_buckets
                 if nb == "auto":
-                    nb = max(2, self.spark.sparkContext.defaultParallelism // 8)
+                    nb = write_salt_buckets(self.spark)
                 if salt_src and nb and int(nb) > 1:
-                    salt = F.pmod(
-                        F.xxhash64(*[F.col(c) for c in salt_src]), F.lit(int(nb))
+                    writer_df = writer_df.repartition(
+                        *cols, write_salt(salt_src, int(nb))
                     )
-                    writer_df = writer_df.repartition(*cols, salt)
                 else:
                     writer_df = writer_df.repartition(*cols)
             if sort_within:
@@ -443,36 +461,29 @@ class Catalog:
         committed once its line ends in a newline: an unterminated final
         line is a torn append and is ignored; a corrupt line anywhere
         else raises."""
-        log = self._snapshot_log(name)
-        if not os.path.exists(log):
-            return []
-        with open(log) as fh:
-            lines = fh.read().split("\n")
-        return [json.loads(line) for line in lines[:-1] if line.strip()]
+        return list(self.snapshots_newest_first(name))[::-1]
 
     def last_snapshot(self, name: str) -> dict[str, Any] | None:
         """The last committed record, read back from the end of the log:
         O(1) in table history. A torn final line is ignored, as in
         :meth:`snapshots`."""
+        return next(self.snapshots_newest_first(name), None)
+
+    def snapshots_newest_first(self, name: str) -> Iterator[dict[str, Any]]:
+        """Committed snapshot records, newest first, read lazily back
+        from the end of the log: a caller that stops at the record it
+        needs parses nothing older. A torn final line is ignored, as in
+        :meth:`snapshots`."""
         try:
             fh = open(self._snapshot_log(name), "rb")
         except FileNotFoundError:
-            return None
+            return
         with fh:
-            pos = fh.seek(0, os.SEEK_END)
-            tail = b""
-            while pos:
-                step = min(pos, 1 << 16)
-                pos -= step
-                fh.seek(pos)
-                tail = fh.read(step) + tail
-                end = tail.rfind(b"\n")
-                if end >= 0 and (pos == 0 or tail.rfind(b"\n", 0, end) >= 0):
-                    break
-        end = tail.rfind(b"\n")
-        if end < 0:
-            return None
-        return json.loads(tail[tail.rfind(b"\n", 0, end) + 1 : end])
+            lines = _lines_from_end(fh)
+            next(lines)  # the text after the last newline: torn or empty
+            for line in lines:
+                if line.strip():
+                    yield json.loads(line)
 
     def vacuum(self, name: str) -> dict[str, Any]:
         """Remove orphan files (Iceberg ``remove_orphan_files`` analog):

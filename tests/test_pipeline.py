@@ -203,3 +203,137 @@ def test_manifest_read_matches_directory_scan(spark, cat):
         assert got.schema == want.schema, t
         assert got.exceptAll(want).isEmpty(), t
         assert want.exceptAll(got).isEmpty(), t
+
+
+def _tables_equal(a, b) -> bool:
+    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+@pytest.mark.parametrize("block_size", ["1 week", "2 days"])
+def test_landed_day_reencodes_whole_blocks(spark, cat, block_size):
+    """A day landed inside a block re-encodes every block overlapping it
+    and commits the partitions of their start days, so blocks_30m stays
+    readable and decodes to exactly the agg_30m points."""
+    import pyspark.sql.functions as F
+
+    pages = synth.pages(spark, n_urls=3, n_slots=48 * 12)
+    ingest_pages(cat, pages, n_buckets=2)
+    run_rollup_pipeline(spark, cat, block_size=block_size)
+
+    # 2024-01-13: mid-block for 7-day blocks (they start on 2024-01-11),
+    # the second day of a 2-day block (2024-01-12 .. 2024-01-13)
+    inc = synth.pages(spark, n_urls=3, n_slots=48).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 12 DAYS")
+    )
+    ingest_pages(cat, inc, n_buckets=2, mode="dynamic")
+    res = run_rollup_pipeline(spark, cat, block_size=block_size)
+    assert "blocks_30m" in res.stages_run
+
+    points = codec.decode_blocks(cat.read("blocks_30m").drop("day_bucket"))
+    want = cat.read("agg_30m").select(
+        "series", F.col("bucket_ts").alias("ts"), F.col("avg_value").alias("value")
+    )
+    assert want.count() == 3 * 48 * 13
+    assert _tables_equal(points, want)
+
+
+def test_recorded_state_stops_at_the_last_stage_record(spark, cat, monkeypatch):
+    """The input state a stage recorded is read back from the end of the
+    log: the same answer as a full parse, without parsing the log."""
+    from isp_trace_parser_spark.pipeline import _recorded_state
+
+    cat.write(spark.range(4), "t")
+    for i in range(12):
+        cat.commit_snapshot("t", "write", lineage={"input_state": {"d": str(i)}})
+        cat.commit_snapshot("t", "expire", lineage={})
+    full = next(
+        s["lineage"]["input_state"]
+        for s in reversed(cat.snapshots("t"))
+        if "input_state" in s["lineage"]
+    )
+    assert full == {"d": "11"}
+
+    def no_full_parse(*a, **kw):
+        raise AssertionError("snapshots() parses the whole log")
+
+    monkeypatch.setattr(Catalog, "snapshots", no_full_parse)
+    assert _recorded_state(cat, "t") == full
+    assert _recorded_state(cat, "missing") == {}
+
+
+def test_pipeline_jobs_join_the_callers_job_group(spark, cat, spark_jobs):
+    """Stages run on pool threads, yet every job the pipeline launches
+    carries the caller's job group."""
+    pages = synth.pages(spark, n_urls=4, n_slots=48 * 4)
+    ingest_pages(cat, pages, n_buckets=2)
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def job_ids() -> set[int]:
+        jobs = store.jobsList(None)  # a Scala Seq
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    with spark_jobs() as jobs:
+        run_rollup_pipeline(spark, cat, histogram_bin_width=0.5)
+    launched = job_ids() - before
+    assert launched
+    assert jobs() == len(launched)
+
+
+def test_failed_stage_keeps_independent_commits_and_resumes(spark, tmp_path, monkeypatch):
+    """A stage that raises stops only its dependents: the other stages
+    commit, the error reaches the caller, and a clean re-run builds only
+    the failed stage and converges to a fresh build."""
+    pages = synth.pages(spark, n_urls=4, n_slots=48 * 9, gap_pct=5)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    ingest_pages(cat, pages, n_buckets=2)
+
+    def broken(*a, **kw):
+        raise RuntimeError("encode failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(codec, "encode_blocks", broken)
+        with pytest.raises(RuntimeError, match="encode failed"):
+            run_rollup_pipeline(spark, cat, histogram_bin_width=0.5)
+    tables = ["agg_30m", "agg_1d", "agg_1mo", "hist_30m", "hist_1d"]
+    assert [t for t in tables if cat.exists(t)] == tables
+    assert not cat.exists("blocks_30m")
+
+    res = run_rollup_pipeline(spark, cat, histogram_bin_width=0.5)
+    assert res.stages_run == ["blocks_30m"]
+    assert res.stages_skipped == ["agg_30m", "agg_1d", "hist_30m", "hist_1d", "agg_1mo"]
+
+    fresh = Catalog(spark, str(tmp_path / "fresh"))
+    ingest_pages(fresh, pages, n_buckets=2)
+    run_rollup_pipeline(spark, fresh, histogram_bin_width=0.5)
+    for t in tables + ["blocks_30m"]:
+        assert _tables_equal(cat.read(t), fresh.read(t)), t
+
+
+def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
+    """agg_30m and hist_30m shuffle once: the exchange that clusters the
+    aggregation also distributes the partitioned write, and each day
+    still holds at most one file per write salt."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from isp_trace_parser_spark.plans.partitioning import write_salt_buckets
+
+    plans: dict[str, str] = {}
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        plans[os.path.basename(path)] = (
+            self._df._jdf.queryExecution().executedPlan().toString()
+        )
+        return orig(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    pages = synth.pages(spark, n_urls=16, n_slots=48 * 3)
+    ingest_pages(cat, pages, n_buckets=2)
+    run_rollup_pipeline(spark, cat, histogram_bin_width=0.5)
+
+    for t in ("agg_30m", "hist_30m"):
+        assert plans[t].count("Exchange") == 1, plans[t]
+        parts = cat.last_snapshot(t)["partitions"]
+        assert len(parts) == 3
+        assert all(m["files"] <= write_salt_buckets(spark) for m in parts.values())
