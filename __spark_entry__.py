@@ -1889,9 +1889,9 @@ def q_outlink_stats(spark, sf_dir):
 def q_compact_roundtrip(spark, sf_dir):
     """Small-file compaction roundtrip: land events across 4 appends
     (accreting small files per day partition), run the partition-scoped
-    atomic compact (Iceberg rewrite_data_files analog — victims chosen
-    from snapshot metrics, rewritten into hidden tmp dirs, two-rename
-    swap), then read back. Compaction must be a pure physical re-layout:
+    compact (Iceberg rewrite_data_files analog — victims chosen from
+    snapshot metrics, rewritten through a staging dir, one manifest
+    commit), then read back. Compaction must be a pure physical re-layout:
     the readback equals a plain SELECT of the source, bit-for-bit."""
     _prep(spark)
     import tempfile
@@ -1910,7 +1910,8 @@ def q_compact_roundtrip(spark, sf_dir):
             sort_within=["user_id", "ts"],
             mode="overwrite" if i == 0 else "append",
         )
-    cat.compact("ev", sort_within=["user_id", "ts"], target_rows_per_file=10_000)
+    # 10,000 rows x 64 B
+    cat.compact("ev", sort_within=["user_id", "ts"], target_file_bytes=640_000)
     back = cat.read("ev")
     return back.select(
         "user_id", "event_id", "ts", _q("value", 4).alias("value"), "day"

@@ -22,10 +22,10 @@ information the coarser tiers need — the cascade runs first, the expiry
 second, and both are recorded as snapshots so a crashed job resumes
 idempotently (see pipeline.py).
 
-Expiry itself is partition-granular directory drops via the catalog
-(Iceberg ``DELETE FROM … WHERE day_bucket < cutoff`` + expire_snapshots
-analog) — zero data rewrite, O(partitions) metadata work, which is the
-only acceptable cost at 100 TB.
+Expiry itself is a partition-granular catalog commit (Iceberg
+``DELETE FROM … WHERE day_bucket < cutoff`` + expire_snapshots analog)
+that leaves the last snapshot's partitions out, then deletes their
+files — zero data rewrite, O(partitions) metadata work.
 """
 
 from __future__ import annotations
@@ -118,9 +118,6 @@ def _retention_targets(
         ("dist_30m", "day_bucket", t30_cutoff),
         ("dist_1d", "month_bucket", t1d_cutoff),
     ):
-        if not cat.exists(table):
-            report[table] = []
-            continue
         report[table] = [
             v for v in cat.list_partitions(table, col) if v < cutoff
         ]

@@ -89,22 +89,18 @@ def parse_traces_df(
     mapping: dict[str, dict[str, Any]],
     filters: dict[str, Any] | None = None,
     fail_on_unknown: bool = True,
-    wide: DataFrame | None = None,
 ) -> DataFrame:
     """The parse pipeline as a DataFrame (no sink): CSV scan -> filename
     decode -> broadcast mapping join -> metadata pre-filter -> wide->long
     -> mean-merge. ``filters`` are metadata pre-filters (reference P5,
     helper_functions.py:131-142): {column: value | [values]} over
     entity/entity_type/resource_type/parent/reference_year, or a
-    reference-style Solar/Wind/DemandMetadataFilter model. ``wide``:
-    pre-built scan frame — parse_traces passes its own so the input
-    directory is listed exactly once."""
+    reference-style Solar/Wind/DemandMetadataFilter model."""
     if filters is not None and hasattr(filters, "model_dump"):
         # reference-style Solar/Wind/DemandMetadataFilter model
         # (solar_traces.py:24-55) -> parse dim columns
         filters = metadata_filter_to_parse_dims(filters)
-    if wide is None:
-        wide = read_wide_trace_csvs(spark, input_directory)
+    wide = read_wide_trace_csvs(spark, input_directory)
     decoded = decode_trace_filename(wide)
 
     dim = build_name_mapping_df(spark, mapping)
@@ -157,18 +153,8 @@ def parse_traces(
 ) -> dict[str, Any]:
     """End-to-end parse job: :func:`parse_traces_df` + catalog sink
     partitioned by reference_year, entity/datetime-sorted files."""
-    wide = read_wide_trace_csvs(spark, input_directory)
     out = parse_traces_df(
-        spark, input_directory, mapping, filters, fail_on_unknown, wide=wide
-    )
-    # the partition column (reference_year) is a pure function of the
-    # FILENAMES: derive the touched-partition list from the ONE listing
-    # (shared with the scan above) so the snapshot commit is
-    # O(partitions touched) with no extra job
-    from isp_trace_parser_spark.sources.catalog import hive_partition_rel
-
-    years = sorted(
-        {int(m.group(2)) for _base, m in _listing_matches(wide) if m}
+        spark, input_directory, mapping, filters, fail_on_unknown
     )
     return cat.write(
         out,
@@ -177,7 +163,4 @@ def parse_traces(
         sort_within=["entity", "datetime"],
         mode="dynamic",
         lineage={"stage": "parse", "input_directory": input_directory},
-        touched_partitions=[
-            hive_partition_rel(["reference_year"], [y]) for y in years
-        ],
     )

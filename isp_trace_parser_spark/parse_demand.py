@@ -21,7 +21,7 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from isp_trace_parser_spark.functions.restructure import trace_formatter
-from isp_trace_parser_spark.sources.catalog import Catalog, hive_partition_rel
+from isp_trace_parser_spark.sources.catalog import Catalog
 from isp_trace_parser_spark.sources.csv_trace import read_wide_trace_csvs
 
 # 2024 vocabulary (reference mappings/2024/demand.yaml:14-21). The raw
@@ -85,16 +85,12 @@ def parse_demand_df(
     subregions: list[str],
     filters: dict[str, Any] | None = None,
     scenario_display: dict[str, str] | None = None,
-    wide: DataFrame | None = None,
 ) -> DataFrame:
     """The demand parse pipeline as a DataFrame (no sink): CSV scan ->
     composite filename decode -> listing validation -> scenario rename
-    -> metadata filters -> wide->long restructure. ``wide``: pre-built
-    scan frame — parse_demand_traces passes its own so the input
-    directory is listed exactly once."""
+    -> metadata filters -> wide->long restructure."""
     scenario_display = scenario_display or SCENARIO_DISPLAY
-    if wide is None:
-        wide = read_wide_trace_csvs(spark, input_directory)
+    wide = read_wide_trace_csvs(spark, input_directory)
     decoded = decode_demand_filename(wide)
 
     # every validated field derives from the FILENAME, so validate from
@@ -138,27 +134,8 @@ def parse_demand_traces(
     scenario_display: dict[str, str] | None = None,
 ) -> dict[str, Any]:
     scenario_display = scenario_display or SCENARIO_DISPLAY
-    wide = read_wide_trace_csvs(spark, input_directory)
     long_df = parse_demand_df(
-        spark, input_directory, subregions, filters, scenario_display,
-        wide=wide,
-    )
-    # both partition columns derive from the FILENAMES: touched
-    # partitions come from the ONE listing (shared with the scan above,
-    # metadata only), keeping the snapshot commit O(partitions touched)
-    # with no extra job
-    rx = re.compile(_DEMAND_RE)
-    touched = sorted(
-        {
-            hive_partition_rel(
-                ["scenario", "reference_year"],
-                [scenario_display[m.group(3)], int(m.group(2))],
-            )
-            for m in (
-                rx.match(p.rsplit("/", 1)[-1]) for p in wide.inputFiles()
-            )
-            if m and m.group(3) in scenario_display
-        }
+        spark, input_directory, subregions, filters, scenario_display
     )
     return cat.write(
         long_df,
@@ -167,5 +144,4 @@ def parse_demand_traces(
         sort_within=["subregion", "datetime"],
         mode="dynamic",
         lineage={"stage": "parse_demand", "input_directory": input_directory},
-        touched_partitions=touched,
     )

@@ -208,17 +208,13 @@ def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
     changed = _changed_partitions(cat, st.name, in_state)
     if changed == []:
         return None
-    keep = touched = None  # full recompute -> full read, full snapshot stat
+    keep = None  # full recompute -> full read
     if changed is not None and st.partition_by:
         keep, out_values = (
             st.expand(changed) if st.expand else (set(changed).__contains__, changed)
         )
-        # the snapshot-diff already names the recomputed output
-        # partitions: pass them so the commit stats only those subtrees
-        # instead of walking the whole table (O(touched), not O(table age))
-        touched = [f"{st.partition_by[0]}={v}" for v in out_values]
     out = st.build(cat.read(st.input, partitions=keep))
-    if st.expand and touched is not None:
+    if st.expand and keep is not None:
         # an expanded read can reach rows of output partitions this run
         # does not rewrite (a block that starts before the first day read)
         out = out.where(F.col(st.partition_by[0]).cast("string").isin(out_values))
@@ -235,7 +231,6 @@ def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
             "input_state": in_state,
             "recomputed_partitions": changed,
         },
-        touched_partitions=touched,
     )
     return {"files": snap["files"], "bytes": snap["bytes"]}
 

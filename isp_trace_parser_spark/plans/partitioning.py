@@ -125,8 +125,9 @@ def skew_report(
     ``suggested_salts`` = ceil(key_count / (total / parallelism)) — the
     number of salt buckets needed so no single (key, salt) partition
     exceeds the average per-task share. 1 means the key is fine as-is;
-    feed anything larger into :func:`salted` / ``two_phase_avg`` or the
-    catalog's ``dist_buckets``.
+    feed anything larger into :func:`salted` / ``two_phase_avg``
+    (``Catalog.write`` salts with :func:`write_salt_buckets`, which
+    scales with the cluster).
 
     Cost: one two-phase count agg (map-side combined) + a broadcast of
     the single-row total; the top-k is an order-by-limit over the

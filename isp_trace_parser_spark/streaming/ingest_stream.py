@@ -131,7 +131,7 @@ def streaming_ingest(
             table,
             partition_by=["day_bucket", "url_bucket"],
             sort_within=["url", "warc_ts"],
-            mode="append" if cat.exists(table) else "overwrite",
+            mode="append",
             lineage=lineage,
         )
 

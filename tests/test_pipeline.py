@@ -322,7 +322,8 @@ def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
     orig = DataFrameWriter.parquet
 
     def parquet(self, path, *a, **kw):
-        plans[os.path.basename(path)] = (
+        # the writer's target is a staging dir inside the table dir
+        plans[os.path.basename(os.path.dirname(path))] = (
             self._df._jdf.queryExecution().executedPlan().toString()
         )
         return orig(self, path, *a, **kw)
@@ -337,3 +338,18 @@ def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
         parts = cat.last_snapshot(t)["partitions"]
         assert len(parts) == 3
         assert all(m["files"] <= write_salt_buckets(spark) for m in parts.values())
+
+
+def test_rebuilt_unpartitioned_tier_keeps_its_log(spark, cat):
+    """agg_1mo is rebuilt in full on every run that changes its input;
+    the rebuild keeps the table's snapshot log."""
+    import pyspark.sql.functions as F
+
+    ingest_pages(cat, synth.pages(spark, n_urls=3, n_slots=48 * 3), n_buckets=2)
+    run_rollup_pipeline(spark, cat, encode_blocks=False)
+    # day 2024-01-01 lands again with other values
+    day = synth.pages(spark, n_urls=3, n_slots=48).withColumn("value", F.col("value") * 2)
+    ingest_pages(cat, day, n_buckets=2, mode="dynamic")
+    res = run_rollup_pipeline(spark, cat, encode_blocks=False)
+    assert "agg_1mo" in res.stages_run
+    assert len(cat.snapshots("agg_1mo")) == 2
