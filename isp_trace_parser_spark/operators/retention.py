@@ -3,18 +3,17 @@ then expire them from the finer tier (north_rule: "tiered retention that
 downsamples and expires old partitions").
 
 Policy model (timescale/influx-style continuous-aggregate retention):
+the targets are the raw table (``raw_keep_days``, partition
+day_bucket) plus every row of ``tiers.TIERS`` that names a horizon, a
+``RetentionPolicy`` field; the cutoff's unit and the partition column
+come from the row:
 
-    raw pages   : keep ``raw_keep_days``        (partition: day_bucket)
-    agg_30m     : keep ``t30_keep_days``        (partition: day_bucket)
-    agg_1d      : keep ``t1d_keep_months``      (partition: month_bucket)
-    agg_1mo     : keep forever
+    agg_30m, hist_30m, dist_30m : keep ``t30_keep_days``   (day_bucket)
+    agg_1d, hist_1d, dist_1d    : keep ``t1d_keep_months`` (month_bucket)
+    agg_1mo, blocks_30m         : keep forever (no horizon)
 
-Histogram tiers (pipeline ``histogram_bin_width``) and distinct-count
-tiers (pipeline ``distinct_key``) follow the same horizons as their
-resolution peers: ``hist_30m``/``dist_30m`` expire with the 30m
-horizon, ``hist_1d``/``dist_1d`` with the 1d horizon — a percentile or
-cardinality dashboard keeps exactly as much history as an avg
-dashboard at the same resolution.
+A percentile or cardinality dashboard thus keeps exactly as much
+history as an avg dashboard at the same resolution.
 
 Because every coarser tier is derived from the finer tier's partials
 BEFORE expiry (rollup.rollup_cascade), expiring a fine partition loses no
@@ -35,6 +34,7 @@ from dataclasses import dataclass
 from typing import Any
 
 from isp_trace_parser_spark.sources.catalog import Catalog
+from isp_trace_parser_spark.tiers import RAW_PARTITION_COL, TIERS
 
 
 @dataclass
@@ -44,17 +44,11 @@ class RetentionPolicy:
     t1d_keep_months: int = 36
 
 
-def _date_str(d: datetime.date) -> str:
-    return d.strftime("%Y-%m-%d")
-
-
 def retention_plan(
     cat: Catalog,
     policy: RetentionPolicy,
     now: datetime.datetime,
     raw_table: str = "pages",
-    t30_table: str = "agg_30m",
-    t1d_table: str = "agg_1d",
 ) -> dict[str, Any]:
     """DRY RUN of :func:`apply_retention`: the exact per-table
     partition lists a retention pass at ``now`` WOULD expire, without
@@ -62,9 +56,7 @@ def retention_plan(
     irreversible partition drop (and the input to capacity planning:
     bytes reclaimed = sum of the listed partitions' snapshot sizes).
     Pure metadata: O(partitions) listing, no data scan."""
-    return _retention_targets(
-        cat, policy, now, raw_table, t30_table, t1d_table
-    )
+    return {table: old for table, _col, old in _expired(cat, policy, now, raw_table)}
 
 
 def apply_retention(
@@ -72,53 +64,40 @@ def apply_retention(
     policy: RetentionPolicy,
     now: datetime.datetime,
     raw_table: str = "pages",
-    t30_table: str = "agg_30m",
-    t1d_table: str = "agg_1d",
 ) -> dict[str, Any]:
     """Expire partitions older than each tier's horizon. ``now`` is an
     explicit argument (no wall-clock reads) so runs are reproducible and
     testable. Returns {table: [dropped partition values]}."""
-    targets = _retention_targets(
-        cat, policy, now, raw_table, t30_table, t1d_table
-    )
-    for table, old in targets.items():
+    expired = _expired(cat, policy, now, raw_table)
+    for table, col, old in expired:
         if old:
-            col = (
-                "month_bucket" if table in (t1d_table, "hist_1d", "dist_1d")
-                else "day_bucket"
-            )
             cat.expire_partitions(table, col, old)
-    return targets
+    return {table: old for table, _col, old in expired}
 
 
-def _retention_targets(
+def _cutoff(now: datetime.datetime, keep: int, col: str) -> str:
+    """The first partition value a table partitioned by ``col`` keeps:
+    ``keep`` days back, or ``keep`` whole months back for a
+    month-partitioned table."""
+    if col == "month_bucket":
+        m = now.year * 12 + (now.month - 1) - keep
+        return f"{m // 12:04d}-{m % 12 + 1:02d}"
+    return (now - datetime.timedelta(days=keep)).strftime("%Y-%m-%d")
+
+
+def _expired(
     cat: Catalog,
     policy: RetentionPolicy,
     now: datetime.datetime,
     raw_table: str,
-    t30_table: str,
-    t1d_table: str,
-) -> dict[str, Any]:
-    report: dict[str, Any] = {}
-
-    raw_cutoff = _date_str((now - datetime.timedelta(days=policy.raw_keep_days)).date())
-    t30_cutoff = _date_str((now - datetime.timedelta(days=policy.t30_keep_days)).date())
-    # month cutoff: first month to KEEP
-    month_anchor = now.replace(day=1)
-    y, m = month_anchor.year, month_anchor.month
-    m_total = y * 12 + (m - 1) - policy.t1d_keep_months
-    t1d_cutoff = f"{m_total // 12:04d}-{m_total % 12 + 1:02d}"
-
-    for table, col, cutoff in (
-        (raw_table, "day_bucket", raw_cutoff),
-        (t30_table, "day_bucket", t30_cutoff),
-        (t1d_table, "month_bucket", t1d_cutoff),
-        ("hist_30m", "day_bucket", t30_cutoff),
-        ("hist_1d", "month_bucket", t1d_cutoff),
-        ("dist_30m", "day_bucket", t30_cutoff),
-        ("dist_1d", "month_bucket", t1d_cutoff),
-    ):
-        report[table] = [
-            v for v in cat.list_partitions(table, col) if v < cutoff
-        ]
-    return report
+) -> list[tuple[str, str, list[str]]]:
+    """(table, partition column, partitions past its horizon) for the
+    raw table, then every tier with a horizon, in ``TIERS`` order."""
+    targets = [(raw_table, RAW_PARTITION_COL, "raw_keep_days")] + [
+        (t.name, t.partition_col, t.horizon) for t in TIERS if t.horizon
+    ]
+    out = []
+    for table, col, horizon in targets:
+        cutoff = _cutoff(now, getattr(policy, horizon), col)
+        out.append((table, col, [v for v in cat.list_partitions(table, col) if v < cutoff]))
+    return out

@@ -245,32 +245,9 @@ def histogram_percentile(
     """Percentile estimate per (series, bucket) straight from the
     histogram tier — the serving-side consumer of
     :func:`histogram_tier`: a dashboard's p95 reads tier bins, never
-    raw rows.
-
-    Deterministic rule (exact integer math, oracle-able): the answer
-    bin is the smallest bin whose cumulative count reaches
-    ``ceil(q * total)``; the estimate is that bin's midpoint. One
-    window over (series, bucket) ordered by bin (running cumsum +
-    whole-partition total share the sort) and a groupBy on the same
-    keys — EnsureRequirements reuses the window's clustering, so the
-    whole plan is a single exchange.
-    """
-    part = Window.partitionBy("series", "bucket_ts")
-    w = part.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = F.sum("cnt").over(w)
-    total = F.sum("cnt").over(part)
-    hit = tier.select(
-        "series",
-        "bucket_ts",
-        "bin",
-        (cum >= F.ceil(F.lit(q) * total)).alias("_hit"),
-    ).where("_hit")
-    return hit.groupBy("series", "bucket_ts").agg(
-        F.min("bin").alias("bin"),
-        ((F.min("bin") + F.lit(0.5)) * F.lit(bin_width)).alias("estimate"),
-    )
+    raw rows. The single-q case of :func:`histogram_percentiles`:
+    (series, bucket_ts, bin, estimate)."""
+    return histogram_percentiles(tier, [q], bin_width).drop("q")
 
 
 def distinct_tier(
@@ -330,15 +307,21 @@ def histogram_percentiles(
 ) -> DataFrame:
     """Several percentiles per (series, bucket) in ONE pass over the
     histogram tier — p50/p95/p99 dashboards share the cumulative
-    window instead of re-running :func:`histogram_percentile` per q.
+    window.
 
-    Same deterministic rule per q (smallest bin whose cumulative count
-    reaches ``ceil(q*total)``, midpoint estimate); the per-q answers
-    are conditional ``min`` aggregates over the SAME (series, bucket)
-    grouping the window clusters on, so the whole plan keeps the
+    Deterministic rule per q (exact integer math, oracle-able): the
+    answer bin is the smallest bin whose cumulative count reaches
+    ``ceil(q * total)``; the estimate is that bin's midpoint. Each q
+    must lie in [0, 1]. One window over (series, bucket) ordered by bin
+    (running cumsum + whole-partition total share the sort); the per-q
+    answers are conditional ``min`` aggregates over the SAME (series,
+    bucket) grouping the window clusters on, so the whole plan keeps the
     single exchange; the long (series, bucket_ts, q, bin, estimate)
     output is a post-agg ``stack`` projection.
     """
+    bad = [q for q in qs if not 0 <= q <= 1]
+    if bad:
+        raise ValueError(f"percentiles must lie in [0, 1], got {bad}")
     part = Window.partitionBy("series", "bucket_ts")
     w = part.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

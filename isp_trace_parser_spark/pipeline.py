@@ -1,8 +1,10 @@
 """End-to-end rollup + retention pipeline with snapshot checkpointing
 and per-partition lineage — snapshot-diff incremental processing.
 
-Stage DAG (the raw table is scanned once per raw tier; every coarser
-tier reads the finer tier's stored partials)::
+Stage DAG: one stage per row of ``tiers.TIERS`` whose family is
+enabled, reading the row's input tier (the raw table is scanned once
+per raw tier; every coarser tier reads the finer tier's stored
+partials)::
 
     pages (raw, day_bucket x url_bucket partitions)
       ├─ agg_30m   groupBy(url, 30m bucket)             [diff vs pages]
@@ -14,8 +16,9 @@ tier reads the finer tier's stored partials)::
       └─ dist_30m  HLL sketches (distinct_key)          [diff vs pages]
            └─ dist_1d   sketch union                    [diff vs dist_30m]
     then retention: expire partitions past each tier's horizon
+    (agg_1mo and blocks_30m have none: they are kept forever)
 
-Concurrency: the stages form a table (``Stage``) in declaration order.
+Concurrency: the stages form a list (``Stage``) in ``TIERS`` order.
 Each stage is submitted to a thread pool as soon as its input stage has
 committed, so independent tiers build at the same time and Spark's
 default FIFO scheduler fills the cores a single small stage leaves idle.
@@ -75,6 +78,7 @@ from isp_trace_parser_spark.plans.partitioning import (
     write_salt_buckets,
 )
 from isp_trace_parser_spark.sources.catalog import Catalog
+from isp_trace_parser_spark.tiers import CASCADE, TIERS, Tier
 
 
 @dataclass
@@ -130,31 +134,32 @@ def _changed_partitions(
 
 
 _SALT = "_salt"
+# partition column -> its value for a bucket labelled by a timestamp
+_PARTITION_OF = {"day_bucket": day_bucket, "month_bucket": month_bucket}
 _DAY_S = 86400
 _EPOCH = datetime.date(1970, 1, 1)
 
 
 @dataclass(frozen=True)
 class Stage:
-    """One node of the pipeline DAG: table ``name`` is built from table
-    ``input`` (top-level partition column ``input_col``) by ``build`` and
-    written partitioned by ``partition_by`` (None: unpartitioned),
-    sorted by ``sort_within``.
+    """One node of the pipeline DAG: ``tier`` is built from table
+    ``input`` (its input tier, or the raw table) by ``build``, and
+    written partitioned and sorted as its row declares. A raw tier's
+    ``build`` already distributes its output on the write's key.
 
     ``expand`` maps the changed input partitions of an incremental run
     to (a predicate on the input partitions to read, the output
     partitions to rewrite); without it a changed input partition
-    rewrites the output partition of the same value. ``prepartitioned``:
-    ``build`` already distributes its output on the write's key."""
+    rewrites the output partition of the same value."""
 
-    name: str
+    tier: Tier
     input: str
-    input_col: str
     build: Callable[[DataFrame], DataFrame]
-    partition_by: list[str] | None
-    sort_within: list[str]
     expand: Callable[[list[str]], tuple[Callable[[str], bool], list[str]]] | None = None
-    prepartitioned: bool = False
+
+    @property
+    def name(self) -> str:
+        return self.tier.name
 
 
 def _months(changed: list[str]) -> tuple[Callable[[str], bool], list[str]]:
@@ -204,12 +209,13 @@ def _block_partitions(
 def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
     """Bring one stage up to date with its input: None when it already
     is, else the files and bytes of the table it committed."""
-    in_state = partition_state(cat, st.input, st.input_col)
-    changed = _changed_partitions(cat, st.name, in_state)
+    t = st.tier
+    in_state = partition_state(cat, st.input, t.input_col)
+    changed = _changed_partitions(cat, t.name, in_state)
     if changed == []:
         return None
     keep = None  # full recompute -> full read
-    if changed is not None and st.partition_by:
+    if changed is not None and t.partition_col:
         keep, out_values = (
             st.expand(changed) if st.expand else (set(changed).__contains__, changed)
         )
@@ -217,16 +223,16 @@ def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
     if st.expand and keep is not None:
         # an expanded read can reach rows of output partitions this run
         # does not rewrite (a block that starts before the first day read)
-        out = out.where(F.col(st.partition_by[0]).cast("string").isin(out_values))
+        out = out.where(F.col(t.partition_col).cast("string").isin(out_values))
     snap = cat.write(
         out,
-        st.name,
-        partition_by=st.partition_by,
-        sort_within=st.sort_within,
-        mode="dynamic" if st.partition_by else "overwrite",
-        repartition=not st.prepartitioned,
+        t.name,
+        partition_by=[t.partition_col] if t.partition_col else None,
+        sort_within=list(t.sort_within),
+        mode="dynamic" if t.partition_col else "overwrite",
+        repartition=t.input is not None,
         lineage={
-            "stage": st.name,
+            "stage": t.name,
             "input_table": st.input,
             "input_state": in_state,
             "recomputed_partitions": changed,
@@ -335,95 +341,68 @@ def run_rollup_pipeline(
     ``codec.compression_report(cat.read("blocks_30m"))``.
     """
     n_salts = write_salt_buckets(spark)
+    enabled = {
+        "agg": True,
+        "hist": histogram_bin_width is not None,
+        "dist": distinct_key is not None,
+        "blocks": encode_blocks,
+    }
+    # family -> (its builder over raw rows, the raw column it reads,
+    # the builder's parameter after the resolution)
+    raw_builders = {
+        "agg": (rollup.rollup_raw, "value", sum_cast),
+        "hist": (rollup.histogram_tier, "value", enabled["hist"] and float(histogram_bin_width)),
+        "dist": (rollup.distinct_tier, distinct_key, 14),  # HLL lgK
+    }
 
-    def raw_tier(cols: list[str], build) -> Callable[[DataFrame], DataFrame]:
-        """A 30m tier over raw rows in one exchange: attach the storage
-        key (day_bucket of the 30m bucket end, write salt of the series),
+    def raw_tier(t: Tier) -> Callable[[DataFrame], DataFrame]:
+        """A tier over raw rows in one exchange: attach the storage key
+        (partition of the bucket end, write salt of the series),
         shuffle once on it, group with it as leading keys (the shuffle
         already clusters every group), then drop the salt. The write
         then needs no shuffle of its own."""
+        build, col, param = raw_builders[t.family]
+        part = _PARTITION_OF[t.partition_col]
 
         def _build(src: DataFrame) -> DataFrame:
             keyed = (
-                src.select(*cols)
-                .withColumn(
-                    "day_bucket", day_bucket(rollup.bucket_end(F.col("warc_ts"), 1800))
-                )
+                src.select("url", "warc_ts", col)
+                .withColumn(t.partition_col, part(rollup.bucket_end(F.col("warc_ts"), t.seconds)))
                 .withColumn(_SALT, write_salt(["url"], n_salts))
-                .repartition("day_bucket", _SALT)
+                .repartition(t.partition_col, _SALT)
             )
-            return build(keyed, ["day_bucket", _SALT]).drop(_SALT)
+            return build(
+                keyed, "url", "warc_ts", col, t.seconds, param, by=[t.partition_col, _SALT]
+            ).drop(_SALT)
 
         return _build
 
-    def cascade(build) -> Callable[[DataFrame], DataFrame]:
-        """A 1d tier from a day-partitioned 30m tier, month-partitioned."""
-        return lambda src: build(
-            src.drop("day_bucket"), rollup.TIER_SECONDS["1d"]
-        ).withColumn("month_bucket", month_bucket("bucket_ts"))
-
-    tier_order = ["series", "bucket_ts"]
-    stages = [
-        Stage(
-            "agg_30m", raw_table, "day_bucket",
-            raw_tier(["url", "warc_ts", "value"], lambda df, by: rollup.rollup_raw(
-                df, "url", "warc_ts", "value", sum_cast=sum_cast, by=by
-            )),
-            ["day_bucket"], tier_order, prepartitioned=True,
-        ),
-        Stage(
-            "agg_1d", "agg_30m", "day_bucket", cascade(rollup.rollup_cascade),
-            ["month_bucket"], tier_order, expand=_months,
-        ),
-    ]
-    if histogram_bin_width is not None:
-        bw = float(histogram_bin_width)
-        stages += [
-            Stage(
-                "hist_30m", raw_table, "day_bucket",
-                raw_tier(["url", "warc_ts", "value"], lambda df, by: rollup.histogram_tier(
-                    df, "url", "warc_ts", "value", 1800, bw, by=by
-                )),
-                ["day_bucket"], [*tier_order, "bin"], prepartitioned=True,
-            ),
-            Stage(
-                "hist_1d", "hist_30m", "day_bucket", cascade(rollup.histogram_cascade),
-                ["month_bucket"], [*tier_order, "bin"], expand=_months,
-            ),
-        ]
-    if distinct_key is not None:
-        stages += [
-            Stage(
-                "dist_30m", raw_table, "day_bucket",
-                raw_tier(["url", "warc_ts", distinct_key], lambda df, by: rollup.distinct_tier(
-                    df, "url", "warc_ts", distinct_key, 1800, 14, by=by
-                )),
-                ["day_bucket"], tier_order, prepartitioned=True,
-            ),
-            Stage(
-                "dist_1d", "dist_30m", "day_bucket", cascade(rollup.distinct_cascade),
-                ["month_bucket"], tier_order, expand=_months,
-            ),
-        ]
-    stages.append(
-        Stage(
-            "agg_1mo", "agg_1d", "month_bucket",
-            lambda src: rollup.monthly_from_daily(src.drop("month_bucket")),
-            None, tier_order,
-        )
-    )
-    if encode_blocks:
-        span = codec.block_span_seconds(block_size)
-        stages.append(
-            Stage(
-                "blocks_30m", "agg_30m", "day_bucket",
-                lambda src: codec.encode_blocks(
-                    src, "series", "bucket_ts", "avg_value", block=block_size
-                ).withColumn("day_bucket", F.to_date("block_start")),
-                ["day_bucket"], ["series"],
-                expand=lambda changed: _block_partitions(changed, span),
+    def stage(t: Tier) -> Stage:
+        src = t.input or raw_table
+        if t.input is None:
+            return Stage(t, src, raw_tier(t))
+        if t.family == "blocks":
+            span = codec.block_span_seconds(block_size)
+            # codec.encode_blocks is looked up when the stage runs
+            return Stage(
+                t, src,
+                lambda df: codec.encode_blocks(
+                    df, "series", "bucket_ts", "avg_value", block=block_size
+                ).withColumn(t.partition_col, F.to_date("block_start")),
+                lambda changed: _block_partitions(changed, span),
             )
+        if t.seconds is None:
+            return Stage(t, src, lambda df: rollup.monthly_from_daily(df.drop(t.input_col)))
+        return Stage(
+            t, src,
+            lambda df: CASCADE[t.family](df.drop(t.input_col), t.seconds).withColumn(
+                t.partition_col, _PARTITION_OF[t.partition_col]("bucket_ts")
+            ),
+            # a tier partitioned coarser than its input rebuilds whole months
+            _months if t.partition_col != t.input_col else None,
         )
+
+    stages = [stage(t) for t in TIERS if enabled[t.family]]
 
     done = _run_dag(spark, stages, lambda st: _run_stage(cat, st))
     res = PipelineResult()

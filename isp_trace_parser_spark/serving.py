@@ -5,17 +5,23 @@ module answers "give me series X at resolution R over [window]" the way
 a TimescaleDB continuous-aggregate SELECT or a Druid/ClickHouse rollup
 router does:
 
-1. pick the COARSEST stored tier whose resolution divides the request
-   (a 2h request reads the 30m tier, a 1-week request reads the 1d
-   tier) — never the raw table;
+1. pick the COARSEST stored tier of the request's family (avg,
+   histogram or distinct rows of ``tiers.TIERS``) whose resolution
+   divides the request (a 2h request reads the 30m tier, a 1-week
+   request reads the 1d tier) — never the raw table;
 2. prune partitions (day_bucket / month_bucket) BEFORE the scan is
    planned: the catalog read keeps only the window's files from the
    committed snapshot's manifest, so a 2-day window over a 10-year
    table plans from two partitions' files, with no directory listing
    and no Spark job;
 3. re-aggregate the tier's partial aggregates to the requested
-   resolution with the same weighted cascade the pipeline uses
-   (rollup.rollup_cascade) — avg recombines exactly via sum/cnt.
+   resolution with the family's cascade rule, the one the pipeline
+   uses (``tiers.CASCADE``) — avg recombines exactly via sum/cnt.
+
+The tiers it routes over are those ``tiers.TIERS`` declares. Their
+rows also name each tier's retention horizon; agg_1mo (the '1mo'
+resolution) and blocks_30m (the cold tier,
+:func:`series_30m_from_blocks`) have none and are kept forever.
 
 At 100 TB this is the difference between answering a dashboard query
 from megabytes of tier data and rescanning the raw corpus.
@@ -32,8 +38,17 @@ from pyspark.sql import functions as F
 from isp_trace_parser_spark.operators import rollup
 from isp_trace_parser_spark.operators.codec import block_span_seconds
 from isp_trace_parser_spark.sources.catalog import Catalog
+from isp_trace_parser_spark.tiers import CASCADE, TIERS, Tier
 
 _RES_RE = re.compile(r"^(\d+)\s*(m|min|h|d)$")
+
+# family -> how a missing tier is named, and what builds it
+_MISSING = {
+    "agg": ("tier", " (finest tier is 30m)"),
+    "hist": ("histogram tier", " — run the pipeline with histogram_bin_width set"),
+    "dist": ("distinct tier", " — run the pipeline with distinct_key set"),
+}
+
 
 def _in_range(lo: str | None, hi: str | None):
     """Predicate on a partition value: inside ``[lo, hi]``, where a
@@ -50,17 +65,13 @@ def resolution_seconds(resolution: str) -> int:
             f"unsupported resolution {resolution!r} (use <N>m|h|d or '1mo')"
         )
     n, unit = int(m.group(1)), m.group(2)
+    if n == 0:
+        raise ValueError(f"resolution {resolution!r} is zero")
     return n * {"m": 60, "min": 60, "h": 3600, "d": 86400}[unit]
 
 
 class TierStore:
     """Router over a pipeline-built tier catalog."""
-
-    # (table, resolution seconds, hive partition col, partition value fn)
-    TIERS = [
-        ("agg_1d", 86400, "month_bucket", lambda d: d.strftime("%Y-%m")),
-        ("agg_30m", 1800, "day_bucket", lambda d: d.isoformat()),
-    ]
 
     def __init__(self, cat: Catalog):
         self.cat = cat
@@ -75,21 +86,7 @@ class TierStore:
         """Aggregate points at ``resolution``, end-labeled buckets in
         the half-open window ``(start, end]`` (the engine-wide
         convention, matching the FY/calendar windows of the API)."""
-        if resolution.strip() == "1mo":
-            return self._slice("agg_1mo", series, start, end, partition_col=None)
-        res_s = resolution_seconds(resolution)
-        for table, tier_s, part_col, _fmt in self.TIERS:
-            if res_s % tier_s == 0 and self.cat.exists(table):
-                df = self._slice(table, series, start, end, part_col)
-                if res_s == tier_s:
-                    return df
-                return rollup.rollup_cascade(
-                    df.drop(part_col), res_s
-                )
-        raise ValueError(
-            f"no stored tier divides resolution {resolution!r} "
-            f"(finest tier is 30m)"
-        )
+        return self._route("agg", series, start, end, resolution)
 
     def series_auto(
         self,
@@ -121,9 +118,9 @@ class TierStore:
             ("7d", 604800), ("28d", 2419200),
         ]
         stored = [
-            tier_s
-            for _t, tier_s, _c, _f in self.TIERS
-            if self.cat.exists(_t)
+            t.seconds
+            for t in TIERS
+            if t.family == "agg" and t.seconds and self.cat.exists(t.name)
         ]
         servable = [
             (label, res_s)
@@ -146,15 +143,6 @@ class TierStore:
             label,
         )
 
-    # histogram tiers (pipeline histogram_bin_width): same routing and
-    # pruning discipline as the avg tiers — coarsest stored tier whose
-    # resolution divides the request, partition pruning before the
-    # scan, count-sum cascade to the requested resolution
-    HIST_TIERS = [
-        ("hist_1d", 86400, "month_bucket"),
-        ("hist_30m", 1800, "day_bucket"),
-    ]
-
     def percentile(
         self,
         q: float,
@@ -165,31 +153,19 @@ class TierStore:
         bin_width: float = 0.5,
     ) -> DataFrame:
         """Percentile estimate per (series, bucket) at ``resolution``,
-        served from the histogram tiers — never the raw table. Routing,
-        window semantics ((start, end], end-labeled buckets) and
-        partition pruning are identical to :meth:`series`; the coarser
-        resolution is a plain count-sum cascade (histograms are
-        mergeable), and the percentile rule is
-        ``rollup.histogram_percentile``'s deterministic
-        smallest-bin-reaching-ceil(q*total) with midpoint estimate.
+        served from the histogram tiers — never the raw table: the
+        single-q case of :meth:`percentiles`, without its ``q`` column.
+        The percentile rule is ``rollup.histogram_percentile``'s
+        deterministic smallest-bin-reaching-ceil(q*total) with midpoint
+        estimate.
 
         ``bin_width`` must match the pipeline's
         ``histogram_bin_width`` — it only scales the midpoint estimate;
         the stored bins fix the actual resolution.
         """
-        res_s = resolution_seconds(resolution)
-        for table, tier_s, part_col in self.HIST_TIERS:
-            if res_s % tier_s == 0 and self.cat.exists(table):
-                hist = self._slice(table, series, start, end, part_col)
-                if res_s != tier_s:
-                    hist = rollup.histogram_cascade(
-                        hist.drop(part_col), res_s
-                    )
-                return rollup.histogram_percentile(hist, q, bin_width)
-        raise ValueError(
-            f"no stored histogram tier divides resolution {resolution!r}"
-            " — run the pipeline with histogram_bin_width set"
-        )
+        return self.percentiles(
+            [q], series, start, end, resolution, bin_width
+        ).drop("q")
 
     def percentiles(
         self,
@@ -201,31 +177,15 @@ class TierStore:
         bin_width: float = 0.5,
     ) -> DataFrame:
         """Several percentiles (e.g. p50/p95/p99) per (series, bucket)
-        in ONE pass over the routed histogram tier — same routing,
-        pruning and cascade as :meth:`percentile`, but the per-q
-        answers share the cumulative window
+        in ONE pass over the routed histogram tier. Routing, window
+        semantics ((start, end], end-labeled buckets) and partition
+        pruning are identical to :meth:`series`; the coarser resolution
+        is a plain count-sum cascade (histograms are mergeable), and the
+        per-q answers share the cumulative window
         (``rollup.histogram_percentiles``). Long output:
         (series, bucket_ts, q, bin, estimate)."""
-        res_s = resolution_seconds(resolution)
-        for table, tier_s, part_col in self.HIST_TIERS:
-            if res_s % tier_s == 0 and self.cat.exists(table):
-                hist = self._slice(table, series, start, end, part_col)
-                if res_s != tier_s:
-                    hist = rollup.histogram_cascade(
-                        hist.drop(part_col), res_s
-                    )
-                return rollup.histogram_percentiles(hist, qs, bin_width)
-        raise ValueError(
-            f"no stored histogram tier divides resolution {resolution!r}"
-            " — run the pipeline with histogram_bin_width set"
-        )
-
-    # HLL cardinality tiers (pipeline distinct_key): same routing; the
-    # coarser resolution is a lossless sketch UNION
-    DIST_TIERS = [
-        ("dist_1d", 86400, "month_bucket"),
-        ("dist_30m", 1800, "day_bucket"),
-    ]
+        hist = self._route("hist", series, start, end, resolution)
+        return rollup.histogram_percentiles(hist, qs, bin_width)
 
     def distinct(
         self,
@@ -241,32 +201,38 @@ class TierStore:
         window semantics and partition pruning match :meth:`series`.
         Exact while sketches are in sparse mode, ~±1.6%/sqrt(2^lgk)
         beyond."""
-        res_s = resolution_seconds(resolution)
-        for table, tier_s, part_col in self.DIST_TIERS:
-            if res_s % tier_s == 0 and self.cat.exists(table):
-                tier = self._slice(table, series, start, end, part_col)
-                if res_s != tier_s:
-                    tier = rollup.distinct_cascade(
-                        tier.drop(part_col), res_s
-                    )
-                return rollup.distinct_estimate(tier)
-        raise ValueError(
-            f"no stored distinct tier divides resolution {resolution!r}"
-            " — run the pipeline with distinct_key set"
+        return rollup.distinct_estimate(
+            self._route("dist", series, start, end, resolution)
         )
 
-    def _slice(self, table, series, start, end, partition_col):
+    def _route(self, family, series, start, end, resolution) -> DataFrame:
+        """The coarsest stored tier of ``family`` whose resolution
+        divides ``resolution``, cut to the window and re-aggregated to
+        ``resolution`` with the family's cascade rule. A calendar-month
+        tier serves only the literal '1mo'."""
+        res_s = None if resolution.strip() == "1mo" else resolution_seconds(resolution)
+        # declared finest first: scan coarsest first
+        for t in reversed([t for t in TIERS if t.family == family]):
+            fits = t.seconds == res_s or (res_s and t.seconds and res_s % t.seconds == 0)
+            if fits and self.cat.exists(t.name):
+                df = self._slice(t, series, start, end)
+                if t.seconds == res_s:
+                    return df
+                return CASCADE[family](df.drop(t.partition_col), res_s)
+        label, hint = _MISSING[family]
+        raise ValueError(
+            f"no stored {label} divides resolution {resolution!r}{hint}"
+        )
+
+    def _slice(self, tier: Tier, series, start, end) -> DataFrame:
         # the pruning predicate: partition values are derived from
         # bucket_ts, so the window's date range on the partition value
         # is a superset of the bucket_ts filter below; the read keeps
         # only those partitions' files
-        lo = start.date().isoformat() if start is not None else None
-        hi = end.date().isoformat() if end is not None else None
-        if partition_col == "month_bucket":
-            lo, hi = lo and lo[:7], hi and hi[:7]
-        df = self.cat.read(
-            table, partitions=_in_range(lo, hi) if partition_col else None
-        )
+        keep = None
+        if tier.partition_col:
+            keep = _in_range(tier.partition_bound(start), tier.partition_bound(end))
+        df = self.cat.read(tier.name, partitions=keep)
         if series is not None:
             vals = series if isinstance(series, list) else [series]
             df = df.where(F.col("series").isin(vals))
@@ -282,7 +248,6 @@ def series_30m_from_blocks(
     series: str | list[str] | None = None,
     start: datetime.datetime | None = None,
     end: datetime.datetime | None = None,
-    table: str = "blocks_30m",
     block_span: str = "7 days",
 ) -> DataFrame:
     """COLD-tier read: serve 30m points by decoding Gorilla blocks.
@@ -304,16 +269,16 @@ def series_30m_from_blocks(
     """
     from isp_trace_parser_spark.operators import codec
 
+    (blocks,) = [t for t in TIERS if t.family == "blocks"]
     span_s = block_span_seconds(block_span)
-    # day_bucket is the block START's date, so the lower partition
+    # the partition is the block START's day, so the lower partition
     # bound backs off a whole number of days covering the span
     span_days = max(1, -(-span_s // 86400))
-    lo = hi = None
-    if start is not None:
-        lo = (start - datetime.timedelta(days=span_days)).date().isoformat()
-    if end is not None:
-        hi = end.date().isoformat()
-    df = cat.read(table, partitions=_in_range(lo, hi))
+    lo = None if start is None else start - datetime.timedelta(days=span_days)
+    df = cat.read(
+        blocks.name,
+        partitions=_in_range(blocks.partition_bound(lo), blocks.partition_bound(end)),
+    )
     if series is not None:
         vals = series if isinstance(series, list) else [series]
         df = df.where(F.col("series").isin(vals))
@@ -326,7 +291,7 @@ def series_30m_from_blocks(
             + F.expr(f"INTERVAL {span_s} SECONDS")
             > F.lit(start)
         )
-    out = codec.decode_blocks(df.drop("day_bucket", "n_points", "raw_bytes",
+    out = codec.decode_blocks(df.drop(blocks.partition_col, "n_points", "raw_bytes",
                                       "enc_bytes"))
     if start is not None:
         out = out.where(F.col("ts") > F.lit(start))

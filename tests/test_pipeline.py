@@ -353,3 +353,38 @@ def test_rebuilt_unpartitioned_tier_keeps_its_log(spark, cat):
     res = run_rollup_pipeline(spark, cat, encode_blocks=False)
     assert "agg_1mo" in res.stages_run
     assert len(cat.snapshots("agg_1mo")) == 2
+
+
+def test_every_declared_tier_reaches_each_derived_surface(spark, cat):
+    """The stage DAG, the retention targets and the kept-forever tiers
+    all follow tiers.TIERS: a run with every family on builds each row
+    in declaration order, the retention plan covers the raw table plus
+    every row with a horizon, and the rows without one keep every
+    partition under a zero-day, zero-month policy."""
+    import pyspark.sql.functions as F
+
+    from isp_trace_parser_spark.operators.retention import retention_plan
+    from isp_trace_parser_spark.tiers import TIERS
+
+    pages = synth.pages(spark, n_urls=3, n_slots=48 * 3).withColumn(
+        "visitor", (F.abs(F.xxhash64("url", "warc_ts")) % 5).cast("string")
+    )
+    ingest_pages(cat, pages, n_buckets=2)
+    res = run_rollup_pipeline(
+        spark, cat, histogram_bin_width=0.5, distinct_key="visitor"
+    )
+    assert res.stages_run == [t.name for t in TIERS]
+
+    now = datetime.datetime(2024, 2, 1)
+    zero = RetentionPolicy(raw_keep_days=0, t30_keep_days=0, t1d_keep_months=0)
+    plan = retention_plan(cat, zero, now)
+    assert list(plan) == ["pages"] + [t.name for t in TIERS if t.horizon]
+    assert all(plan.values())  # the zero policy expires every retained table
+
+    forever = [t.name for t in TIERS if t.horizon is None]
+    assert forever == ["agg_1mo", "blocks_30m"]
+    before = {t: cat.read(t).count() for t in forever}
+    res = run_rollup_pipeline(spark, cat, policy=zero, now=now,
+                              histogram_bin_width=0.5, distinct_key="visitor")
+    assert not set(forever) & set(res.metrics["retention"])
+    assert {t: cat.read(t).count() for t in forever} == before

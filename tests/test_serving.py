@@ -409,3 +409,27 @@ def test_percentiles_multi_q_serving(spark, store):
         )
         assert len(sub) == len(single) > 0
         assert (sub == single).all()
+
+
+@pytest.mark.parametrize("resolution", ["0m", "0h", "0d"])
+def test_series_rejects_zero_resolution(spark, store, resolution):
+    """A zero resolution fails at the call, not later inside a Spark
+    task (a zero-width bucket divides by zero)."""
+    cat, _ = store
+    with pytest.raises(ValueError, match="zero"):
+        TierStore(cat).series(resolution=resolution)
+
+
+@pytest.mark.parametrize("q", [1.5, -0.2])
+def test_percentiles_reject_q_outside_unit_interval(spark, store, q):
+    """Both percentile paths reject a q outside [0, 1] at the call
+    rather than returning no rows, null bins or the lowest bin."""
+    from isp_trace_parser_spark.operators.rollup import histogram_percentiles
+
+    cat, _ = store
+    with pytest.raises(ValueError, match=r"\[0, 1\]"):
+        TierStore(cat).percentile(q, resolution="2h")
+    with pytest.raises(ValueError, match=r"\[0, 1\]"):
+        TierStore(cat).percentiles([0.5, q], resolution="2h")
+    with pytest.raises(ValueError, match=r"\[0, 1\]"):
+        histogram_percentiles(cat.read("hist_30m"), [q])

@@ -1,0 +1,50 @@
+"""The tier table is the one place tier names live: the modules that
+derive the stage DAG, the serving router and the retention targets
+from it must not spell a tier's name themselves."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+import pytest
+
+from isp_trace_parser_spark.tiers import TIERS
+
+PKG = Path(__file__).resolve().parent.parent / "isp_trace_parser_spark"
+DERIVED = ["pipeline.py", "serving.py", "operators/retention.py"]
+
+
+def _docstrings(tree: ast.Module) -> set[int]:
+    """ids of the docstring constants of the module, its classes and
+    its functions."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            body = node.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                out.add(id(body[0].value))
+    return out
+
+
+@pytest.mark.parametrize("module", DERIVED)
+def test_derived_modules_spell_no_tier_name(module):
+    tree = ast.parse((PKG / module).read_text())
+    docs = _docstrings(tree)
+    names = {t.name for t in TIERS}
+    found = [
+        (node.lineno, node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docs
+        and node.value in names
+    ]
+    assert found == [], f"{module} names tiers outside tiers.TIERS: {found}"
+
+
+def test_every_tier_input_is_declared_before_it():
+    seen: set[str] = set()
+    for t in TIERS:
+        assert t.input is None or t.input in seen, t.name
+        seen.add(t.name)
