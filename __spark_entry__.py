@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from isp_trace_parser_spark.operators.rollup import (
     DEC,
     bucket_end,
-    monthly_from_daily,
     rollup_cascade,
     rollup_raw,
 )
@@ -243,7 +242,7 @@ def q_rollup_1mo(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     t30 = rollup_raw(ev, "event_type", "ts", "value", SEC_30M, DEC)
     t1d = rollup_cascade(t30, SEC_1D)
-    return _round_aggs(monthly_from_daily(t1d))
+    return _round_aggs(rollup_cascade(t1d, None))
 
 
 def q_mean_merge_union(spark, sf_dir):

@@ -61,7 +61,7 @@ t30 = rollup.rollup_raw(raw, "url", "warc_ts", "value").persist()
 t30.write.format("noop").mode("overwrite").save()
 t1d = rollup.rollup_cascade(t30, rollup.TIER_SECONDS["1d"]).persist()
 t1d.write.format("noop").mode("overwrite").save()
-rollup.monthly_from_daily(t1d).write.format("noop").mode("overwrite").save()
+rollup.rollup_cascade(t1d, None).write.format("noop").mode("overwrite").save()
 codec.encode_blocks(t30, "series", "bucket_ts", "avg_value", block="7 days").write.format(
     "noop").mode("overwrite").save()
 dt = time.perf_counter() - t

@@ -39,9 +39,17 @@ from isp_trace_parser_spark.tiers import RAW_PARTITION_COL, TIERS
 
 @dataclass
 class RetentionPolicy:
+    """Days (months) of history kept before the day (month) of ``now``.
+    A negative horizon would expire the current day too: rejected."""
+
     raw_keep_days: int = 90
     t30_keep_days: int = 365
     t1d_keep_months: int = 36
+
+    def __post_init__(self):
+        bad = {k: v for k, v in vars(self).items() if v < 0}
+        if bad:
+            raise ValueError(f"retention horizons must be >= 0, got {bad}")
 
 
 def retention_plan(

@@ -1,18 +1,25 @@
-"""Continuous-aggregate tier cascade: raw -> 30min -> 1day -> 1month.
+"""Continuous-aggregate tiers: the one place each family's aggregation
+rule lives.
 
 The reference's only aggregation kernel is mean-by-timestamp
 (reference: src/isp_trace_parser/trace_restructure_helper_functions.py:32-37);
 its half-hourly data is already the finest tier. The north_rule extends
-this to a 3-tier rollup engine. Design:
+this to a 30m -> 1d -> 1mo rollup engine. Each family (``agg``
+partials, ``hist`` bin counts, ``dist`` HLL sketches) has one rule over
+raw rows, which the streaming 30m builders (streaming/rollup_stream.py)
+apply too, and one cascade rule (:func:`rollup_cascade`,
+:func:`histogram_cascade`, :func:`distinct_cascade`) that re-aggregates
+a finer tier to a coarser bucket: a whole number of seconds, or a
+calendar month (``None``). Design:
 
-- Each tier carries ``(series key, bucket_ts, avg/min/max/sum/count)``.
 - Coarser tiers are computed FROM the previous tier's partials
   (sum+count re-aggregated), never by re-scanning raw data — at 10^12
   rows the raw scan is the dominant cost and must happen once.
   avg is re-derived as sum/count at every tier (exact, no avg-of-avgs).
 - ``bucket_ts`` labels the END of the bucket, matching the reference's
   end-of-interval convention (trace_formatter.py:12-15): the 30-min
-  bucket ending at 00:30 covers (00:00, 00:30].
+  bucket ending at 00:30 covers (00:00, 00:30], and the month bucket
+  ending 2024-02-01 00:00 covers January.
 - Aggregation is a plain ``groupBy`` -> Catalyst two-phase hash agg
   (map-side partial combine). On its own it shuffles on its grouping
   keys, and a partitioned catalog write then shuffles again on the
@@ -33,8 +40,6 @@ from pyspark.sql import functions as F
 
 TIER_SECONDS = {"30m": 1800, "1d": 86400}
 
-AGG_COLS = ["avg_value", "min_value", "max_value", "sum_value", "cnt_value"]
-
 # Optional exact partial sums: float summation is order-dependent, so a
 # re-run (or another engine) can disagree in the last ulp — visible
 # after rounding. Passing ``sum_cast="decimal(20,4)"`` sums exactly
@@ -44,10 +49,42 @@ AGG_COLS = ["avg_value", "min_value", "max_value", "sum_value", "cnt_value"]
 # keeps full double precision for arbitrary float traces.
 DEC = "decimal(20,4)"
 
+# A family's rule: the group keys it adds after (series, bucket_ts), and
+# its aggregates.
+Rule = tuple[list[Column], list[Column]]
+
 
 def _sum_expr(value_col: str, sum_cast: str | None):
     c = F.col(value_col)
     return F.sum(c.cast(sum_cast) if sum_cast else c)
+
+
+def _check_bin_width(bin_width: float) -> None:
+    if not bin_width > 0:
+        raise ValueError(f"bin width must be > 0, got {bin_width!r}")
+
+
+def agg_rule(value_col: str = "value", sum_cast: str | None = None) -> Rule:
+    """The ``agg`` family over raw rows: avg/min/max/sum/count of
+    ``value_col``, avg derived as sum / count; ``sum_cast`` as in
+    :data:`DEC`."""
+    return [], [
+        (_sum_expr(value_col, sum_cast).cast("double") / F.count(value_col)).alias("avg_value"),
+        F.min(value_col).alias("min_value"),
+        F.max(value_col).alias("max_value"),
+        _sum_expr(value_col, sum_cast).alias("sum_value"),
+        F.count(value_col).alias("cnt_value"),
+    ]
+
+
+def hist_rule(value_col: str = "value", bin_width: float = 0.5) -> Rule:
+    """The ``hist`` family over raw rows: the count per
+    ``bin = floor(value / bin_width)``. ``bin_width`` must be > 0."""
+    _check_bin_width(bin_width)
+    return (
+        [F.floor(F.col(value_col) / F.lit(bin_width)).cast("long").alias("bin")],
+        [F.count(F.lit(1)).alias("cnt")],
+    )
 
 
 def bucket_end(ts: Column, seconds: int) -> Column:
@@ -58,13 +95,48 @@ def bucket_end(ts: Column, seconds: int) -> Column:
     Exact integer math on microseconds — ``unix_timestamp`` truncates
     sub-second precision and float ceil rounds at boundaries, both of
     which mis-bucket points epsilon past a bucket edge."""
-    b = seconds * 1_000_000
     # session TZ is pinned UTC, so the tz<->ntz casts are wall-clock
     # identity; unix_micros requires TIMESTAMP, the engine standard is NTZ
     # explicit _ltz: with spark.sql.timestampType=TIMESTAMP_NTZ, the
     # plain "timestamp" cast string resolves to NTZ
-    e = F.unix_micros(ts.cast("timestamp_ltz")) + (b - 1)
+    return _end_of(F.unix_micros(ts.cast("timestamp_ltz")), seconds)
+
+
+def _end_of(micros: Column, seconds: int) -> Column:
+    b = seconds * 1_000_000
+    e = micros + (b - 1)
     return F.timestamp_micros(e - F.pmod(e, F.lit(b))).cast("timestamp_ntz")
+
+
+def _raw_tier(
+    df: DataFrame, rule: Rule, series_col: str, ts_col: str, seconds: int, by: Sequence[str]
+) -> DataFrame:
+    """Apply a family's ``rule`` to raw rows per (series, end-labelled
+    ``seconds`` bucket), after the leading keys ``by``."""
+    keys, aggs = rule
+    return df.groupBy(
+        *by,
+        F.col(series_col).alias("series"),
+        bucket_end(F.col(ts_col), seconds).alias("bucket_ts"),
+        *keys,
+    ).agg(*aggs)
+
+
+def _cascade(tier: DataFrame, seconds: int | None, rule: Rule) -> DataFrame:
+    """Re-aggregate ``tier`` to the coarser bucket that holds each of its
+    buckets: the one holding the finer bucket's last second (its label
+    minus 1 s), end-labelled. ``seconds=None`` is a calendar month,
+    labelled by the first instant of the next month."""
+    if seconds is None:
+        last = F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND")
+        coarser = F.to_timestamp(F.add_months(F.date_trunc("month", last), 1))
+    else:
+        # bucket_end of the same shift, taken on the epoch microseconds: an
+        # interval add on a timestamp costs more than the rest of the label
+        micros = F.unix_micros(F.col("bucket_ts").cast("timestamp_ltz"))
+        coarser = _end_of(micros - 1_000_000, seconds)
+    keys, aggs = rule
+    return tier.groupBy("series", coarser.alias("bucket_ts"), *keys).agg(*aggs)
 
 
 def rollup_raw(
@@ -76,75 +148,26 @@ def rollup_raw(
     sum_cast: str | None = None,
     by: Sequence[str] = (),
 ) -> DataFrame:
-    """Finest tier: raw points -> per-(series, bucket) aggregates.
-    ``by``: extra leading group keys, kept as output columns."""
-    return (
-        df.groupBy(
-            *by,
-            F.col(series_col).alias("series"),
-            bucket_end(F.col(ts_col), tier_seconds).alias("bucket_ts"),
-        )
-        .agg(
-            (
-                _sum_expr(value_col, sum_cast).cast("double")
-                / F.count(value_col)
-            ).alias("avg_value"),
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
-            _sum_expr(value_col, sum_cast).alias("sum_value"),
-            F.count(value_col).alias("cnt_value"),
-        )
-    )
+    """Finest tier: raw points -> per-(series, bucket) aggregates
+    (:func:`agg_rule`). ``by``: extra leading group keys, kept as output
+    columns."""
+    return _raw_tier(df, agg_rule(value_col, sum_cast), series_col, ts_col, tier_seconds, by)
 
 
-def rollup_cascade(tier: DataFrame, coarser_seconds: int) -> DataFrame:
+def rollup_cascade(tier: DataFrame, coarser_seconds: int | None) -> DataFrame:
     """Coarser tier FROM a finer tier: re-aggregate the partials.
+    ``coarser_seconds=None`` is the calendar-month tier.
 
     sum/count add exactly; min/max nest; avg = total sum / total count —
     identical to aggregating the raw data, at a fraction of the scan.
     """
-    return (
-        tier.groupBy(
-            "series",
-            bucket_end(F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND"), coarser_seconds).alias(
-                "bucket_ts"
-            ),
-        )
-        .agg(
-            (F.sum("sum_value").cast("double") / F.sum("cnt_value")).alias(
-                "avg_value"
-            ),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-            F.sum("sum_value").alias("sum_value"),
-            F.sum("cnt_value").alias("cnt_value"),
-        )
-    )
-
-
-def monthly_from_daily(daily: DataFrame) -> DataFrame:
-    """Month tier (calendar months are irregular — no fixed seconds).
-
-    Bucket label = first instant of the NEXT month (end-of-interval,
-    consistent with the other tiers): the bucket ending 2024-02-01 00:00
-    covers (2024-01-01 00:00, 2024-02-01 00:00].
-    """
-    # Daily bucket_ts is the END of the day; shift back 1s to find the
-    # month it belongs to, then label with the start of the next month.
-    month_start = F.date_trunc("month", F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND"))
-    month_end = F.to_timestamp(F.add_months(month_start, 1))
-    return (
-        daily.groupBy("series", month_end.alias("bucket_ts"))
-        .agg(
-            (F.sum("sum_value").cast("double") / F.sum("cnt_value")).alias(
-                "avg_value"
-            ),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-            F.sum("sum_value").alias("sum_value"),
-            F.sum("cnt_value").alias("cnt_value"),
-        )
-    )
+    return _cascade(tier, coarser_seconds, ([], [
+        (F.sum("sum_value").cast("double") / F.sum("cnt_value")).alias("avg_value"),
+        F.min("min_value").alias("min_value"),
+        F.max("max_value").alias("max_value"),
+        F.sum("sum_value").alias("sum_value"),
+        F.sum("cnt_value").alias("cnt_value"),
+    ]))
 
 
 def build_tiers(
@@ -168,7 +191,7 @@ def build_tiers(
     base = df.repartition(F.col(series_col))
     t30 = rollup_raw(base, series_col, ts_col, value_col, TIER_SECONDS["30m"], sum_cast)
     t1d = rollup_cascade(t30, TIER_SECONDS["1d"])
-    t1mo = monthly_from_daily(t1d)
+    t1mo = rollup_cascade(t1d, None)
     return {"agg_30m": t30, "agg_1d": t1d, "agg_1mo": t1mo}
 
 
@@ -207,36 +230,17 @@ def histogram_tier(
     two-phase groupBy (map-side combined); no UDF, no window. ``by`` as
     in :func:`rollup_raw`.
     """
-    return (
-        df.groupBy(
-            *by,
-            F.col(series_col).alias("series"),
-            bucket_end(F.col(ts_col), bucket_seconds).alias("bucket_ts"),
-            F.floor(F.col(value_col) / F.lit(bin_width)).cast("long").alias(
-                "bin"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return _raw_tier(df, hist_rule(value_col, bin_width), series_col, ts_col, bucket_seconds, by)
 
 
 def histogram_cascade(
-    tier: DataFrame, coarser_seconds: int
+    tier: DataFrame, coarser_seconds: int | None
 ) -> DataFrame:
     """Coarser histogram tier from a finer one: counts just add.
     Exactly equal to building the coarser histogram from raw data
     (the continuous-aggregate invariant, pinned by the
     ``histogram_rollup`` contract row)."""
-    return (
-        tier.groupBy(
-            "series",
-            bucket_end(F.col("bucket_ts"), coarser_seconds).alias(
-                "bucket_ts"
-            ),
-            "bin",
-        )
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return _cascade(tier, coarser_seconds, (["bin"], [F.sum("cnt").alias("cnt")]))
 
 
 def histogram_percentile(
@@ -276,20 +280,14 @@ def distinct_tier(
     standard trade every 100 TB cardinality pipeline makes. ``by`` as
     in :func:`rollup_raw`.
     """
-    return df.groupBy(
-        *by,
-        F.col(series_col).alias("series"),
-        bucket_end(F.col(ts_col), bucket_seconds).alias("bucket_ts"),
-    ).agg(F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("hll"))
+    rule = [], [F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("hll")]
+    return _raw_tier(df, rule, series_col, ts_col, bucket_seconds, by)
 
 
-def distinct_cascade(tier: DataFrame, coarser_seconds: int) -> DataFrame:
+def distinct_cascade(tier: DataFrame, coarser_seconds: int | None) -> DataFrame:
     """Coarser distinct tier from a finer one: sketch union (lossless —
     exactly the sketch that would have been built from raw)."""
-    return tier.groupBy(
-        "series",
-        bucket_end(F.col("bucket_ts"), coarser_seconds).alias("bucket_ts"),
-    ).agg(F.hll_union_agg("hll").alias("hll"))
+    return _cascade(tier, coarser_seconds, ([], [F.hll_union_agg("hll").alias("hll")]))
 
 
 def distinct_estimate(tier: DataFrame) -> DataFrame:
@@ -312,8 +310,9 @@ def histogram_percentiles(
     Deterministic rule per q (exact integer math, oracle-able): the
     answer bin is the smallest bin whose cumulative count reaches
     ``ceil(q * total)``; the estimate is that bin's midpoint. Each q
-    must lie in [0, 1]. One window over (series, bucket) ordered by bin
-    (running cumsum + whole-partition total share the sort); the per-q
+    must lie in [0, 1], and ``bin_width`` (the tier's) must be > 0. One
+    window over (series, bucket) ordered by bin (running cumsum +
+    whole-partition total share the sort); the per-q
     answers are conditional ``min`` aggregates over the SAME (series,
     bucket) grouping the window clusters on, so the whole plan keeps the
     single exchange; the long (series, bucket_ts, q, bin, estimate)
@@ -322,6 +321,7 @@ def histogram_percentiles(
     bad = [q for q in qs if not 0 <= q <= 1]
     if bad:
         raise ValueError(f"percentiles must lie in [0, 1], got {bad}")
+    _check_bin_width(bin_width)
     part = Window.partitionBy("series", "bucket_ts")
     w = part.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -4,7 +4,9 @@ and per-partition lineage — snapshot-diff incremental processing.
 Stage DAG: one stage per row of ``tiers.TIERS`` whose family is
 enabled, reading the row's input tier (the raw table is scanned once
 per raw tier; every coarser tier reads the finer tier's stored
-partials)::
+partials). A raw tier applies its family's raw rule, a cascade its
+family's one cascade rule (``tiers.CASCADE``) at the row's resolution,
+seconds or a calendar month; both live in operators/rollup.py::
 
     pages (raw, day_bucket x url_bucket partitions)
       ├─ agg_30m   groupBy(url, 30m bucket)             [diff vs pages]
@@ -49,7 +51,10 @@ partition overwrite); unchanged and expired partitions are untouched, so
 - late rewrites of OLD raw days are detected (fingerprint change), not
   just appends — a plain high-watermark would miss them.
 
-An unpartitioned output (agg_1mo) is rebuilt from its full input.
+A changed input partition rewrites the output partition holding its
+prefix (``tiers.PARTITIONS``): the same day for a raw tier, the whole
+month for a 1d tier; blocks_30m rewrites the blocks overlapping it. An
+unpartitioned output (agg_1mo) is rebuilt from its full input.
 
 No driver-side per-partition loops: the diff is O(partitions) metadata;
 within a stage Spark's scheduler owns parallelism.
@@ -71,14 +76,12 @@ from isp_trace_parser_spark.operators import codec, rollup
 from isp_trace_parser_spark.operators.retention import RetentionPolicy, apply_retention
 from isp_trace_parser_spark.plans.partitioning import (
     DEFAULT_URL_BUCKETS,
-    day_bucket,
-    month_bucket,
     with_partition_keys,
     write_salt,
     write_salt_buckets,
 )
 from isp_trace_parser_spark.sources.catalog import Catalog
-from isp_trace_parser_spark.tiers import CASCADE, TIERS, Tier
+from isp_trace_parser_spark.tiers import CASCADE, PARTITIONS, TIERS, Tier
 
 
 @dataclass
@@ -134,8 +137,6 @@ def _changed_partitions(
 
 
 _SALT = "_salt"
-# partition column -> its value for a bucket labelled by a timestamp
-_PARTITION_OF = {"day_bucket": day_bucket, "month_bucket": month_bucket}
 _DAY_S = 86400
 _EPOCH = datetime.date(1970, 1, 1)
 
@@ -150,7 +151,8 @@ class Stage:
     ``expand`` maps the changed input partitions of an incremental run
     to (a predicate on the input partitions to read, the output
     partitions to rewrite); without it a changed input partition
-    rewrites the output partition of the same value."""
+    rewrites the output partition that holds its prefix
+    (``Tier.rewrites``)."""
 
     tier: Tier
     input: str
@@ -160,13 +162,6 @@ class Stage:
     @property
     def name(self) -> str:
         return self.tier.name
-
-
-def _months(changed: list[str]) -> tuple[Callable[[str], bool], list[str]]:
-    """Day-level changes rebuild their whole months from the retained
-    finer tier."""
-    months = sorted({d[:7] for d in changed})
-    return (lambda v: v[:7] in months), months
 
 
 def _day(seconds: int) -> str:
@@ -216,9 +211,7 @@ def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
         return None
     keep = None  # full recompute -> full read
     if changed is not None and t.partition_col:
-        keep, out_values = (
-            st.expand(changed) if st.expand else (set(changed).__contains__, changed)
-        )
+        keep, out_values = (st.expand or t.rewrites)(changed)
     out = st.build(cat.read(st.input, partitions=keep))
     if st.expand and keep is not None:
         # an expanded read can reach rows of output partitions this run
@@ -362,7 +355,7 @@ def run_rollup_pipeline(
         already clusters every group), then drop the salt. The write
         then needs no shuffle of its own."""
         build, col, param = raw_builders[t.family]
-        part = _PARTITION_OF[t.partition_col]
+        part = PARTITIONS[t.partition_col].of
 
         def _build(src: DataFrame) -> DataFrame:
             keyed = (
@@ -378,29 +371,26 @@ def run_rollup_pipeline(
         return _build
 
     def stage(t: Tier) -> Stage:
-        src = t.input or raw_table
         if t.input is None:
-            return Stage(t, src, raw_tier(t))
+            return Stage(t, raw_table, raw_tier(t))
         if t.family == "blocks":
             span = codec.block_span_seconds(block_size)
             # codec.encode_blocks is looked up when the stage runs
             return Stage(
-                t, src,
+                t, t.input,
                 lambda df: codec.encode_blocks(
                     df, "series", "bucket_ts", "avg_value", block=block_size
                 ).withColumn(t.partition_col, F.to_date("block_start")),
                 lambda changed: _block_partitions(changed, span),
             )
-        if t.seconds is None:
-            return Stage(t, src, lambda df: rollup.monthly_from_daily(df.drop(t.input_col)))
-        return Stage(
-            t, src,
-            lambda df: CASCADE[t.family](df.drop(t.input_col), t.seconds).withColumn(
-                t.partition_col, _PARTITION_OF[t.partition_col]("bucket_ts")
-            ),
-            # a tier partitioned coarser than its input rebuilds whole months
-            _months if t.partition_col != t.input_col else None,
-        )
+
+        def cascade(df: DataFrame) -> DataFrame:
+            out = CASCADE[t.family](df.drop(t.input_col), t.seconds)
+            if t.partition_col is None:
+                return out
+            return out.withColumn(t.partition_col, PARTITIONS[t.partition_col].of("bucket_ts"))
+
+        return Stage(t, t.input, cascade)
 
     stages = [stage(t) for t in TIERS if enabled[t.family]]
 

@@ -1,15 +1,16 @@
-"""Structured-Streaming surface for the 30-minute tier.
+"""Structured-Streaming surface for the 30-minute tiers.
 
 The reference is pure batch (SURVEY §2.11); this is the incremental
-variant for live crawls: the same end-of-interval 30m aggregation as
-``operators.rollup.rollup_raw``, expressed as a watermarked streaming
-aggregation. Late rows inside the watermark update their bucket; rows
-later than the watermark are dropped (the reference has no late-data
-semantics to honor — it assumes complete input).
+variant for live crawls: the batch tiers' own rules
+(``operators.rollup.agg_rule`` and ``hist_rule``) applied as a
+watermarked streaming aggregation over 30-minute windows. Late rows
+inside the watermark update their bucket; rows later than the watermark
+are dropped (the reference has no late-data semantics to honor — it
+assumes complete input).
 
 Batch/stream parity is tested by feeding the same rows through both
 paths (tests/test_streaming.py): the streaming result in complete/append
-mode must equal the batch rollup.
+mode must equal the batch tier, column for column.
 """
 
 from __future__ import annotations
@@ -17,10 +18,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from isp_trace_parser_spark.operators import rollup
 
-def _sum(value_col: str, sum_cast: str | None):
-    c = F.col(value_col)
-    return F.sum(c.cast(sum_cast) if sum_cast else c)
+
+def _windowed(
+    stream: DataFrame, rule: rollup.Rule, series_col: str, ts_col: str, watermark: str
+) -> DataFrame:
+    """Apply a family's ``rule`` per (series, 30m tumbling window) under
+    ``watermark``, labelled like the batch tier's ``bucket_end``.
+
+    Uses ``F.window``: streaming state requires the built-in window
+    column for retention."""
+    # watermarks require TIMESTAMP (ltz); UTC session makes the ntz<->ltz
+    # casts wall-clock identity, and the label is cast back to the
+    # engine-standard ntz below
+    keys, aggs = rule
+    out = (
+        stream.withColumn("_ts_ltz", F.col(ts_col).cast("timestamp_ltz"))
+        .withWatermark("_ts_ltz", watermark)
+        .groupBy(
+            F.col(series_col).alias("series"),
+            # shift 1us back so points exactly on a boundary label their
+            # own bucket (end-of-interval (start, end]), then take the
+            # window END as the label
+            F.window(F.col("_ts_ltz") - F.expr("INTERVAL 1 MICROSECOND"), "30 minutes"),
+            *keys,
+        )
+        .agg(*aggs)
+    )
+    return out.select(
+        "series",
+        F.col("window.end").cast("timestamp_ntz").alias("bucket_ts"),
+        *[c for c in out.columns if c not in ("series", "window")],
+    )
 
 
 def streaming_rollup_30m(
@@ -31,50 +61,11 @@ def streaming_rollup_30m(
     watermark: str = "1 hour",
     sum_cast: str | None = None,
 ) -> DataFrame:
-    """Streaming 30m tier: tumbling window + watermark.
-
-    Uses ``F.window`` (streaming state requires the built-in window
-    column for retention); the bucket label is the window END —
-    identical labels to the batch tier's ``bucket_end``.
-    """
-    # watermarks require TIMESTAMP (ltz); UTC session makes the ntz<->ltz
-    # casts wall-clock identity, and the label is cast back to the
-    # engine-standard ntz below
-    return (
-        stream.withColumn("_ts_ltz", F.col(ts_col).cast("timestamp_ltz"))
-        .withWatermark("_ts_ltz", watermark)
-        .groupBy(
-            F.col(series_col).alias("series"),
-            F.window(
-                # shift 1us back so points exactly on a boundary label
-                # their own bucket (end-of-interval (start, end]), then
-                # take the window END as the label
-                F.col("_ts_ltz") - F.expr("INTERVAL 1 MICROSECOND"),
-                "30 minutes",
-            ),
-        )
-        .agg(
-            # sum_cast (e.g. decimal) mirrors operators.rollup._sum_expr:
-            # exact order-independent sums so streamed partials hash
-            # identically to batch/oracle results
-            (_sum(value_col, sum_cast).cast("double") / F.count(value_col)).alias(
-                "avg_value"
-            ),
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
-            _sum(value_col, sum_cast).alias("sum_value"),
-            F.count(value_col).alias("cnt_value"),
-        )
-        .select(
-            "series",
-            F.col("window.end").cast("timestamp_ntz").alias("bucket_ts"),
-            "avg_value",
-            "min_value",
-            "max_value",
-            "sum_value",
-            "cnt_value",
-        )
-    )
+    """Streaming 30m ``agg`` tier: the columns of
+    ``rollup.rollup_raw``; ``sum_cast`` (e.g. ``rollup.DEC``) gives
+    exact order-independent sums, so streamed partials hash identically
+    to batch/oracle results."""
+    return _windowed(stream, rollup.agg_rule(value_col, sum_cast), series_col, ts_col, watermark)
 
 
 def streaming_histogram_30m(
@@ -92,26 +83,6 @@ def streaming_histogram_30m(
     dashboards current without re-scanning raw data. Counts are exact
     integers, so streamed state equals the batch tier bit-for-bit, and
     the output can be landed into ``hist_30m`` and cascaded/served by
-    the same TierStore.percentile path.
+    the same TierStore.percentile path. ``bin_width`` must be > 0.
     """
-    return (
-        stream.withColumn("_ts_ltz", F.col(ts_col).cast("timestamp_ltz"))
-        .withWatermark("_ts_ltz", watermark)
-        .groupBy(
-            F.col(series_col).alias("series"),
-            F.window(
-                F.col("_ts_ltz") - F.expr("INTERVAL 1 MICROSECOND"),
-                "30 minutes",
-            ),
-            F.floor(F.col(value_col) / F.lit(bin_width))
-            .cast("long")
-            .alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "series",
-            F.col("window.end").cast("timestamp_ntz").alias("bucket_ts"),
-            "bin",
-            "cnt",
-        )
-    )
+    return _windowed(stream, rollup.hist_rule(value_col, bin_width), series_col, ts_col, watermark)

@@ -15,14 +15,31 @@ from __future__ import annotations
 
 import datetime
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column
 
 from isp_trace_parser_spark.operators import rollup
+from isp_trace_parser_spark.plans import partitioning
 
 # the raw table's top-level partition column (pipeline.ingest_pages)
 RAW_PARTITION_COL = "day_bucket"
 
-# partition column -> length of its values' ISO-date prefix
-_PARTITION_WIDTH = {"day_bucket": 10, "month_bucket": 7}
+
+class Partition(NamedTuple):
+    """A partition column's encoding: ``of`` is the Spark rule for the
+    value that holds an end-labelled bucket, ``width`` the length of its
+    values' ISO-date prefix (a day's value starts with its month's)."""
+
+    of: Callable[[Column | str], Column]
+    width: int
+
+
+# partition column -> its encoding
+PARTITIONS = {
+    "day_bucket": Partition(partitioning.day_bucket, 10),
+    "month_bucket": Partition(partitioning.month_bucket, 7),
+}
 
 
 @dataclass(frozen=True)
@@ -53,7 +70,16 @@ class Tier:
     def partition_bound(self, ts: datetime.datetime | None) -> str | None:
         """The value of this tier's partition column that holds the day
         of ``ts`` (None: an open bound)."""
-        return None if ts is None else ts.date().isoformat()[: _PARTITION_WIDTH[self.partition_col]]
+        return None if ts is None else ts.date().isoformat()[: PARTITIONS[self.partition_col].width]
+
+    def rewrites(self, changed: list[str]) -> tuple[Callable[[str], bool], list[str]]:
+        """(a predicate on the input partitions to read, the partitions
+        to rewrite) for changed input partitions: each rewrites the one
+        that holds its prefix, read from every input sharing it."""
+        w = PARTITIONS[self.partition_col].width
+        out = sorted({v[:w] for v in changed})
+        keep = set(out)
+        return (lambda v: v[:w] in keep), out
 
 
 _KEYS = ("series", "bucket_ts")
@@ -73,8 +99,9 @@ TIERS: tuple[Tier, ...] = (
 
 BY_NAME = {t.name: t for t in TIERS}
 
-# family -> the rule that re-aggregates a tier to a coarser whole number
-# of seconds (the pipeline's 1d stages and the router's re-aggregation)
+# family -> the rule that re-aggregates a tier to a coarser bucket, a
+# whole number of seconds or (None) a calendar month: the pipeline's
+# cascade stages and the router's re-aggregation
 CASCADE = {
     "agg": rollup.rollup_cascade,
     "hist": rollup.histogram_cascade,

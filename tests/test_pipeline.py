@@ -103,6 +103,25 @@ def test_retention_expires_old_partitions(spark, cat):
     assert cat.list_partitions("agg_30m", "day_bucket")[0] == "2024-01-06"
 
 
+@pytest.mark.parametrize("field", ["raw_keep_days", "t30_keep_days", "t1d_keep_months"])
+def test_retention_policy_rejects_negative_horizon(field):
+    """A negative horizon would expire the current day's (month's)
+    partitions too, irreversibly; zero stays valid."""
+    RetentionPolicy(**{field: 0})
+    with pytest.raises(ValueError, match=field):
+        RetentionPolicy(**{field: -1})
+
+
+@pytest.mark.parametrize("bin_width", [0, -1.0])
+def test_pipeline_rejects_non_positive_bin_width(spark, cat, bin_width):
+    """The histogram stage rejects a bin width <= 0 instead of storing
+    mirrored bins (negative) or failing inside a Spark task (zero)."""
+    ingest_pages(cat, synth.pages(spark, n_urls=2, n_slots=48), n_buckets=1)
+    with pytest.raises(ValueError, match="bin width"):
+        run_rollup_pipeline(spark, cat, encode_blocks=False, histogram_bin_width=bin_width)
+    assert not cat.exists("hist_30m")
+
+
 def test_incremental_append_preserves_history(spark, cat):
     import pyspark.sql.functions as F
 

@@ -119,11 +119,12 @@ def test_mean_merge_matches_reference_a1(spark):
     np.testing.assert_allclose(merged["value"], oracle["value"], rtol=1e-12)
 
 
-def test_histogram_cascade_equals_direct(spark):
+@pytest.mark.parametrize("seconds", [7200, 86400, 604800])
+def test_histogram_cascade_equals_direct(spark, seconds):
     """Continuous-aggregate invariant for the distribution sketch:
-    summing 30m histogram bins to 1d equals histogramming raw data at
-    1d directly, and the plan is a pure two-phase agg (partial +
-    final, no window/join)."""
+    summing 30m histogram bins to a coarser width equals histogramming
+    raw data at that width directly, and the plan is a pure two-phase
+    agg (partial + final, no window/join)."""
     from isp_trace_parser_spark import synth
     from isp_trace_parser_spark.operators.rollup import (
         histogram_cascade,
@@ -133,13 +134,13 @@ def test_histogram_cascade_equals_direct(spark):
     pages = synth.pages(spark, n_urls=5, n_slots=48 * 3, gap_pct=10)
     t30 = histogram_tier(pages, bucket_seconds=1800, bin_width=0.5)
     merged = (
-        histogram_cascade(t30, 86400)
+        histogram_cascade(t30, seconds)
         .toPandas()
         .sort_values(["series", "bucket_ts", "bin"])
         .reset_index(drop=True)
     )
     direct = (
-        histogram_tier(pages, bucket_seconds=86400, bin_width=0.5)
+        histogram_tier(pages, bucket_seconds=seconds, bin_width=0.5)
         .toPandas()
         .sort_values(["series", "bucket_ts", "bin"])
         .reset_index(drop=True)
@@ -182,11 +183,12 @@ def test_histogram_percentile_rule_and_plan(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_distinct_tier_cascade_equals_direct(spark):
+@pytest.mark.parametrize("seconds", [7200, 86400, 604800])
+def test_distinct_tier_cascade_equals_direct(spark, seconds):
     """Continuous-aggregate invariant for cardinality: unioning 30m HLL
-    sketches up to 1d must equal sketching the raw stream at 1d
-    directly, and at small per-cell cardinality (sparse-mode sketches)
-    both equal the exact distinct count."""
+    sketches up to a coarser width must equal sketching the raw stream
+    at that width directly, and at small per-cell cardinality
+    (sparse-mode sketches) both equal the exact distinct count."""
     from pyspark.sql import functions as F
 
     from isp_trace_parser_spark import synth
@@ -205,14 +207,14 @@ def test_distinct_tier_cascade_equals_direct(spark):
         F.col("url").alias("visitor"),
     )
     t30 = distinct_tier(obs, "g", "warc_ts", "visitor", 1800, 14)
-    via_tier = distinct_estimate(distinct_cascade(t30, 86400)).toPandas()
+    via_tier = distinct_estimate(distinct_cascade(t30, seconds)).toPandas()
     direct = distinct_estimate(
-        distinct_tier(obs, "g", "warc_ts", "visitor", 86400, 14)
+        distinct_tier(obs, "g", "warc_ts", "visitor", seconds, 14)
     ).toPandas()
     exact = (
         obs.groupBy(
             F.col("g").alias("series"),
-            rollup.bucket_end(F.col("warc_ts"), 86400).alias("bucket_ts"),
+            rollup.bucket_end(F.col("warc_ts"), seconds).alias("bucket_ts"),
         )
         .agg(F.countDistinct("visitor").alias("n_exact"))
         .toPandas()
@@ -253,3 +255,16 @@ def test_histogram_percentiles_single_extra_exchange(spark):
             .sort_index()
         )
         assert (single == sub).all()
+
+
+@pytest.mark.parametrize("bin_width", [0, -1.0])
+def test_histogram_rejects_non_positive_bin_width(spark, bin_width):
+    """A bin width <= 0 is rejected when the plan is built: 0 used to
+    fail inside a Spark task with DIVIDE_BY_ZERO, and a negative width
+    silently mirrored the bins (p95 of 0..99 read 4.5, not 94.5)."""
+    pages = synth.pages(spark, n_urls=2, n_slots=4)
+    with pytest.raises(ValueError, match="bin width"):
+        rollup.histogram_tier(pages, bin_width=bin_width)
+    tier = rollup.histogram_tier(pages, bin_width=0.5)
+    with pytest.raises(ValueError, match="bin width"):
+        rollup.histogram_percentiles(tier, [0.95], bin_width)

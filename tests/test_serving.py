@@ -433,3 +433,14 @@ def test_percentiles_reject_q_outside_unit_interval(spark, store, q):
         TierStore(cat).percentiles([0.5, q], resolution="2h")
     with pytest.raises(ValueError, match=r"\[0, 1\]"):
         histogram_percentiles(cat.read("hist_30m"), [q])
+
+
+@pytest.mark.parametrize("bin_width", [0, -1.0])
+def test_percentiles_reject_non_positive_bin_width(spark, store, bin_width):
+    """A bin width <= 0 fails at the call: a negative one used to turn
+    the midpoint estimates negative, and zero made every estimate 0."""
+    cat, _ = store
+    with pytest.raises(ValueError, match="bin width"):
+        TierStore(cat).percentile(0.95, resolution="2h", bin_width=bin_width)
+    with pytest.raises(ValueError, match="bin width"):
+        TierStore(cat).percentiles([0.5, 0.95], bin_width=bin_width)

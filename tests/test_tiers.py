@@ -1,6 +1,9 @@
 """The tier table is the one place tier names live: the modules that
 derive the stage DAG, the serving router and the retention targets
-from it must not spell a tier's name themselves."""
+from it must not spell a tier's name themselves. Likewise
+operators/rollup.py is the one place aggregation rules live: the
+modules that build or serve tiers through it call no aggregate
+function themselves."""
 
 from __future__ import annotations
 
@@ -41,6 +44,24 @@ def test_derived_modules_spell_no_tier_name(module):
         and node.value in names
     ]
     assert found == [], f"{module} names tiers outside tiers.TIERS: {found}"
+
+
+AGGREGATES = {"sum", "count", "min", "max", "avg", "hll_sketch_agg", "hll_union_agg"}
+
+
+@pytest.mark.parametrize("module", ["pipeline.py", "serving.py", "streaming/rollup_stream.py"])
+def test_tier_builders_call_no_aggregate(module):
+    tree = ast.parse((PKG / module).read_text())
+    found = [
+        (node.lineno, node.func.attr)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+        and node.func.attr in AGGREGATES
+    ]
+    assert found == [], f"{module} aggregates outside operators/rollup.py: {found}"
 
 
 def test_every_tier_input_is_declared_before_it():
