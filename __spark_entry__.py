@@ -28,6 +28,7 @@ from isp_trace_parser_spark.operators.rollup import (
     rollup_cascade,
     rollup_raw,
 )
+from isp_trace_parser_spark.plans.partitioning import day_bucket
 
 SEC_30M = 1800
 SEC_1D = 86400
@@ -2197,7 +2198,7 @@ def q_incremental_rollup(spark, sf_dir):
     from isp_trace_parser_spark.sources.catalog import Catalog
 
     pages = _event_pages(spark, sf_dir)
-    cut = F.to_date(F.col("warc_ts") - F.expr("INTERVAL 1 SECOND"))
+    cut = day_bucket("warc_ts")
     cat = Catalog(spark, tempfile.mkdtemp(prefix="incr_wh_") + "/wh")
     ingest_pages(
         cat,
@@ -2233,7 +2234,7 @@ def q_late_rewrite_rollup(spark, sf_dir):
     from isp_trace_parser_spark.sources.catalog import Catalog
 
     pages = _event_pages(spark, sf_dir)
-    day = F.to_date(F.col("warc_ts") - F.expr("INTERVAL 1 SECOND"))
+    day = day_bucket("warc_ts")
     cat = Catalog(spark, _clone_pipelined(spark, sf_dir, "rewrite_wh_"))
     rewritten = pages.where(day == F.lit("2024-01-10")).withColumn(
         "value", F.col("value") * 2
@@ -3833,7 +3834,8 @@ def oracle_sql() -> dict[str, str]:
     # Tiered retention: recompute every tier's post-expiry contents from
     # raw events. Cutoffs mirror RetentionPolicy(raw=5d, 30m=15d, 1d=0mo)
     # at now=2024-01-31; day_bucket uses the end-of-period convention
-    # (ts - 1s), identical to plans/partitioning.day_bucket.
+    # (ts - 1s), which agrees with plans/partitioning.day_bucket (the
+    # 1 us rule) on every event outside the first second of a day.
     b30us, b1dus = SEC_30M * 1_000_000, SEC_1D * 1_000_000
     sqls["tiered_retention"] = f"""
         WITH raw AS (

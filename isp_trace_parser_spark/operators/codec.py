@@ -55,10 +55,12 @@ from pyspark.sql.types import (
     DoubleType,
 )
 
+from isp_trace_parser_spark.operators import rollup
+
 _HEADER = struct.Struct("<IqqBBBQ")
 
-# the duration units Spark's F.window (and therefore encode_blocks)
-# accepts; anything else must fail loud rather than mis-prune
+# the duration units of an encode_blocks span (Spark's F.window
+# vocabulary); anything else must fail loud rather than mis-prune
 _SPAN_RE = re.compile(
     r"^\s*(\d+)\s*(week|day|hour|minute|second)s?\s*$", re.IGNORECASE
 )
@@ -322,9 +324,7 @@ def encode_blocks(
     """
     keyed = df.select(
         F.col(series_col).alias("series"),
-        F.window(F.col(ts_col) - F.expr("INTERVAL 1 SECOND"), block)["start"].alias(
-            "block_start"
-        ),
+        rollup.bucket_start(F.col(ts_col), block_span_seconds(block)).alias("block_start"),
         F.col(ts_col).alias("ts"),
         F.col(value_col).cast("double").alias("value"),
     )

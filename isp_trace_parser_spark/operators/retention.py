@@ -34,7 +34,8 @@ from dataclasses import dataclass
 from typing import Any
 
 from isp_trace_parser_spark.sources.catalog import Catalog
-from isp_trace_parser_spark.tiers import RAW_PARTITION_COL, TIERS
+from isp_trace_parser_spark.operators import rollup
+from isp_trace_parser_spark.tiers import PARTITIONS, RAW_PARTITION_COL, TIERS
 
 
 @dataclass
@@ -85,12 +86,10 @@ def apply_retention(
 
 def _cutoff(now: datetime.datetime, keep: int, col: str) -> str:
     """The first partition value a table partitioned by ``col`` keeps:
-    ``keep`` days back, or ``keep`` whole months back for a
-    month-partitioned table."""
-    if col == "month_bucket":
-        m = now.year * 12 + (now.month - 1) - keep
-        return f"{m // 12:04d}-{m % 12 + 1:02d}"
-    return (now - datetime.timedelta(days=keep)).strftime("%Y-%m-%d")
+    ``keep`` partitions (days or months) before the one ``now`` falls in
+    by the calendar (``now`` is an instant, not a bucket label)."""
+    enc = PARTITIONS[col]
+    return enc.value(rollup.bucket_label(enc.start(enc.value(now)), enc.seconds, -keep))
 
 
 def _expired(

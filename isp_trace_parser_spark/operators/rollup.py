@@ -33,6 +33,7 @@ calendar month (``None``). Design:
 
 from __future__ import annotations
 
+import datetime
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -87,10 +88,17 @@ def hist_rule(value_col: str = "value", bin_width: float = 0.5) -> Rule:
     )
 
 
-def bucket_end(ts: Column, seconds: int) -> Column:
-    """END-of-interval bucket label: smallest multiple of ``seconds``
-    >= ts (half-open (start, end] semantics, reference get_data.py:80-82
-    and trace_formatter end-of-period convention).
+def dist_rule(key_col: str = "user_id", lgk: int = 14) -> Rule:
+    """The ``dist`` family over raw rows: an HLL sketch of ``key_col``."""
+    return [], [F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("hll")]
+
+
+def bucket_end(ts: Column, seconds: int | None) -> Column:
+    """END-of-interval bucket label, the engine's one time rule: the
+    smallest multiple of ``seconds`` >= ts (half-open (start, end]
+    semantics, reference get_data.py:80-82 and trace_formatter
+    end-of-period convention). ``seconds=None`` is a calendar month,
+    labelled by the first instant of the next month.
 
     Exact integer math on microseconds — ``unix_timestamp`` truncates
     sub-second precision and float ceil rounds at boundaries, both of
@@ -99,16 +107,49 @@ def bucket_end(ts: Column, seconds: int) -> Column:
     # identity; unix_micros requires TIMESTAMP, the engine standard is NTZ
     # explicit _ltz: with spark.sql.timestampType=TIMESTAMP_NTZ, the
     # plain "timestamp" cast string resolves to NTZ
-    return _end_of(F.unix_micros(ts.cast("timestamp_ltz")), seconds)
+    micros = F.unix_micros(ts.cast("timestamp_ltz"))
+    if seconds is None:
+        last = F.timestamp_micros(micros - 1)
+        return F.to_timestamp(F.add_months(F.date_trunc("month", last), 1))
+    return _label(micros, seconds)
 
 
-def _end_of(micros: Column, seconds: int) -> Column:
+def bucket_start(ts: Column, seconds: int) -> Column:
+    """The start of the bucket holding ``ts``: the previous label."""
+    return _label(F.unix_micros(ts.cast("timestamp_ltz")), seconds, -1)
+
+
+def _label(micros: Column, seconds: int, n: int = 0) -> Column:
     b = seconds * 1_000_000
-    e = micros + (b - 1)
+    e = micros + ((n + 1) * b - 1)
     return F.timestamp_micros(e - F.pmod(e, F.lit(b))).cast("timestamp_ntz")
 
 
-def _raw_tier(
+# the rule's Python twin, for planning over datetimes
+_UNIX_EPOCH = datetime.datetime(1970, 1, 1)
+_US = datetime.timedelta(microseconds=1)
+
+
+def bucket_label(t: datetime.datetime, seconds: int | None, n: int = 0) -> datetime.datetime:
+    """:func:`bucket_end` of an instant ``t``: ``n=-1`` gives the start
+    of the bucket holding ``t``, and ``n=1`` at a bucket's start gives
+    its end (a start is the label of the bucket before)."""
+    if seconds is None:
+        last = t - _US
+        month = last.year * 12 + last.month + n  # the label's, 0-based
+        return datetime.datetime(month // 12, month % 12 + 1, 1)
+    w = seconds * 1_000_000
+    return _UNIX_EPOCH + _US * ((-(-((t - _UNIX_EPOCH) // _US) // w) + n) * w)
+
+
+def overlapping(lo: datetime.datetime | None, hi: datetime.datetime | None, seconds: int | None):
+    """The starts of the first and the last bucket overlapping
+    ``(lo, hi]``: those holding the instant after ``lo``, and ``hi``. A
+    None (open) bound stays None."""
+    return lo and bucket_label(lo + _US, seconds, -1), hi and bucket_label(hi, seconds, -1)
+
+
+def raw_tier(
     df: DataFrame, rule: Rule, series_col: str, ts_col: str, seconds: int, by: Sequence[str]
 ) -> DataFrame:
     """Apply a family's ``rule`` to raw rows per (series, end-labelled
@@ -124,18 +165,10 @@ def _raw_tier(
 
 def _cascade(tier: DataFrame, seconds: int | None, rule: Rule) -> DataFrame:
     """Re-aggregate ``tier`` to the coarser bucket that holds each of its
-    buckets: the one holding the finer bucket's last second (its label
-    minus 1 s), end-labelled. ``seconds=None`` is a calendar month,
-    labelled by the first instant of the next month."""
-    if seconds is None:
-        last = F.col("bucket_ts") - F.expr("INTERVAL 1 SECOND")
-        coarser = F.to_timestamp(F.add_months(F.date_trunc("month", last), 1))
-    else:
-        # bucket_end of the same shift, taken on the epoch microseconds: an
-        # interval add on a timestamp costs more than the rest of the label
-        micros = F.unix_micros(F.col("bucket_ts").cast("timestamp_ltz"))
-        coarser = _end_of(micros - 1_000_000, seconds)
+    buckets: the one holding its label, as :func:`bucket_end` gives it
+    (a finer bucket ends on a coarser bucket's edge or inside it)."""
     keys, aggs = rule
+    coarser = bucket_end(F.col("bucket_ts"), seconds)
     return tier.groupBy("series", coarser.alias("bucket_ts"), *keys).agg(*aggs)
 
 
@@ -151,7 +184,7 @@ def rollup_raw(
     """Finest tier: raw points -> per-(series, bucket) aggregates
     (:func:`agg_rule`). ``by``: extra leading group keys, kept as output
     columns."""
-    return _raw_tier(df, agg_rule(value_col, sum_cast), series_col, ts_col, tier_seconds, by)
+    return raw_tier(df, agg_rule(value_col, sum_cast), series_col, ts_col, tier_seconds, by)
 
 
 def rollup_cascade(tier: DataFrame, coarser_seconds: int | None) -> DataFrame:
@@ -230,7 +263,7 @@ def histogram_tier(
     two-phase groupBy (map-side combined); no UDF, no window. ``by`` as
     in :func:`rollup_raw`.
     """
-    return _raw_tier(df, hist_rule(value_col, bin_width), series_col, ts_col, bucket_seconds, by)
+    return raw_tier(df, hist_rule(value_col, bin_width), series_col, ts_col, bucket_seconds, by)
 
 
 def histogram_cascade(
@@ -280,8 +313,7 @@ def distinct_tier(
     standard trade every 100 TB cardinality pipeline makes. ``by`` as
     in :func:`rollup_raw`.
     """
-    rule = [], [F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("hll")]
-    return _raw_tier(df, rule, series_col, ts_col, bucket_seconds, by)
+    return raw_tier(df, dist_rule(key_col, lgk), series_col, ts_col, bucket_seconds, by)
 
 
 def distinct_cascade(tier: DataFrame, coarser_seconds: int | None) -> DataFrame:

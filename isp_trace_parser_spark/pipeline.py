@@ -51,10 +51,10 @@ partition overwrite); unchanged and expired partitions are untouched, so
 - late rewrites of OLD raw days are detected (fingerprint change), not
   just appends — a plain high-watermark would miss them.
 
-A changed input partition rewrites the output partition holding its
-prefix (``tiers.PARTITIONS``): the same day for a raw tier, the whole
-month for a 1d tier; blocks_30m rewrites the blocks overlapping it. An
-unpartitioned output (agg_1mo) is rebuilt from its full input.
+A changed input partition rewrites the output partitions whose buckets
+(``rollup.bucket_end``) overlap it (``Tier.rewrites``): the same day for
+a raw tier, the whole month for a 1d tier, the blocks overlapping it for
+blocks_30m. An unpartitioned output (agg_1mo) is rebuilt in full.
 
 No driver-side per-partition loops: the diff is O(partitions) metadata;
 within a stage Spark's scheduler owns parallelism.
@@ -64,8 +64,10 @@ from __future__ import annotations
 
 import datetime
 import hashlib
+import operator
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from functools import reduce
 from typing import Any, Callable
 
 from pyspark import inheritable_thread_target
@@ -137,8 +139,6 @@ def _changed_partitions(
 
 
 _SALT = "_salt"
-_DAY_S = 86400
-_EPOCH = datetime.date(1970, 1, 1)
 
 
 @dataclass(frozen=True)
@@ -146,59 +146,16 @@ class Stage:
     """One node of the pipeline DAG: ``tier`` is built from table
     ``input`` (its input tier, or the raw table) by ``build``, and
     written partitioned and sorted as its row declares. A raw tier's
-    ``build`` already distributes its output on the write's key.
-
-    ``expand`` maps the changed input partitions of an incremental run
-    to (a predicate on the input partitions to read, the output
-    partitions to rewrite); without it a changed input partition
-    rewrites the output partition that holds its prefix
-    (``Tier.rewrites``)."""
+    ``build`` already distributes its output on the write's key. An
+    incremental run rewrites the partitions ``tier.rewrites`` names."""
 
     tier: Tier
     input: str
     build: Callable[[DataFrame], DataFrame]
-    expand: Callable[[list[str]], tuple[Callable[[str], bool], list[str]]] | None = None
 
     @property
     def name(self) -> str:
         return self.tier.name
-
-
-def _day(seconds: int) -> str:
-    """The day an epoch second falls on, as a ``day_bucket`` value."""
-    return str(_EPOCH + datetime.timedelta(days=seconds // _DAY_S))
-
-
-def _day_start(day: str) -> int:
-    """The epoch second a ``day_bucket`` value starts at."""
-    return (datetime.date.fromisoformat(day) - _EPOCH).days * _DAY_S
-
-
-def _block_partitions(
-    changed: list[str], span: int
-) -> tuple[Callable[[str], bool], list[str]]:
-    """Gorilla blocks are epoch-aligned ``span``-second windows (Spark
-    tumbling windows), stored in the ``day_bucket`` of their start day.
-    A changed day re-encodes every block that overlaps it, and a
-    rewritten partition must hold every block that starts on its day:
-    read every day those blocks cover, rewrite their start days."""
-    starts: set[str] = set()
-    for v in changed:
-        lo = _day_start(v)
-        hi = lo + _DAY_S - 1
-        # the first and the last block overlapping the day; any block
-        # between them starts on one of their two days
-        starts |= {_day(lo - lo % span), _day(hi - hi % span)}
-    read: set[str] = set()
-    for v in starts:
-        lo = _day_start(v)
-        hi = lo + _DAY_S - 1
-        first, last = lo + (-lo) % span, hi - hi % span
-        read.update(
-            _day(d * _DAY_S)
-            for d in range(first // _DAY_S, (last + span - 1) // _DAY_S + 1)
-        )
-    return read.__contains__, sorted(starts)
 
 
 def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
@@ -211,12 +168,13 @@ def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
         return None
     keep = None  # full recompute -> full read
     if changed is not None and t.partition_col:
-        keep, out_values = (st.expand or t.rewrites)(changed)
+        keep, out_ranges = t.rewrites(changed)
     out = st.build(cat.read(st.input, partitions=keep))
-    if st.expand and keep is not None:
-        # an expanded read can reach rows of output partitions this run
-        # does not rewrite (a block that starts before the first day read)
-        out = out.where(F.col(t.partition_col).cast("string").isin(out_values))
+    if keep is not None:
+        # the read can reach buckets of partitions this run does not
+        # rewrite (a block that starts before the first day read)
+        part = F.col(t.partition_col)
+        out = out.where(reduce(operator.or_, [part.between(a, b) for a, b in out_ranges]))
     snap = cat.write(
         out,
         t.name,
@@ -334,65 +292,61 @@ def run_rollup_pipeline(
     ``codec.compression_report(cat.read("blocks_30m"))``.
     """
     n_salts = write_salt_buckets(spark)
-    enabled = {
-        "agg": True,
-        "hist": histogram_bin_width is not None,
-        "dist": distinct_key is not None,
-        "blocks": encode_blocks,
-    }
-    # family -> (its builder over raw rows, the raw column it reads,
-    # the builder's parameter after the resolution)
-    raw_builders = {
-        "agg": (rollup.rollup_raw, "value", sum_cast),
-        "hist": (rollup.histogram_tier, "value", enabled["hist"] and float(histogram_bin_width)),
-        "dist": (rollup.distinct_tier, distinct_key, 14),  # HLL lgK
-    }
+    # enabled family -> (the raw column it reads, its rule over raw
+    # rows), each built, and so checked, before any stage runs
+    raw_rules = {"agg": ("value", rollup.agg_rule("value", sum_cast))}
+    if histogram_bin_width is not None:
+        raw_rules["hist"] = ("value", rollup.hist_rule("value", float(histogram_bin_width)))
+    if distinct_key is not None:
+        raw_rules["dist"] = (distinct_key, rollup.dist_rule(distinct_key, 14))  # HLL lgK
+    enabled = {*raw_rules, *(["blocks"] if encode_blocks else [])}
 
-    def raw_tier(t: Tier) -> Callable[[DataFrame], DataFrame]:
+    def raw_stage(t: Tier) -> Callable[[DataFrame], DataFrame]:
         """A tier over raw rows in one exchange: attach the storage key
-        (partition of the bucket end, write salt of the series),
+        (partition of the bucket start, write salt of the series),
         shuffle once on it, group with it as leading keys (the shuffle
         already clusters every group), then drop the salt. The write
         then needs no shuffle of its own."""
-        build, col, param = raw_builders[t.family]
+        col, rule = raw_rules[t.family]
         part = PARTITIONS[t.partition_col].of
 
         def _build(src: DataFrame) -> DataFrame:
             keyed = (
                 src.select("url", "warc_ts", col)
-                .withColumn(t.partition_col, part(rollup.bucket_end(F.col("warc_ts"), t.seconds)))
+                .withColumn(t.partition_col, part(rollup.bucket_start(F.col("warc_ts"), t.seconds)))
                 .withColumn(_SALT, write_salt(["url"], n_salts))
                 .repartition(t.partition_col, _SALT)
             )
-            return build(
-                keyed, "url", "warc_ts", col, t.seconds, param, by=[t.partition_col, _SALT]
+            return rollup.raw_tier(
+                keyed, rule, "url", "warc_ts", t.seconds, by=[t.partition_col, _SALT]
             ).drop(_SALT)
 
         return _build
 
     def stage(t: Tier) -> Stage:
         if t.input is None:
-            return Stage(t, raw_table, raw_tier(t))
+            return Stage(t, raw_table, raw_stage(t))
         if t.family == "blocks":
-            span = codec.block_span_seconds(block_size)
-            # codec.encode_blocks is looked up when the stage runs
+            part = PARTITIONS[t.partition_col].of
+            # a block is a bucket as wide as its span (codec.encode_blocks
+            # is looked up when the stage runs)
             return Stage(
-                t, t.input,
+                replace(t, seconds=codec.block_span_seconds(block_size)), t.input,
                 lambda df: codec.encode_blocks(
                     df, "series", "bucket_ts", "avg_value", block=block_size
-                ).withColumn(t.partition_col, F.to_date("block_start")),
-                lambda changed: _block_partitions(changed, span),
+                ).withColumn(t.partition_col, part(F.col("block_start"))),
             )
 
         def cascade(df: DataFrame) -> DataFrame:
             out = CASCADE[t.family](df.drop(t.input_col), t.seconds)
             if t.partition_col is None:
                 return out
-            return out.withColumn(t.partition_col, PARTITIONS[t.partition_col].of("bucket_ts"))
+            start = rollup.bucket_start(F.col("bucket_ts"), t.seconds)
+            return out.withColumn(t.partition_col, PARTITIONS[t.partition_col].of(start))
 
         return Stage(t, t.input, cascade)
 
-    stages = [stage(t) for t in TIERS if enabled[t.family]]
+    stages = [stage(t) for t in TIERS if t.family in enabled]
 
     done = _run_dag(spark, stages, lambda st: _run_stage(cat, st))
     res = PipelineResult()

@@ -4,8 +4,8 @@ with salting for hot-domain skew").
 
 Why these keys at 10^12 rows:
 
-- ``day_bucket`` (yyyy-MM-dd of the END-of-period ts): query windows are
-  time ranges (reference get_data.py:80-82), so time partitions prune to
+- ``day_bucket`` (:func:`day_bucket`): query windows are time ranges
+  (reference get_data.py:80-82), so time partitions prune to
   the window; retention expires whole day/month partitions without
   rewriting live data.
 - ``url_bucket = pmod(xxhash64(url), N)``: co-locates each series for
@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from isp_trace_parser_spark.operators import rollup
+
 DEFAULT_URL_BUCKETS = 64
 
 
@@ -31,16 +33,11 @@ def url_bucket(url: Column | str, n_buckets: int = DEFAULT_URL_BUCKETS) -> Colum
 
 
 def day_bucket(ts: Column | str) -> Column:
-    """Date of the half-hour period END, shifted 1s back so the 00:00
-    end-of-day label belongs to the day it summarizes (consistent with
-    the end-of-interval convention everywhere else)."""
+    """The day of the start of the day-long bucket holding ``ts``
+    (``rollup.bucket_end``'s rule): a row at 00:00 belongs to the day
+    before, the day its 30m bucket starts on."""
     c = F.col(ts) if isinstance(ts, str) else ts
-    return F.to_date(c - F.expr("INTERVAL 1 SECOND"))
-
-
-def month_bucket(ts: Column | str) -> Column:
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_format(c - F.expr("INTERVAL 1 SECOND"), "yyyy-MM")
+    return F.to_date(rollup.bucket_start(c, 86400))
 
 
 def write_salt_buckets(spark: SparkSession) -> int:

@@ -10,10 +10,11 @@ router does:
    divides the request (a 2h request reads the 30m tier, a 1-week
    request reads the 1d tier) — never the raw table;
 2. prune partitions (day_bucket / month_bucket) BEFORE the scan is
-   planned: the catalog read keeps only the window's files from the
-   committed snapshot's manifest, so a 2-day window over a 10-year
-   table plans from two partitions' files, with no directory listing
-   and no Spark job;
+   planned: the catalog read keeps only the files, from the committed
+   snapshot's manifest, of the partitions holding the buckets that
+   overlap the window (``tiers.partition_range``), so a 2-day window
+   over a 10-year table plans from two partitions' files, with no
+   directory listing and no Spark job;
 3. re-aggregate the tier's partial aggregates to the requested
    resolution with the family's cascade rule, the one the pipeline
    uses (``tiers.CASCADE``) — avg recombines exactly via sum/cnt.
@@ -38,7 +39,7 @@ from pyspark.sql import functions as F
 from isp_trace_parser_spark.operators import rollup
 from isp_trace_parser_spark.operators.codec import block_span_seconds
 from isp_trace_parser_spark.sources.catalog import Catalog
-from isp_trace_parser_spark.tiers import CASCADE, TIERS, Tier
+from isp_trace_parser_spark.tiers import CASCADE, TIERS, Tier, partition_range
 
 _RES_RE = re.compile(r"^(\d+)\s*(m|min|h|d)$")
 
@@ -225,13 +226,11 @@ class TierStore:
         )
 
     def _slice(self, tier: Tier, series, start, end) -> DataFrame:
-        # the pruning predicate: partition values are derived from
-        # bucket_ts, so the window's date range on the partition value
-        # is a superset of the bucket_ts filter below; the read keeps
-        # only those partitions' files
+        # the pruning predicate: the partitions holding the buckets that
+        # overlap the window; the read keeps only their files
         keep = None
         if tier.partition_col:
-            keep = _in_range(tier.partition_bound(start), tier.partition_bound(end))
+            keep = _in_range(*partition_range(tier.partition_col, tier.seconds, start, end))
         df = self.cat.read(tier.name, partitions=keep)
         if series is not None:
             vals = series if isinstance(series, list) else [series]
@@ -256,8 +255,8 @@ def series_30m_from_blocks(
     retention policy expires those, the compressed blocks are the
     surviving copy. Reads prune twice before any decode work: the
     catalog read keeps only the files of the day_bucket partitions
-    that can hold an overlapping block (the lower bound backed off by
-    the block span), and a ``block_start`` predicate bounds the scan to
+    that hold an overlapping block (a block's partition is the day it
+    starts on), and a ``block_start`` predicate bounds the scan to
     overlapping blocks, so only the window's blocks cross into the
     decode ``mapInPandas``. Output schema matches the 30m tier's
     (series, bucket_ts, avg_value).
@@ -270,27 +269,21 @@ def series_30m_from_blocks(
     from isp_trace_parser_spark.operators import codec
 
     (blocks,) = [t for t in TIERS if t.family == "blocks"]
+    # a block is a bucket as wide as its span: the blocks overlapping the
+    # window start from first to last
     span_s = block_span_seconds(block_span)
-    # the partition is the block START's day, so the lower partition
-    # bound backs off a whole number of days covering the span
-    span_days = max(1, -(-span_s // 86400))
-    lo = None if start is None else start - datetime.timedelta(days=span_days)
+    first, last = rollup.overlapping(start, end, span_s)
     df = cat.read(
         blocks.name,
-        partitions=_in_range(blocks.partition_bound(lo), blocks.partition_bound(end)),
+        partitions=_in_range(*partition_range(blocks.partition_col, span_s, start, end)),
     )
     if series is not None:
         vals = series if isinstance(series, list) else [series]
         df = df.where(F.col("series").isin(vals))
-    if end is not None:
-        df = df.where(F.col("block_start") < F.lit(end))
-    if start is not None:
-        # a block overlaps the window if it STARTS within span of it
-        df = df.where(
-            F.col("block_start")
-            + F.expr(f"INTERVAL {span_s} SECONDS")
-            > F.lit(start)
-        )
+    if first is not None:
+        df = df.where(F.col("block_start") >= F.lit(first))
+    if last is not None:
+        df = df.where(F.col("block_start") <= F.lit(last))
     out = codec.decode_blocks(df.drop(blocks.partition_col, "n_points", "raw_bytes",
                                       "enc_bytes"))
     if start is not None:

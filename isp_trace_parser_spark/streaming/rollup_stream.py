@@ -40,7 +40,7 @@ def _windowed(
             F.col(series_col).alias("series"),
             # shift 1us back so points exactly on a boundary label their
             # own bucket (end-of-interval (start, end]), then take the
-            # window END as the label
+            # window END as the label: exactly rollup.bucket_end's rule
             F.window(F.col("_ts_ltz") - F.expr("INTERVAL 1 MICROSECOND"), "30 minutes"),
             *keys,
         )

@@ -9,6 +9,9 @@ table plus every row with a horizon; ``agg_1mo`` and ``blocks_30m``
 have none and are kept forever). As in TimescaleDB continuous
 aggregates, one declaration defines a tier's refresh, its query
 rewrite and its retention.
+
+Partitions follow the engine's one time rule (:data:`PARTITIONS`);
+rewrite sets and pruning bounds derive from it (:func:`partition_range`).
 """
 
 from __future__ import annotations
@@ -18,28 +21,49 @@ from dataclasses import dataclass
 from typing import Callable, NamedTuple
 
 from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from isp_trace_parser_spark.operators import rollup
-from isp_trace_parser_spark.plans import partitioning
 
 # the raw table's top-level partition column (pipeline.ingest_pages)
 RAW_PARTITION_COL = "day_bucket"
 
 
 class Partition(NamedTuple):
-    """A partition column's encoding: ``of`` is the Spark rule for the
-    value that holds an end-labelled bucket, ``width`` the length of its
-    values' ISO-date prefix (a day's value starts with its month's)."""
+    """A partition column's encoding. A partition is a bucket of its
+    own, ``seconds`` wide (None: a calendar month), named by the ISO
+    date prefix ``width`` long of its start; it holds the rows whose
+    bucket starts in it. ``of`` names a bucket start in Spark."""
 
-    of: Callable[[Column | str], Column]
+    of: Callable[[Column], Column]
+    seconds: int | None
     width: int
+
+    def value(self, start: datetime.datetime) -> str:
+        return start.date().isoformat()[: self.width]
+
+    def start(self, value: str) -> datetime.datetime:
+        return datetime.datetime(int(value[:4]), int(value[5:7]), int(value[8:10] or 1))
+
+    def held(self, first: str, last: str, seconds: int | None) -> tuple[datetime.datetime, ...]:
+        """The instants ``(lo, hi]`` held by the ``seconds``-wide buckets
+        stored in partitions ``first`` to ``last``."""
+        hi = rollup.bucket_label(self.start(last), self.seconds, 1)
+        return rollup.bucket_label(self.start(first), seconds), rollup.bucket_label(hi, seconds)
 
 
 # partition column -> its encoding
 PARTITIONS = {
-    "day_bucket": Partition(partitioning.day_bucket, 10),
-    "month_bucket": Partition(partitioning.month_bucket, 7),
+    "day_bucket": Partition(F.to_date, 86400, 10),
+    "month_bucket": Partition(lambda start: F.date_format(start, "yyyy-MM"), None, 7),
 }
+
+
+def partition_range(col: str, seconds: int | None, lo, hi) -> tuple[str | None, str | None]:
+    """The first and the last value of partition column ``col`` holding
+    the ``seconds``-wide buckets that overlap ``(lo, hi]``; a None bound
+    is open."""
+    return tuple(s and PARTITIONS[col].value(s) for s in rollup.overlapping(lo, hi, seconds))
 
 
 @dataclass(frozen=True)
@@ -50,9 +74,10 @@ class Tier:
     (histogram counts), ``dist`` (HLL sketches) or ``blocks`` (Gorilla
     blocks of the 30m averages). ``input``: the tier it is built from;
     None is the raw table. ``seconds``: its resolution; None is a
-    calendar month. ``partition_col``: its top-level partition column;
-    None is unpartitioned. ``horizon``: the ``RetentionPolicy`` field
-    that bounds its history; None keeps it forever."""
+    calendar month (a blocks stage rewrites by its span).
+    ``partition_col``: its top-level partition column; None is
+    unpartitioned. ``horizon``: the ``RetentionPolicy`` field that
+    bounds its history; None keeps it forever."""
 
     name: str
     family: str
@@ -67,19 +92,18 @@ class Tier:
         """The top-level partition column of the table this tier reads."""
         return BY_NAME[self.input].partition_col if self.input else RAW_PARTITION_COL
 
-    def partition_bound(self, ts: datetime.datetime | None) -> str | None:
-        """The value of this tier's partition column that holds the day
-        of ``ts`` (None: an open bound)."""
-        return None if ts is None else ts.date().isoformat()[: PARTITIONS[self.partition_col].width]
-
-    def rewrites(self, changed: list[str]) -> tuple[Callable[[str], bool], list[str]]:
-        """(a predicate on the input partitions to read, the partitions
-        to rewrite) for changed input partitions: each rewrites the one
-        that holds its prefix, read from every input sharing it."""
-        w = PARTITIONS[self.partition_col].width
-        out = sorted({v[:w] for v in changed})
-        keep = set(out)
-        return (lambda v: v[:w] in keep), out
+    def rewrites(self, changed: list[str]) -> tuple[Callable[[str], bool], list[tuple]]:
+        """(a predicate on the input partitions to read, the ranges of
+        output partitions to rewrite) for changed input partitions: each
+        rewrites the output partitions whose buckets overlap it, read
+        from every input partition those buckets cover."""
+        src, dst = PARTITIONS[self.input_col], PARTITIONS[self.partition_col]
+        out = sorted({
+            partition_range(self.partition_col, self.seconds, *src.held(v, v, src.seconds))
+            for v in changed
+        })
+        read = [partition_range(self.input_col, src.seconds, *dst.held(*o, self.seconds)) for o in out]
+        return (lambda v: any(a <= v <= b for a, b in read)), out
 
 
 _KEYS = ("series", "bucket_ts")

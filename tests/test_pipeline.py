@@ -14,6 +14,7 @@ from isp_trace_parser_spark.operators.retention import RetentionPolicy
 from isp_trace_parser_spark.parse import parse_traces
 from isp_trace_parser_spark.pipeline import ingest_pages, run_rollup_pipeline
 from isp_trace_parser_spark.sources.catalog import Catalog
+from isp_trace_parser_spark.tiers import TIERS
 
 
 @pytest.fixture()
@@ -114,12 +115,14 @@ def test_retention_policy_rejects_negative_horizon(field):
 
 @pytest.mark.parametrize("bin_width", [0, -1.0])
 def test_pipeline_rejects_non_positive_bin_width(spark, cat, bin_width):
-    """The histogram stage rejects a bin width <= 0 instead of storing
-    mirrored bins (negative) or failing inside a Spark task (zero)."""
+    """The pipeline rejects a histogram bin width <= 0 instead of storing
+    mirrored bins (negative) or failing inside a Spark task (zero), and
+    commits no tier of any family first."""
     ingest_pages(cat, synth.pages(spark, n_urls=2, n_slots=48), n_buckets=1)
     with pytest.raises(ValueError, match="bin width"):
-        run_rollup_pipeline(spark, cat, encode_blocks=False, histogram_bin_width=bin_width)
-    assert not cat.exists("hist_30m")
+        run_rollup_pipeline(spark, cat, histogram_bin_width=bin_width)
+    # every family's rule is checked before any stage runs
+    assert [t.name for t in TIERS if cat.exists(t.name)] == []
 
 
 def test_incremental_append_preserves_history(spark, cat):
@@ -228,11 +231,13 @@ def _tables_equal(a, b) -> bool:
     return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
-@pytest.mark.parametrize("block_size", ["1 week", "2 days"])
+@pytest.mark.parametrize("block_size", ["1 week", "2 days", "36 hours", "12 hours"])
 def test_landed_day_reencodes_whole_blocks(spark, cat, block_size):
     """A day landed inside a block re-encodes every block overlapping it
     and commits the partitions of their start days, so blocks_30m stays
-    readable and decodes to exactly the agg_30m points."""
+    readable and decodes to exactly the agg_30m points. A 36-hour block
+    can start on the day before the landed day and another on the day
+    itself; two 12-hour blocks start on the landed day."""
     import pyspark.sql.functions as F
 
     pages = synth.pages(spark, n_urls=3, n_slots=48 * 12)
@@ -254,6 +259,36 @@ def test_landed_day_reencodes_whole_blocks(spark, cat, block_size):
     )
     assert want.count() == 3 * 48 * 13
     assert _tables_equal(points, want)
+
+
+def test_relanded_day_keeps_the_next_days_buckets(spark, cat, tmp_path):
+    """A point in the first second after midnight lies in the next day's
+    raw partition, as its 30m bucket does: re-landing a day as stored
+    rewrites only that day's buckets, so the 30m tiers of the next day
+    stay equal to a fresh build."""
+    import pyspark.sql.functions as F
+
+    pages = synth.pages(spark, n_urls=1, n_slots=48 * 3).select("url", "warc_ts", "value")
+    point = pages.limit(1).select(
+        "url",
+        F.lit("2024-01-03 00:00:00.5").cast("timestamp_ntz").alias("warc_ts"),
+        F.lit(0.25).alias("value"),
+    )
+    raw = pages.unionByName(point).withColumn("visitor", F.col("url"))
+    kw = dict(encode_blocks=False, histogram_bin_width=0.5, distinct_key="visitor")
+    ingest_pages(cat, raw, n_buckets=1)
+    run_rollup_pipeline(spark, cat, **kw)
+
+    day = cat.read("pages").where(F.col("day_bucket") == F.lit("2024-01-02").cast("date"))
+    ingest_pages(cat, day.select(*raw.columns).localCheckpoint(), n_buckets=1, mode="dynamic")
+    assert "agg_30m" in run_rollup_pipeline(spark, cat, **kw).stages_run
+
+    fresh = Catalog(spark, str(tmp_path / "fresh"))
+    ingest_pages(fresh, raw, n_buckets=1)
+    run_rollup_pipeline(spark, fresh, **kw)
+    assert cat.read("agg_30m").where(F.col("day_bucket") == "2024-01-03").count() == 48
+    for t in ("agg_30m", "hist_30m", "dist_30m"):
+        assert _tables_equal(cat.read(t), fresh.read(t)), t
 
 
 def test_recorded_state_stops_at_the_last_stage_record(spark, cat, monkeypatch):

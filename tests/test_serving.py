@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from isp_trace_parser_spark import synth
+from isp_trace_parser_spark.operators import codec
 from isp_trace_parser_spark.operators.rollup import DEC, rollup_raw
 from isp_trace_parser_spark.pipeline import ingest_pages, run_rollup_pipeline
 from isp_trace_parser_spark.serving import TierStore, resolution_seconds
@@ -444,3 +445,78 @@ def test_percentiles_reject_non_positive_bin_width(spark, store, bin_width):
         TierStore(cat).percentile(0.95, resolution="2h", bin_width=bin_width)
     with pytest.raises(ValueError, match="bin width"):
         TierStore(cat).percentiles([0.5, 0.95], bin_width=bin_width)
+
+
+@pytest.fixture(scope="module")
+def month_edge(spark, tmp_path_factory):
+    """Warehouses over 6 urls x 7 days from 2024-01-28 (across a month
+    edge), with histogram tiers and blocks of the given span, built once
+    per span."""
+    pages = synth.pages(spark, n_urls=6, n_slots=48 * 7, gap_pct=0).select(
+        "url", (F.col("warc_ts") + F.expr("INTERVAL 27 DAYS")).alias("warc_ts"), "value"
+    )
+    built = {}
+
+    def build(block_size):
+        if block_size not in built:
+            cat = Catalog(spark, str(tmp_path_factory.mktemp("edge") / "wh"))
+            ingest_pages(cat, pages, n_buckets=2)
+            run_rollup_pipeline(spark, cat, block_size=block_size, histogram_bin_width=0.5)
+            built[block_size] = cat
+        return built[block_size]
+
+    return build
+
+
+def _partitions_read(df) -> set[str]:
+    files = df.inputFiles()
+    assert files
+    return {re.search(r"/((day|month)_bucket=[^/]+)/", f).group(1) for f in files}
+
+
+# the window (Jan 30, Feb 1] ends at midnight, on a month edge
+EDGE = datetime.datetime(2024, 1, 30), datetime.datetime(2024, 2, 1)
+
+
+@pytest.mark.parametrize("query", ["series_30m", "series_1d", "percentiles"])
+def test_window_ending_at_midnight_reads_only_its_partitions(spark, month_edge, query):
+    """A bucket labelled at midnight belongs to the day (month) before,
+    so a window ending at midnight plans no file of the next day's (or
+    month's) partition."""
+    store = TierStore(month_edge("7 days"))
+    start, end = EDGE
+    days = {"day_bucket=2024-01-30", "day_bucket=2024-01-31"}
+    df, want, rows = {
+        "series_30m": (store.series(start=start, end=end), days, 6 * 96),
+        "series_1d": (
+            store.series(start=start - datetime.timedelta(days=1), end=end, resolution="1d"),
+            {"month_bucket=2024-01"},
+            6 * 3,
+        ),
+        "percentiles": (store.percentiles([0.5], start=start, end=end, bin_width=0.5), days, 6 * 96),
+    }[query]
+    assert _partitions_read(df) == want
+    assert df.count() == rows
+
+
+@pytest.mark.parametrize("block_size", ["7 days", "36 hours"])
+def test_cold_window_ending_at_midnight_reads_only_overlapping_blocks(spark, month_edge, block_size):
+    """The cold-tier read plans only the files of the partitions holding
+    a block that overlaps the window: no partition of a block that ends
+    before the window starts, or starts where it ends."""
+    from isp_trace_parser_spark.serving import series_30m_from_blocks
+
+    cat = month_edge(block_size)
+    start, end = EDGE
+    span = codec.block_span_seconds(block_size)
+    blocks = cat.read("blocks_30m")
+    overlapping = blocks.where(
+        (F.col("block_start") < F.lit(end))
+        & (F.col("block_start") > F.lit(start - datetime.timedelta(seconds=span)))
+    )
+    want = {f"day_bucket={r[0]}" for r in overlapping.select("day_bucket").distinct().collect()}
+    assert want and want != {f"day_bucket={r[0]}" for r in blocks.select("day_bucket").distinct().collect()}
+
+    df = series_30m_from_blocks(cat, start=start, end=end, block_span=block_size)
+    assert _partitions_read(df) == want
+    assert df.count() == 6 * 96

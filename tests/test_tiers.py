@@ -3,11 +3,14 @@ derive the stage DAG, the serving router and the retention targets
 from it must not spell a tier's name themselves. Likewise
 operators/rollup.py is the one place aggregation rules live: the
 modules that build or serve tiers through it call no aggregate
-function themselves."""
+function themselves. It is also the one place time arithmetic lives:
+every bucket label, partition value, rewrite set and pruning bound
+derives from its end-label rule."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -62,6 +65,35 @@ def test_tier_builders_call_no_aggregate(module):
         and node.func.attr in AGGREGATES
     ]
     assert found == [], f"{module} aggregates outside operators/rollup.py: {found}"
+
+
+TIME_CALLS = {"timedelta", "fromisoformat", "strftime"}
+SQL_INTERVAL = re.compile(r"\binterval\b", re.IGNORECASE)
+
+
+@pytest.mark.parametrize(
+    "module",
+    ["pipeline.py", "serving.py", "tiers.py", "operators/retention.py",
+     "operators/codec.py", "plans/partitioning.py"],
+)
+def test_time_arithmetic_lives_in_rollup(module):
+    """No INTERVAL literal and no datetime arithmetic or formatting call
+    outside operators/rollup.py, the rule's home."""
+    tree = ast.parse((PKG / module).read_text())
+    docs = _docstrings(tree)
+    found = [
+        (node.lineno, node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and id(node) not in docs and SQL_INTERVAL.search(node.value)
+    ] + [
+        (node.lineno, name)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        for name in [getattr(node.func, "attr", getattr(node.func, "id", None))]
+        if name in TIME_CALLS
+    ]
+    assert found == [], f"{module} does time arithmetic outside operators/rollup.py: {found}"
 
 
 def test_every_tier_input_is_declared_before_it():
