@@ -3834,13 +3834,12 @@ def oracle_sql() -> dict[str, str]:
     # Tiered retention: recompute every tier's post-expiry contents from
     # raw events. Cutoffs mirror RetentionPolicy(raw=5d, 30m=15d, 1d=0mo)
     # at now=2024-01-31; day_bucket uses the end-of-period convention
-    # (ts - 1s), which agrees with plans/partitioning.day_bucket (the
-    # 1 us rule) on every event outside the first second of a day.
+    # (ts - 1 us), the rule of plans/partitioning.day_bucket.
     b30us, b1dus = SEC_30M * 1_000_000, SEC_1D * 1_000_000
     sqls["tiered_retention"] = f"""
         WITH raw AS (
           SELECT CAST(user_id AS VARCHAR) AS series, ts, value,
-                 CAST(ts - INTERVAL 1 SECOND AS DATE) AS day_bucket
+                 CAST(ts - INTERVAL 1 MICROSECOND AS DATE) AS day_bucket
           FROM events
         ),
         t30 AS (
@@ -3871,7 +3870,7 @@ def oracle_sql() -> dict[str, str]:
         UNION ALL
         SELECT 'agg_30m', count(*), CAST(sum(cnt_value) AS BIGINT),
                round(CAST(sum(sum_value) AS DOUBLE), 2), min(bucket_ts), max(bucket_ts)
-        FROM t30 WHERE CAST(bucket_ts - INTERVAL 1 SECOND AS DATE) >= DATE '2024-01-16'
+        FROM t30 WHERE CAST(bucket_ts - INTERVAL 1 MICROSECOND AS DATE) >= DATE '2024-01-16'
         UNION ALL
         SELECT 'agg_1d', count(*), CAST(sum(cnt_value) AS BIGINT),
                round(CAST(sum(sum_value) AS DOUBLE), 2), min(bucket_ts), max(bucket_ts)
@@ -4062,7 +4061,7 @@ def oracle_sql() -> dict[str, str]:
     sqls["late_rewrite_rollup"] = f"""
         WITH src AS (
           SELECT CAST(user_id AS VARCHAR) AS series, ts,
-                 CASE WHEN CAST(ts - INTERVAL 1 SECOND AS DATE) = DATE '2024-01-10'
+                 CASE WHEN CAST(ts - INTERVAL 1 MICROSECOND AS DATE) = DATE '2024-01-10'
                       THEN value * 2 ELSE value END AS value
           FROM events
         )
@@ -4126,20 +4125,20 @@ def oracle_sql() -> dict[str, str]:
     # engine's partition keys use.
     sqls["snapshot_lineage"] = f"""
         SELECT 'pages' AS table_name,
-               'day_bucket=' || strftime(CAST(ts - INTERVAL 1 SECOND AS DATE), '%Y-%m-%d') AS partition_dir,
+               'day_bucket=' || strftime(CAST(ts - INTERVAL 1 MICROSECOND AS DATE), '%Y-%m-%d') AS partition_dir,
                CAST(count(*) AS BIGINT) AS n_rows,
                CAST(NULL AS VARCHAR) AS input_table
         FROM events GROUP BY 2
         UNION ALL
         SELECT 'agg_30m',
-               'day_bucket=' || strftime(CAST(bucket_ts - INTERVAL 1 SECOND AS DATE), '%Y-%m-%d'),
+               'day_bucket=' || strftime(CAST(bucket_ts - INTERVAL 1 MICROSECOND AS DATE), '%Y-%m-%d'),
                CAST(count(*) AS BIGINT), 'pages'
         FROM (SELECT DISTINCT CAST(user_id AS VARCHAR) AS series,
                      {_bucket_sql("ts", SEC_30M)} AS bucket_ts FROM events)
         GROUP BY 2
         UNION ALL
         SELECT 'agg_1d',
-               'month_bucket=' || strftime(bucket_ts - INTERVAL 1 SECOND, '%Y-%m'),
+               'month_bucket=' || strftime(bucket_ts - INTERVAL 1 MICROSECOND, '%Y-%m'),
                CAST(count(*) AS BIGINT), 'agg_30m'
         FROM (SELECT DISTINCT CAST(user_id AS VARCHAR) AS series,
                      {_bucket_sql("ts", SEC_1D)} AS bucket_ts FROM events)

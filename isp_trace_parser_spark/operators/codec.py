@@ -441,6 +441,12 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
     return blocks.mapInArrow(_decode, POINT_SCHEMA)
 
 
+def block_points(blocks: DataFrame) -> DataFrame:
+    """Encoded blocks -> their points as :func:`encode_blocks` reads them."""
+    points = decode_blocks(blocks.select("series", "data"))
+    return points.select("series", F.col("ts").alias("bucket_ts"), F.col("value").alias("avg_value"))
+
+
 def compression_report(blocks: DataFrame) -> DataFrame:
     return blocks.agg(
         F.sum("n_points").alias("points"),

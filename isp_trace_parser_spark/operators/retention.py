@@ -15,11 +15,11 @@ come from the row:
 A percentile or cardinality dashboard thus keeps exactly as much
 history as an avg dashboard at the same resolution.
 
-Because every coarser tier is derived from the finer tier's partials
-BEFORE expiry (rollup.rollup_cascade), expiring a fine partition loses no
-information the coarser tiers need — the cascade runs first, the expiry
-second, and both are recorded as snapshots so a crashed job resumes
-idempotently (see pipeline.py).
+Every coarser tier is derived from the finer tier's partials BEFORE
+expiry (the cascade runs first, the expiry second; both are snapshots,
+so a crashed job resumes idempotently), and a rewrite of a coarser
+partition keeps its own rows of the input partitions it does not re-read
+(pipeline.py): expiring a fine partition loses nothing it holds.
 
 Expiry itself is a partition-granular catalog commit (Iceberg
 ``DELETE FROM … WHERE day_bucket < cutoff`` + expire_snapshots analog)

@@ -47,14 +47,16 @@ partition overwrite); unchanged and expired partitions are untouched, so
 
 - re-running after a crash resumes at the unfinished stage;
 - a retention pass never forces recomputation;
-- tier history retained past raw expiry is never destroyed;
+- tier history retained past its input's expiry is never destroyed;
 - late rewrites of OLD raw days are detected (fingerprint change), not
   just appends — a plain high-watermark would miss them.
 
 A changed input partition rewrites the output partitions whose buckets
 (``rollup.bucket_end``) overlap it (``Tier.rewrites``): the same day for
-a raw tier, the whole month for a 1d tier, the blocks overlapping it for
-blocks_30m. An unpartitioned output (agg_1mo) is rebuilt in full.
+a raw tier, the month for a 1d tier or agg_1mo, the blocks overlapping
+it for blocks_30m. The stage reads only the changed input partitions; a
+stage over a tier adds back its own rows of the partitions it rewrites,
+less those a changed partition holds (``_run_stage``).
 
 No driver-side per-partition loops: the diff is O(partitions) metadata;
 within a stage Spark's scheduler owns parallelism.
@@ -64,10 +66,8 @@ from __future__ import annotations
 
 import datetime
 import hashlib
-import operator
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field, replace
-from functools import reduce
 from typing import Any, Callable
 
 from pyspark import inheritable_thread_target
@@ -146,12 +146,14 @@ class Stage:
     """One node of the pipeline DAG: ``tier`` is built from table
     ``input`` (its input tier, or the raw table) by ``build``, and
     written partitioned and sorted as its row declares. A raw tier's
-    ``build`` already distributes its output on the write's key. An
-    incremental run rewrites the partitions ``tier.rewrites`` names."""
+    ``build`` already distributes its output on the write's key.
+    ``points`` turns the tier's stored rows back into input rows; a raw
+    tier has none (its output partition is its input partition)."""
 
     tier: Tier
     input: str
     build: Callable[[DataFrame], DataFrame]
+    points: Callable[[DataFrame], DataFrame] | None = None
 
     @property
     def name(self) -> str:
@@ -160,27 +162,28 @@ class Stage:
 
 def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
     """Bring one stage up to date with its input: None when it already
-    is, else the files and bytes of the table it committed."""
+    is, else the files and bytes of the table it committed. A stage over
+    a tier builds over the changed input partitions and its own rows of
+    the partitions it rewrites, less those a changed partition holds."""
     t = st.tier
     in_state = partition_state(cat, st.input, t.input_col)
     changed = _changed_partitions(cat, t.name, in_state)
     if changed == []:
         return None
-    keep = None  # full recompute -> full read
-    if changed is not None and t.partition_col:
-        keep, out_ranges = t.rewrites(changed)
-    out = st.build(cat.read(st.input, partitions=keep))
-    if keep is not None:
-        # the read can reach buckets of partitions this run does not
-        # rewrite (a block that starts before the first day read)
-        part = F.col(t.partition_col)
-        out = out.where(reduce(operator.or_, [part.between(a, b) for a, b in out_ranges]))
+    src = cat.read(st.input, partitions=None if changed is None else set(changed).__contains__)
+    if changed and st.points:
+        rewritten = t.rewrites(changed)
+        # a fully expired output has no file to read and no row to add back
+        if any(map(rewritten, cat.list_partitions(t.name, t.partition_col))):
+            own = st.points(cat.read(t.name, partitions=rewritten))
+            held_by = PARTITIONS[t.input_col].of(t.last_input_start()).cast("string")
+            src = src.select(*own.columns).union(own.where(~held_by.isin(changed)))
     snap = cat.write(
-        out,
+        st.build(src),
         t.name,
-        partition_by=[t.partition_col] if t.partition_col else None,
+        partition_by=[t.partition_col],
         sort_within=list(t.sort_within),
-        mode="dynamic" if t.partition_col else "overwrite",
+        mode="dynamic",
         repartition=t.input is not None,
         lineage={
             "stage": t.name,
@@ -335,16 +338,15 @@ def run_rollup_pipeline(
                 lambda df: codec.encode_blocks(
                     df, "series", "bucket_ts", "avg_value", block=block_size
                 ).withColumn(t.partition_col, part(F.col("block_start"))),
+                codec.block_points,
             )
-
-        def cascade(df: DataFrame) -> DataFrame:
-            out = CASCADE[t.family](df.drop(t.input_col), t.seconds)
-            if t.partition_col is None:
-                return out
-            start = rollup.bucket_start(F.col("bucket_ts"), t.seconds)
-            return out.withColumn(t.partition_col, PARTITIONS[t.partition_col].of(start))
-
-        return Stage(t, t.input, cascade)
+        part = PARTITIONS[t.partition_col].of(t.last_input_start())
+        rule = CASCADE[t.family]
+        return Stage(
+            t, t.input,
+            lambda df: rule(df.drop(t.input_col), t.seconds).withColumn(t.partition_col, part),
+            lambda df: df.drop(t.partition_col),  # a cascade is closed over its own rows
+        )
 
     stages = [stage(t) for t in TIERS if t.family in enabled]
 

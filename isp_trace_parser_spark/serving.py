@@ -36,7 +36,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from isp_trace_parser_spark.operators import rollup
+from isp_trace_parser_spark.operators import codec, rollup
 from isp_trace_parser_spark.operators.codec import block_span_seconds
 from isp_trace_parser_spark.sources.catalog import Catalog
 from isp_trace_parser_spark.tiers import CASCADE, TIERS, Tier, partition_range
@@ -228,9 +228,7 @@ class TierStore:
     def _slice(self, tier: Tier, series, start, end) -> DataFrame:
         # the pruning predicate: the partitions holding the buckets that
         # overlap the window; the read keeps only their files
-        keep = None
-        if tier.partition_col:
-            keep = _in_range(*partition_range(tier.partition_col, tier.seconds, start, end))
+        keep = _in_range(*partition_range(tier.partition_col, tier.seconds, start, end))
         df = self.cat.read(tier.name, partitions=keep)
         if series is not None:
             vals = series if isinstance(series, list) else [series]
@@ -266,8 +264,6 @@ def series_30m_from_blocks(
     (correct, slower), a smaller one silently DROPS boundary blocks —
     so pass the pipeline's value.
     """
-    from isp_trace_parser_spark.operators import codec
-
     (blocks,) = [t for t in TIERS if t.family == "blocks"]
     # a block is a bucket as wide as its span: the blocks overlapping the
     # window start from first to last
@@ -284,13 +280,9 @@ def series_30m_from_blocks(
         df = df.where(F.col("block_start") >= F.lit(first))
     if last is not None:
         df = df.where(F.col("block_start") <= F.lit(last))
-    out = codec.decode_blocks(df.drop(blocks.partition_col, "n_points", "raw_bytes",
-                                      "enc_bytes"))
+    out = codec.block_points(df)
     if start is not None:
-        out = out.where(F.col("ts") > F.lit(start))
+        out = out.where(F.col("bucket_ts") > F.lit(start))
     if end is not None:
-        out = out.where(F.col("ts") <= F.lit(end))
-    return out.select(
-        "series", F.col("ts").alias("bucket_ts"),
-        F.col("value").alias("avg_value"),
-    )
+        out = out.where(F.col("bucket_ts") <= F.lit(end))
+    return out

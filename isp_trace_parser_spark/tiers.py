@@ -45,11 +45,10 @@ class Partition(NamedTuple):
     def start(self, value: str) -> datetime.datetime:
         return datetime.datetime(int(value[:4]), int(value[5:7]), int(value[8:10] or 1))
 
-    def held(self, first: str, last: str, seconds: int | None) -> tuple[datetime.datetime, ...]:
-        """The instants ``(lo, hi]`` held by the ``seconds``-wide buckets
-        stored in partitions ``first`` to ``last``."""
-        hi = rollup.bucket_label(self.start(last), self.seconds, 1)
-        return rollup.bucket_label(self.start(first), seconds), rollup.bucket_label(hi, seconds)
+    def held(self, value: str) -> tuple[datetime.datetime, datetime.datetime]:
+        """The instants ``(lo, hi]`` partition ``value`` spans."""
+        lo = self.start(value)
+        return lo, rollup.bucket_label(lo, self.seconds, 1)
 
 
 # partition column -> its encoding
@@ -75,15 +74,15 @@ class Tier:
     blocks of the 30m averages). ``input``: the tier it is built from;
     None is the raw table. ``seconds``: its resolution; None is a
     calendar month (a blocks stage rewrites by its span).
-    ``partition_col``: its top-level partition column; None is
-    unpartitioned. ``horizon``: the ``RetentionPolicy`` field that
-    bounds its history; None keeps it forever."""
+    ``partition_col``: its top-level partition column. ``horizon``: the
+    ``RetentionPolicy`` field that bounds its history; None keeps it
+    forever."""
 
     name: str
     family: str
     input: str | None
     seconds: int | None
-    partition_col: str | None
+    partition_col: str
     sort_within: tuple[str, ...]
     horizon: str | None
 
@@ -92,18 +91,18 @@ class Tier:
         """The top-level partition column of the table this tier reads."""
         return BY_NAME[self.input].partition_col if self.input else RAW_PARTITION_COL
 
-    def rewrites(self, changed: list[str]) -> tuple[Callable[[str], bool], list[tuple]]:
-        """(a predicate on the input partitions to read, the ranges of
-        output partitions to rewrite) for changed input partitions: each
-        rewrites the output partitions whose buckets overlap it, read
-        from every input partition those buckets cover."""
-        src, dst = PARTITIONS[self.input_col], PARTITIONS[self.partition_col]
-        out = sorted({
-            partition_range(self.partition_col, self.seconds, *src.held(v, v, src.seconds))
-            for v in changed
-        })
-        read = [partition_range(self.input_col, src.seconds, *dst.held(*o, self.seconds)) for o in out]
-        return (lambda v: any(a <= v <= b for a, b in read)), out
+    def last_input_start(self) -> Column:
+        """The start of the last input bucket a row (``bucket_ts``) of
+        this tier or of its input holds: the row's input partition, and
+        its own partition, are those holding it."""
+        return rollup.bucket_start(F.col("bucket_ts"), BY_NAME[self.input].seconds)
+
+    def rewrites(self, changed: list[str]) -> Callable[[str], bool]:
+        """Predicate on the output partitions a run rewrites for changed
+        input partitions: those holding buckets that overlap one."""
+        src = PARTITIONS[self.input_col]
+        out = [partition_range(self.partition_col, self.seconds, *src.held(v)) for v in changed]
+        return lambda v: any(a <= v <= b for a, b in out)
 
 
 _KEYS = ("series", "bucket_ts")
@@ -117,7 +116,7 @@ TIERS: tuple[Tier, ...] = (
     Tier("hist_1d", "hist", "hist_30m", 86400, "month_bucket", (*_KEYS, "bin"), "t1d_keep_months"),
     Tier("dist_30m", "dist", None, 1800, "day_bucket", _KEYS, "t30_keep_days"),
     Tier("dist_1d", "dist", "dist_30m", 86400, "month_bucket", _KEYS, "t1d_keep_months"),
-    Tier("agg_1mo", "agg", "agg_1d", None, None, _KEYS, None),
+    Tier("agg_1mo", "agg", "agg_1d", None, "month_bucket", _KEYS, None),
     Tier("blocks_30m", "blocks", "agg_30m", 1800, "day_bucket", ("series",), None),
 )
 

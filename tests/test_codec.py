@@ -84,6 +84,17 @@ def test_spark_encode_decode_round_trip(spark):
     pd.testing.assert_frame_equal(dec, orig)
 
 
+def test_block_points_inverts_encode_blocks(spark):
+    """block_points returns the points encode_blocks was given, under
+    the names and types of the 30m tier it reads them from."""
+    t30 = rollup_raw(synth.pages(spark, n_urls=4, n_slots=48 * 9, gap_pct=7)).select(
+        "series", "bucket_ts", "avg_value"
+    )
+    points = codec.block_points(codec.encode_blocks(t30, block="7 days"))
+    assert points.dtypes == t30.dtypes
+    assert points.exceptAll(t30).isEmpty() and t30.exceptAll(points).isEmpty()
+
+
 def test_repeated_values_compress_hard():
     # forward-filled / flat-lining traces (the common case after
     # gap-fill) hit the zero-XOR bitmap: ~1 bit/point

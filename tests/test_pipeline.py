@@ -9,7 +9,7 @@ import os
 import pytest
 
 from isp_trace_parser_spark import synth
-from isp_trace_parser_spark.operators import codec
+from isp_trace_parser_spark.operators import codec, rollup
 from isp_trace_parser_spark.operators.retention import RetentionPolicy
 from isp_trace_parser_spark.parse import parse_traces
 from isp_trace_parser_spark.pipeline import ingest_pages, run_rollup_pipeline
@@ -231,6 +231,158 @@ def _tables_equal(a, b) -> bool:
     return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
+def _days(spark, first: int, n: int, n_urls: int = 4):
+    """``n_urls`` urls x ``n`` days of pages from day ``first`` of
+    January 2024 (day 32 is Feb 1), with a visitor key for the distinct
+    tiers. Day ``d`` holds the points of raw partition ``d``, the same
+    in every frame."""
+    import pyspark.sql.functions as F
+
+    pages = synth.pages(spark, n_urls=n_urls, n_slots=48 * (first - 1 + n))
+    start = datetime.datetime(2024, 1, 1) + datetime.timedelta(days=first - 1)
+    return pages.where(F.col("warc_ts") > F.lit(start)).select(
+        "url", "warc_ts", "value",
+        (F.abs(F.xxhash64("url", "warc_ts")) % 5).cast("string").alias("visitor"),
+    )
+
+
+def _fresh(spark, tmp_path, pages, **kw) -> Catalog:
+    """A warehouse built from ``pages`` in one run of the pipeline."""
+    fresh = Catalog(spark, str(tmp_path / "fresh"))
+    ingest_pages(fresh, pages, n_buckets=2)
+    run_rollup_pipeline(spark, fresh, **kw)
+    return fresh
+
+
+# every family, with exact partial sums: double sums differ by ulps
+# between any two summation orders
+EVERY_FAMILY = dict(sum_cast=rollup.DEC, histogram_bin_width=0.5, distinct_key="visitor")
+
+
+def test_rewritten_month_keeps_the_days_expired_from_its_input(spark, cat, tmp_path):
+    """A day landed after its month's first days expired from the 30m
+    tiers rewrites the month partition of each 1d tier from that day's
+    30m rows and the partition's own rows, so no expired day is lost."""
+    import pyspark.sql.functions as F
+
+    kw = dict(EVERY_FAMILY, encode_blocks=False, now=datetime.datetime(2024, 1, 11),
+              policy=RetentionPolicy(raw_keep_days=3, t30_keep_days=5))
+    ingest_pages(cat, _days(spark, 1, 10), n_buckets=2)
+    run_rollup_pipeline(spark, cat, **kw)
+    ingest_pages(cat, _days(spark, 11, 1), n_buckets=2, mode="dynamic")
+    run_rollup_pipeline(spark, cat, **kw)
+
+    assert cat.read("agg_1d").count() == 4 * 11
+    assert cat.read("hist_1d").agg(F.sum("cnt")).first()[0] == 4 * 48 * 11
+    fresh = _fresh(spark, tmp_path, _days(spark, 1, 11), **kw)
+    for t in ("agg_1d", "hist_1d", "dist_1d", "agg_1mo"):
+        assert _tables_equal(cat.read(t), fresh.read(t)), t
+
+
+def test_rewritten_block_keeps_the_days_expired_from_its_input(spark, cat, tmp_path):
+    """A day landed into a 7-day block whose first day expired from
+    agg_30m re-encodes the block from its own points and the new day's,
+    so the cold tier, the expired day's only copy, keeps it."""
+    kw = dict(now=datetime.datetime(2024, 1, 13), policy=RetentionPolicy(t30_keep_days=1))
+    ingest_pages(cat, _days(spark, 1, 12), n_buckets=2)
+    run_rollup_pipeline(spark, cat, **kw)
+    # the block from 2024-01-11 holds days 11 to 17; day 11 is expired
+    assert cat.list_partitions("agg_30m", "day_bucket")[0] == "2024-01-12"
+    ingest_pages(cat, _days(spark, 13, 1), n_buckets=2, mode="dynamic")
+    run_rollup_pipeline(spark, cat, **kw)
+
+    assert codec.block_points(cat.read("blocks_30m")).count() == 4 * 48 * 13
+    fresh = _fresh(spark, tmp_path, _days(spark, 1, 13), **kw)
+    assert _tables_equal(cat.read("blocks_30m"), fresh.read("blocks_30m"))
+
+
+def test_month_tier_keeps_the_months_expired_from_its_input(spark, cat, tmp_path):
+    """agg_1mo is kept forever: a landed day rewrites only its month,
+    not the months that already expired from agg_1d."""
+    kw = dict(sum_cast=rollup.DEC, encode_blocks=False, now=datetime.datetime(2024, 4, 9),
+              policy=RetentionPolicy(t1d_keep_months=1))
+    ingest_pages(cat, _days(spark, 1, 99), n_buckets=2)
+    run_rollup_pipeline(spark, cat, **kw)
+    ingest_pages(cat, _days(spark, 100, 1), n_buckets=2, mode="dynamic")
+    run_rollup_pipeline(spark, cat, **kw)
+
+    months = cat.read("agg_1mo").select("bucket_ts").distinct().orderBy("bucket_ts")
+    assert [r[0].month for r in months.collect()] == [2, 3, 4, 5]
+    fresh = _fresh(spark, tmp_path, _days(spark, 1, 100), **kw)
+    assert _tables_equal(cat.read("agg_1mo"), fresh.read("agg_1mo"))
+
+
+def test_fully_expired_tier_takes_a_new_month(spark, cat, tmp_path):
+    """A rewrite adds back a tier's own rows only from partitions its
+    last snapshot still lists: a tier whose every partition expired
+    (no data file left to read) takes the next month's rows."""
+    kw = dict(sum_cast=rollup.DEC, encode_blocks=False, now=datetime.datetime(2024, 2, 1),
+              policy=RetentionPolicy(t1d_keep_months=0))
+    ingest_pages(cat, _days(spark, 1, 31), n_buckets=2)
+    run_rollup_pipeline(spark, cat, **kw)
+    assert cat.list_partitions("agg_1d", "month_bucket") == []
+    ingest_pages(cat, _days(spark, 32, 1), n_buckets=2, mode="dynamic")
+    assert "agg_1d" in run_rollup_pipeline(spark, cat, **kw).stages_run
+
+    fresh = _fresh(spark, tmp_path, _days(spark, 1, 32), **kw)
+    for t in ("agg_1d", "agg_1mo"):
+        assert _tables_equal(cat.read(t), fresh.read(t)), t
+
+
+def _fingerprint(cat, table: str) -> tuple:
+    """Order-free content fingerprint of a table: row count plus a sum
+    and an xor of per-row hashes over every column."""
+    import pyspark.sql.functions as F
+
+    df = cat.read(table)
+    h = F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
+    return tuple(df.agg(F.count(F.lit(1)), F.sum(F.pmod(h, F.lit(2**31))), F.bit_xor(h)).first())
+
+
+def test_history_equals_a_fresh_build(spark, cat, tmp_path, monkeypatch):
+    """Fifteen days landed in steps across the Feb 1 2024 month and
+    7-day block edge, a failed stage and its re-run, and a late rewrite
+    of a retained day, with short horizons applied at every step: every
+    tier ends equal to a fresh build of the same pages under the same
+    policy and ``now``."""
+    import pyspark.sql.functions as F
+
+    from isp_trace_parser_spark.tiers import CASCADE
+
+    policy = RetentionPolicy(raw_keep_days=2, t30_keep_days=3, t1d_keep_months=1)
+
+    def run(day: int):
+        """Run to the midnight after January day ``day``."""
+        now = datetime.datetime(2024, 1, 1) + datetime.timedelta(days=day)
+        return run_rollup_pipeline(spark, cat, policy=policy, now=now, **EVERY_FAMILY)
+
+    def land(pages, day: int):
+        ingest_pages(cat, pages, n_buckets=2, mode="dynamic")
+        run(day)
+
+    def broken(*a, **kw):
+        raise RuntimeError("cascade failed")
+
+    land(_days(spark, 22, 7), 28)
+    land(_days(spark, 29, 2), 30)
+    ingest_pages(cat, _days(spark, 31, 2), n_buckets=2, mode="dynamic")
+    with monkeypatch.context() as m:
+        m.setitem(CASCADE, "agg", broken)
+        with pytest.raises(RuntimeError, match="cascade failed"):
+            run(32)
+    assert run(32).stages_run == ["agg_1d", "agg_1mo", "retention"]
+    land(_days(spark, 33, 1), 33)
+    # a late rewrite of Feb 1, still held by every table with a horizon
+    rewrite = _days(spark, 32, 1).withColumn("value", F.col("value") * 2)
+    land(rewrite, 33)
+    land(_days(spark, 34, 3), 36)
+
+    pages = _days(spark, 22, 10).unionByName(rewrite).unionByName(_days(spark, 33, 4))
+    fresh = _fresh(spark, tmp_path, pages, policy=policy,
+                   now=datetime.datetime(2024, 2, 6), **EVERY_FAMILY)
+    assert [t.name for t in TIERS if _fingerprint(cat, t.name) != _fingerprint(fresh, t.name)] == []
+
+
 @pytest.mark.parametrize("block_size", ["1 week", "2 days", "36 hours", "12 hours"])
 def test_landed_day_reencodes_whole_blocks(spark, cat, block_size):
     """A day landed inside a block re-encodes every block overlapping it
@@ -394,19 +546,25 @@ def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
         assert all(m["files"] <= write_salt_buckets(spark) for m in parts.values())
 
 
-def test_rebuilt_unpartitioned_tier_keeps_its_log(spark, cat):
-    """agg_1mo is rebuilt in full on every run that changes its input;
-    the rebuild keeps the table's snapshot log."""
+def test_rewritten_month_tier_keeps_its_log(spark, cat):
+    """agg_1mo is partitioned by month: a run that changes one month of
+    its input rewrites that month's partition only, and the rewrite
+    keeps the table's snapshot log."""
     import pyspark.sql.functions as F
 
-    ingest_pages(cat, synth.pages(spark, n_urls=3, n_slots=48 * 3), n_buckets=2)
+    ingest_pages(cat, _days(spark, 1, 40), n_buckets=2)
     run_rollup_pipeline(spark, cat, encode_blocks=False)
+    before = cat.last_snapshot("agg_1mo")["partitions"]
     # day 2024-01-01 lands again with other values
-    day = synth.pages(spark, n_urls=3, n_slots=48).withColumn("value", F.col("value") * 2)
+    day = _days(spark, 1, 1).withColumn("value", F.col("value") * 2)
     ingest_pages(cat, day, n_buckets=2, mode="dynamic")
     res = run_rollup_pipeline(spark, cat, encode_blocks=False)
     assert "agg_1mo" in res.stages_run
     assert len(cat.snapshots("agg_1mo")) == 2
+    after = cat.last_snapshot("agg_1mo")["partitions"]
+    assert sorted(after) == ["month_bucket=2024-01", "month_bucket=2024-02"]
+    assert after["month_bucket=2024-02"] == before["month_bucket=2024-02"]
+    assert after["month_bucket=2024-01"] != before["month_bucket=2024-01"]
 
 
 def test_every_declared_tier_reaches_each_derived_surface(spark, cat):

@@ -268,3 +268,45 @@ def test_histogram_rejects_non_positive_bin_width(spark, bin_width):
     tier = rollup.histogram_tier(pages, bin_width=0.5)
     with pytest.raises(ValueError, match="bin width"):
         rollup.histogram_percentiles(tier, [0.95], bin_width)
+
+
+def _closure_cases():
+    from isp_trace_parser_spark.tiers import CASCADE, TIERS
+
+    cascaded = [t for t in TIERS if t.family in CASCADE]
+    return [pytest.param(t.name, None, id=t.name) for t in cascaded] + [
+        pytest.param(t.name, rollup.DEC, id=f"{t.name}-decimal")
+        for t in cascaded if t.family == "agg"
+    ]
+
+
+@pytest.mark.parametrize("name,sum_cast", _closure_cases())
+def test_cascade_is_closed_over_a_tiers_own_rows(spark, name, sum_cast):
+    """A family's cascade rule applied to a tier at the tier's own
+    resolution returns the tier, sketches byte for byte: the pipeline
+    re-aggregates a tier's kept rows together with new input rows."""
+    from pyspark.sql import functions as F
+
+    from isp_trace_parser_spark.tiers import BY_NAME, CASCADE
+
+    pages = synth.pages(spark, n_urls=12, n_slots=48 * 40, gap_pct=10)
+    obs = pages.select(
+        (F.crc32(F.col("url")) % 3).cast("string").alias("g"), "warc_ts", "value",
+        F.col("url").alias("visitor"),
+    )
+    rules = {
+        "agg": rollup.agg_rule("value", sum_cast),
+        "hist": rollup.hist_rule("value", 0.5),
+        "dist": rollup.dist_rule("visitor", 14),
+    }
+
+    def build(t):
+        if t.input is None:
+            return rollup.raw_tier(obs, rules[t.family], "g", "warc_ts", t.seconds, by=())
+        return CASCADE[t.family](build(BY_NAME[t.input]), t.seconds)
+
+    t = BY_NAME[name]
+    tier = build(t).localCheckpoint()
+    again = CASCADE[t.family](tier, t.seconds)
+    assert again.columns == tier.columns
+    assert again.exceptAll(tier).isEmpty() and tier.exceptAll(again).isEmpty()

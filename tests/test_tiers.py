@@ -101,3 +101,11 @@ def test_every_tier_input_is_declared_before_it():
     for t in TIERS:
         assert t.input is None or t.input in seen, t.name
         seen.add(t.name)
+
+
+def test_every_tier_is_partitioned():
+    """Every tier is written by one dynamic partition overwrite: each
+    row names a partition column with a declared encoding."""
+    from isp_trace_parser_spark.tiers import PARTITIONS
+
+    assert [t.name for t in TIERS if t.partition_col not in PARTITIONS] == []
