@@ -525,10 +525,7 @@ def q_codec_roundtrip(spark, sf_dir):
     )
     # 30-day blocks: events are sparse per (user, day), so daily blocks
     # would be 1-2 points each — block span must match point density.
-    # repartition=False: t30 is already series-partitioned (_series_part),
-    # so the encode needs no second exchange.
-    blocks = codec.encode_blocks(t30, "series", "bucket_ts", "avg_value",
-                                 block="30 days", repartition=False)
+    blocks = codec.encode_blocks(t30, "series", "bucket_ts", "avg_value", block="30 days")
     out = codec.decode_blocks(blocks)
     return out.select(
         "series", F.col("ts").alias("bucket_ts"), _q("value", 4).alias("value")

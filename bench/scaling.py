@@ -55,11 +55,11 @@ raw = spark.read.parquet(src)
 
 t = time.perf_counter()
 # one shuffle for the whole cascade: HashPartitioning(url) satisfies
-# every tier's (series, bucket) clustering (see rollup.build_tiers)
+# every tier's (series, bucket) clustering
 raw = raw.repartition(64, "url")
 t30 = rollup.rollup_raw(raw, "url", "warc_ts", "value").persist()
 t30.write.format("noop").mode("overwrite").save()
-t1d = rollup.rollup_cascade(t30, rollup.TIER_SECONDS["1d"]).persist()
+t1d = rollup.rollup_cascade(t30, 86400).persist()
 t1d.write.format("noop").mode("overwrite").save()
 rollup.rollup_cascade(t1d, None).write.format("noop").mode("overwrite").save()
 codec.encode_blocks(t30, "series", "bucket_ts", "avg_value", block="7 days").write.format(

@@ -28,18 +28,21 @@ Block layout (little-endian)::
      for repeated values, as a separate vectorizable stream)>
     <value bits: (xor >> v_trail) @ v_width for each NONZERO xor>
 
-Spark integration: ``encode_blocks`` shuffles points on
-(series, block_start), sorts within partitions and encodes each Arrow
-batch in one ``mapInArrow`` pass (numpy inside); ``decode_blocks`` is
-``mapInArrow`` back to points. Encoding pays its own exchange (none with
-``repartition=False`` over series-partitioned input), and the pipeline's
-partitioned ``blocks_30m`` write pays another.
+Spark integration: a block is an aggregate of its points.
+``encode_blocks`` groups points by (series, block_start), collecting
+each block's (ts, value) pairs sorted by time, and encodes the grouped
+rows in one ``mapInArrow`` pass (numpy inside); ``decode_blocks`` is
+``mapInArrow`` back to points. The grouping pays the encode's only
+exchange; the pipeline groups on its write's key as leading keys
+(``by``) after one repartition on that key, so ``blocks_30m`` pays one
+exchange for its encode and its partitioned write together.
 """
 
 from __future__ import annotations
 
 import re
 import struct
+from collections.abc import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -261,149 +264,68 @@ POINT_SCHEMA = StructType(
 )
 
 
-def _encode_batch(ser, bs_us, ts_us, vals):
-    """Encode every complete (series, block_start) group of one sorted
-    slice -> a pyarrow RecordBatch of blocks. ``ser`` stays a pyarrow
-    string array end to end (boundary compare and start-row gather run
-    in Arrow C kernels — no per-row Python string materialization);
-    only the per-block encode_block call is a Python-level loop (numpy
-    inside)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n = len(ser)
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    if n > 1:
-        change[1:] = np.asarray(
-            pc.not_equal(ser.slice(1), ser.slice(0, n - 1))
-        ) | (bs_us[1:] != bs_us[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], n)
-    blobs = [None] * len(starts)
-    enc_bytes = np.empty(len(starts), dtype=np.int64)
-    for i, (s, e) in enumerate(zip(starts, ends)):
-        blob = encode_block(ts_us[s:e], vals[s:e])
-        blobs[i] = blob
-        enc_bytes[i] = len(blob)
-    idx = pa.array(starts)
-    return pa.RecordBatch.from_arrays(
-        [
-            ser.take(idx),
-            pa.array(bs_us[starts], pa.timestamp("us")),
-            pa.array((ends - starts).astype(np.int32), pa.int32()),
-            pa.array(((ends - starts) * 16).astype(np.int64), pa.int64()),
-            pa.array(enc_bytes, pa.int64()),
-            pa.array(blobs, pa.binary()),
-        ],
-        ["series", "block_start", "n_points", "raw_bytes", "enc_bytes", "data"],
-    )
-
-
 def encode_blocks(
     df: DataFrame,
     series_col: str = "series",
     ts_col: str = "bucket_ts",
     value_col: str = "avg_value",
     block: str = "1 day",
-    repartition: bool = True,
+    by: Sequence[str] = (),
 ) -> DataFrame:
-    """Points -> one encoded binary block per (series, block_start).
+    """Points -> one encoded binary block per (series, block_start),
+    after the leading keys ``by``.
 
-    Implementation: hash-repartition on (series, block_start) — the
-    carry logic only needs each (series, block) GROUP to be contiguous
-    within a sorted partition, not each whole series, so a hot series'
-    history spreads across tasks instead of serializing one executor
-    (the hot-domain skew the synth generator models). Sort within
-    partitions by (series, block_start, ts), then a single
-    ``mapInArrow`` pass that encodes every complete block in each
-    Arrow batch, carrying the trailing partial block into the next
-    batch. This amortizes the Python/Arrow boundary over thousands of
-    blocks per call — ``applyInPandas`` per block pays that overhead
-    per GROUP, which is 10-50x slower for small blocks.
+    A block is an aggregate of its points: a ``groupBy`` on
+    ``(*by, series, block_start)`` collects each block's
+    ``(ts, value)`` pairs sorted by time, and one ``mapInArrow`` pass
+    encodes every grouped row of an Arrow batch, slicing one flat numpy
+    array per block with the list offsets. The Python/Arrow boundary is
+    paid once per batch of whole blocks, never once per block (as
+    ``applyInPandas`` would, 10-50x slower for small blocks). ``by``:
+    leading group keys carried into the output, as in
+    ``rollup.raw_tier``: a caller that repartitions on them first gets
+    an encode with no exchange of its own.
     """
-    keyed = df.select(
+    by = list(by)
+    points = df.select(
+        *by,
         F.col(series_col).alias("series"),
         rollup.bucket_start(F.col(ts_col), block_span_seconds(block)).alias("block_start"),
-        F.col(ts_col).alias("ts"),
-        F.col(value_col).cast("double").alias("value"),
+        F.struct(
+            F.col(ts_col).alias("ts"), F.col(value_col).cast("double").alias("value")
+        ).alias("p"),
     )
-    # explicit partition count: column-only repartition lets AQE
-    # coalesce by shuffle BYTES, and (series, block) co-location
-    # compresses shuffle blocks so well that AQE collapses the encode
-    # stage to a handful of tasks (observed 64 -> 13 at 69M rows),
-    # starving the Python workers. The encode stage is CPU-bound per
-    # ROW, not per byte — pin the fan-out at the session's shuffle
-    # parallelism.
-    try:
-        n_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except (TypeError, ValueError):
-        # AQE-managed platforms may hold a non-integer ("auto")
-        n_parts = df.sparkSession.sparkContext.defaultParallelism
-    # ``repartition=False``: the caller guarantees each series is wholly
-    # contained in one input partition (e.g. the frame is already
-    # hash-partitioned on the series key) — the carry logic only needs
-    # (series, block) groups contiguous under the sort, so the encode
-    # runs shuffle-free on the existing partitioning (measured ~0.4s of
-    # a 3s roundtrip at bench scale). The default keeps the pinned
-    # (series, block_start) fan-out, which also spreads one hot series
-    # across tasks.
-    if repartition:
-        arranged = keyed.repartition(
-            n_parts, "series", "block_start"
-        ).sortWithinPartitions("series", "block_start", "ts")
-    else:
-        arranged = keyed.sortWithinPartitions(
-            "series", "block_start", "ts"
-        )
+    grouped = points.groupBy(*by, "series", "block_start").agg(
+        F.array_sort(F.collect_list("p")).alias("points")
+    )
+    schema = StructType([grouped.schema[c] for c in by] + BLOCK_SCHEMA.fields)
 
-    def _gen(batches):
+    def _encode(batches):
         # mapInArrow, not mapInPandas: timestamps arrive as int64 views
         # and the series strings never materialize as Python objects
         # (pandas conversion measured ~40% of the whole encode stage —
         # OPTIMIZATION_r06.md)
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        carry = None  # (ser pa.Array, bs_us, ts_us, vals) of last group
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ser = batch.column("series")
-            if isinstance(ser, pa.ChunkedArray):  # defensive
-                ser = ser.combine_chunks()
-            bs_us = np.asarray(batch.column("block_start")).view(np.int64)
-            ts_us = np.asarray(batch.column("ts")).view(np.int64)
-            vals = np.asarray(batch.column("value"), dtype=np.float64)
-            if carry is not None:
-                ser = pa.concat_arrays([carry[0], ser])
-                bs_us = np.concatenate([carry[1], bs_us])
-                ts_us = np.concatenate([carry[2], ts_us])
-                vals = np.concatenate([carry[3], vals])
-                carry = None
-            n = len(ser)
-            # hold back the final (possibly incomplete) group: it may
-            # continue in the next Arrow batch of this partition
-            tail_mask = np.asarray(
-                pc.equal(ser, ser[n - 1])
-            ) & (bs_us == bs_us[n - 1])
-            cut = n - int(tail_mask.sum())
-            carry = (
-                ser.slice(cut),
-                bs_us[cut:],
-                ts_us[cut:],
-                vals[cut:],
+            pts = batch.column("points")
+            offs = np.asarray(pts.offsets)
+            ts_us = np.asarray(pts.values.field("ts")).view(np.int64)
+            vals = np.asarray(pts.values.field("value"), dtype=np.float64)
+            blobs = [encode_block(ts_us[s:e], vals[s:e]) for s, e in zip(offs[:-1], offs[1:])]
+            n = np.diff(offs).astype(np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *(batch.column(c) for c in [*by, "series", "block_start"]),
+                    pa.array(n.astype(np.int32), pa.int32()),
+                    pa.array(n * 16, pa.int64()),
+                    pa.array([len(b) for b in blobs], pa.int64()),
+                    pa.array(blobs, pa.binary()),
+                ],
+                schema.names,
             )
-            if cut:
-                yield _encode_batch(
-                    ser.slice(0, cut), bs_us[:cut], ts_us[:cut], vals[:cut]
-                )
-        if carry is not None and len(carry[1]):
-            yield _encode_batch(*carry)
 
-    return arranged.mapInArrow(_gen, BLOCK_SCHEMA)
+    return grouped.mapInArrow(_encode, schema)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:

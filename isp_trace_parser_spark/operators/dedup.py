@@ -703,8 +703,7 @@ def _word_shingle_keys(
         F.col(text_col).isNotNull()
     )
     # explicit partition count: AQE would coalesce this small exchange
-    # by BYTES, but the stage is CPU-bound per row (same rationale as
-    # codec.encode_blocks' pinned fan-out)
+    # by BYTES, but the stage is CPU-bound per row
     spark = df.sparkSession
     try:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))

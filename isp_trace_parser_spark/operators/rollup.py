@@ -39,8 +39,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-TIER_SECONDS = {"30m": 1800, "1d": 86400}
-
 # Optional exact partial sums: float summation is order-dependent, so a
 # re-run (or another engine) can disagree in the last ulp — visible
 # after rounding. Passing ``sum_cast="decimal(20,4)"`` sums exactly
@@ -201,31 +199,6 @@ def rollup_cascade(tier: DataFrame, coarser_seconds: int | None) -> DataFrame:
         F.sum("sum_value").alias("sum_value"),
         F.sum("cnt_value").alias("cnt_value"),
     ]))
-
-
-def build_tiers(
-    df: DataFrame,
-    series_col: str = "url",
-    ts_col: str = "warc_ts",
-    value_col: str = "value",
-    sum_cast: str | None = None,
-) -> dict[str, DataFrame]:
-    """The full cascade raw -> 30m -> 1d -> 1mo. One raw scan total.
-
-    The input is hash-partitioned on the series key ONCE up front:
-    HashPartitioning(series) satisfies the clustered distribution of
-    every tier's groupBy (series, bucket) AND of the per-series gap-fill
-    window, so the whole cascade runs on a single shuffle instead of one
-    per tier (~35% faster at bench scale). Tradeoff: the partial
-    (map-side combine) pre-aggregation of the first tier is skipped — a
-    win when series are numerous and slots-per-series modest (the
-    10^12-doc web-table shape), a loss only when a few series dominate
-    the row count."""
-    base = df.repartition(F.col(series_col))
-    t30 = rollup_raw(base, series_col, ts_col, value_col, TIER_SECONDS["30m"], sum_cast)
-    t1d = rollup_cascade(t30, TIER_SECONDS["1d"])
-    t1mo = rollup_cascade(t1d, None)
-    return {"agg_30m": t30, "agg_1d": t1d, "agg_1mo": t1mo}
 
 
 def mean_merge(traces: list[DataFrame], ts_col: str = "datetime", value_col: str = "value") -> DataFrame:

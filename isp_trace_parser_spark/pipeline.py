@@ -31,12 +31,13 @@ started, running stages finish and commit, and the first error is
 re-raised once every thread has stopped; each commit is per table, so a
 re-run resumes at the failed stage. Retention runs after every stage.
 
-Exchanges: a raw tier (agg_30m, hist_30m, dist_30m) attaches its
-storage key ``(day_bucket, salt)`` to the raw rows, shuffles once on it
-and groups with it as leading keys, so one exchange serves both the
-aggregation and the partitioned write (``partitioning.write_salt`` is
-the one salt formula both use). The cascades keep their map-side
-combine before their shuffle, and the write shuffles again.
+Exchanges: a raw tier (agg_30m, hist_30m, dist_30m) and blocks_30m
+attach the storage key ``(day_bucket, salt)`` of the row each input row
+feeds, shuffle once on it and group with it as leading keys, so one
+exchange serves both the aggregation (or the block encode) and the
+partitioned write (``partitioning.write_salt`` is the one salt formula
+both use). The cascades keep their map-side combine before their
+shuffle, and the write shuffles again.
 
 Incremental model (the Iceberg-snapshot analog): every catalog commit
 records a per-partition file fingerprint (catalog.py). Each stage stores
@@ -145,8 +146,9 @@ _SALT = "_salt"
 class Stage:
     """One node of the pipeline DAG: ``tier`` is built from table
     ``input`` (its input tier, or the raw table) by ``build``, and
-    written partitioned and sorted as its row declares. A raw tier's
-    ``build`` already distributes its output on the write's key.
+    written partitioned and sorted as its row declares. The ``build`` of
+    a raw tier or of blocks already distributes its output on the
+    write's key.
     ``points`` turns the tier's stored rows back into input rows; a raw
     tier has none (its output partition is its input partition)."""
 
@@ -160,31 +162,53 @@ class Stage:
         return self.tier.name
 
 
+def _expired(cat: Catalog, table: str, col: str) -> set[str]:
+    """Partitions of ``col`` that retention expired from ``table``: the
+    values its expire commits dropped."""
+    return {
+        v
+        for snap in cat.snapshots_newest_first(table)
+        if snap["lineage"].get("partition_col") == col
+        for v in snap["lineage"]["dropped"]
+    }
+
+
 def _run_stage(cat: Catalog, st: Stage) -> dict[str, Any] | None:
     """Bring one stage up to date with its input: None when it already
     is, else the files and bytes of the table it committed. A stage over
     a tier builds over the changed input partitions and its own rows of
-    the partitions it rewrites, less those a changed partition holds."""
+    the partitions it rewrites, less those a changed partition holds. It
+    leaves a partition retention expired unwritten: its own rows are gone,
+    so a rewrite would hold the changed input partitions alone."""
     t = st.tier
     in_state = partition_state(cat, st.input, t.input_col)
     changed = _changed_partitions(cat, t.name, in_state)
     if changed == []:
         return None
     src = cat.read(st.input, partitions=None if changed is None else set(changed).__contains__)
+    expired: list[str] = []
     if changed and st.points:
         rewritten = t.rewrites(changed)
+        present = cat.list_partitions(t.name, t.partition_col)
         # a fully expired output has no file to read and no row to add back
-        if any(map(rewritten, cat.list_partitions(t.name, t.partition_col))):
+        if any(map(rewritten, present)):
             own = st.points(cat.read(t.name, partitions=rewritten))
             held_by = PARTITIONS[t.input_col].of(t.last_input_start()).cast("string")
             src = src.select(*own.columns).union(own.where(~held_by.isin(changed)))
+        gone = _expired(cat, t.name, t.partition_col) - set(present)
+        expired = sorted(filter(rewritten, gone))
+    out = st.build(src)
+    if expired:
+        out = out.where(~F.col(t.partition_col).cast("string").isin(expired))
     snap = cat.write(
-        st.build(src),
+        out,
         t.name,
         partition_by=[t.partition_col],
         sort_within=list(t.sort_within),
         mode="dynamic",
-        repartition=t.input is not None,
+        # raw tiers and blocks build on the write's key; a cascade
+        # combines map-side before its own shuffle, so its write shuffles
+        repartition=t.input is not None and t.family in CASCADE,
         lineage={
             "stage": t.name,
             "input_table": st.input,
@@ -304,42 +328,47 @@ def run_rollup_pipeline(
         raw_rules["dist"] = (distinct_key, rollup.dist_rule(distinct_key, 14))  # HLL lgK
     enabled = {*raw_rules, *(["blocks"] if encode_blocks else [])}
 
-    def raw_stage(t: Tier) -> Callable[[DataFrame], DataFrame]:
-        """A tier over raw rows in one exchange: attach the storage key
-        (partition of the bucket start, write salt of the series),
-        shuffle once on it, group with it as leading keys (the shuffle
-        already clusters every group), then drop the salt. The write
-        then needs no shuffle of its own."""
-        col, rule = raw_rules[t.family]
+    def keyed(
+        t: Tier, cols: list[str], build: Callable[[DataFrame, list[str]], DataFrame]
+    ) -> Callable[[DataFrame], DataFrame]:
+        """A tier built over rows ``cols`` (series, timestamp, ...) in
+        one exchange: attach the storage key of the tier row each feeds
+        (partition of its bucket start, write salt of its series),
+        shuffle once on it, ``build`` with it as leading group keys (the
+        shuffle already clusters every group), then drop the salt. The
+        write then needs no shuffle of its own."""
+        series, ts = cols[:2]
+        key = [t.partition_col, _SALT]
         part = PARTITIONS[t.partition_col].of
 
         def _build(src: DataFrame) -> DataFrame:
-            keyed = (
-                src.select("url", "warc_ts", col)
-                .withColumn(t.partition_col, part(rollup.bucket_start(F.col("warc_ts"), t.seconds)))
-                .withColumn(_SALT, write_salt(["url"], n_salts))
-                .repartition(t.partition_col, _SALT)
+            rows = (
+                src.select(*cols)
+                .withColumn(t.partition_col, part(rollup.bucket_start(F.col(ts), t.seconds)))
+                .withColumn(_SALT, write_salt([series], n_salts))
+                .repartition(*key)
             )
-            return rollup.raw_tier(
-                keyed, rule, "url", "warc_ts", t.seconds, by=[t.partition_col, _SALT]
-            ).drop(_SALT)
+            return build(rows, key).drop(_SALT)
 
         return _build
 
     def stage(t: Tier) -> Stage:
         if t.input is None:
-            return Stage(t, raw_table, raw_stage(t))
+            col, rule = raw_rules[t.family]
+            return Stage(t, raw_table, keyed(
+                t, ["url", "warc_ts", col],
+                lambda rows, key: rollup.raw_tier(rows, rule, "url", "warc_ts", t.seconds, by=key),
+            ))
         if t.family == "blocks":
-            part = PARTITIONS[t.partition_col].of
             # a block is a bucket as wide as its span (codec.encode_blocks
             # is looked up when the stage runs)
-            return Stage(
-                replace(t, seconds=codec.block_span_seconds(block_size)), t.input,
-                lambda df: codec.encode_blocks(
-                    df, "series", "bucket_ts", "avg_value", block=block_size
-                ).withColumn(t.partition_col, part(F.col("block_start"))),
-                codec.block_points,
-            )
+            t = replace(t, seconds=codec.block_span_seconds(block_size))
+            return Stage(t, t.input, keyed(
+                t, ["series", "bucket_ts", "avg_value"],
+                lambda rows, key: codec.encode_blocks(
+                    rows, "series", "bucket_ts", "avg_value", block=block_size, by=key
+                ),
+            ), codec.block_points)
         part = PARTITIONS[t.partition_col].of(t.last_input_start())
         rule = CASCADE[t.family]
         return Stage(

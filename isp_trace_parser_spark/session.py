@@ -12,8 +12,7 @@ Design notes (scale-first):
 - No Iceberg runtime jar ships in this sandbox, so the catalog shim in
   :mod:`isp_trace_parser_spark.sources.catalog` provides the same
   append/overwrite-partition/snapshot surface over hive-partitioned
-  parquet. Flip ``ICEBERG_ENABLED`` and add the runtime jar to use a real
-  Iceberg catalog; the engine code is layout-agnostic.
+  parquet; the engine code is layout-agnostic.
 """
 
 from __future__ import annotations
@@ -21,8 +20,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-ICEBERG_ENABLED = False  # no iceberg-spark-runtime jar in this environment
 
 # Default shuffle parallelism for local testing. On a real cluster this is
 # left high (or unset) and AQE coalesces; see jobs/run_pipeline.py.

@@ -95,6 +95,30 @@ def test_block_points_inverts_encode_blocks(spark):
     assert points.exceptAll(t30).isEmpty() and t30.exceptAll(points).isEmpty()
 
 
+def test_encode_in_small_arrow_batches(spark):
+    """Arrow batches of a few rows split no block: encode_blocks gives
+    exactly one row per (series, block_start), and block_points inverts
+    it."""
+    import pyspark.sql.functions as F
+
+    from isp_trace_parser_spark.operators.rollup import bucket_start
+
+    t30 = rollup_raw(synth.pages(spark, n_urls=3, n_slots=48 * 9, gap_pct=7)).select(
+        "series", "bucket_ts", "avg_value"
+    )
+    starts = t30.select("series", bucket_start(F.col("bucket_ts"), 2 * 86400)).distinct().count()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        blocks = codec.encode_blocks(t30, block="2 days").localCheckpoint()
+        assert blocks.count() == blocks.select("series", "block_start").distinct().count() == starts
+        points = codec.block_points(blocks)
+        assert points.exceptAll(t30).isEmpty() and t30.exceptAll(points).isEmpty()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_repeated_values_compress_hard():
     # forward-filled / flat-lining traces (the common case after
     # gap-fill) hit the zero-XOR bitmap: ~1 bit/point
@@ -116,10 +140,9 @@ def test_block_boundaries_daily(spark):
 
 def test_encode_shuffle_keys_on_series_and_block(spark):
     """The encode shuffle must key on (series, block_start), not series
-    alone: the carry logic only needs each (series, block) group
-    contiguous within a sorted partition, and keying on both spreads a
-    hot series' history across tasks instead of serializing one
-    executor (the hot-domain skew synth.pages models)."""
+    alone: a block is grouped on both, and keying on both spreads a hot
+    series' history across tasks instead of serializing one executor
+    (the hot-domain skew synth.pages models)."""
     import re
 
     pages = synth.pages(spark, n_urls=2, n_slots=48 * 2)
@@ -132,8 +155,8 @@ def test_encode_shuffle_keys_on_series_and_block(spark):
 
 def test_encode_survives_non_integer_shuffle_conf(spark, monkeypatch):
     """AQE-managed platforms may hold a non-integer value (e.g. "auto")
-    in spark.sql.shuffle.partitions; encode_blocks must fall back to
-    defaultParallelism instead of raising (ADVICE r4)."""
+    in spark.sql.shuffle.partitions; encode_blocks must not raise on it
+    (ADVICE r4)."""
     import datetime
 
     import pandas as pd

@@ -21,7 +21,9 @@ from isp_trace_parser_spark.operators import rollup
 spark = get_spark(master=master, shuffle_partitions=16)
 spark.sparkContext.setLogLevel("ERROR")
 pages = synth.pages(spark, n_urls=40, n_slots=48 * 20, gap_pct=10, partitions=8)
-tiers = rollup.build_tiers(pages, sum_cast="decimal(28,12)")
+t30 = rollup.rollup_raw(pages, sum_cast="decimal(28,12)")
+t1d = rollup.rollup_cascade(t30, 86400)
+tiers = {"agg_30m": t30, "agg_1d": t1d, "agg_1mo": rollup.rollup_cascade(t1d, None)}
 import pandas as pd
 frames = []
 for name, df in tiers.items():

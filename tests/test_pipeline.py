@@ -329,6 +329,29 @@ def test_fully_expired_tier_takes_a_new_month(spark, cat, tmp_path):
         assert _tables_equal(cat.read(t), fresh.read(t)), t
 
 
+def test_rewrite_leaves_an_expired_partition_unwritten(spark, cat):
+    """A late rewrite of a day whose 1d month retention has expired
+    leaves that month unwritten: agg_1d stays without it, and agg_1mo
+    keeps the row it built from the whole month. The row is stale (one
+    rewritten day's new min and max cannot be folded into it), but not
+    truncated to the rewritten day."""
+    import pyspark.sql.functions as F
+
+    kw = dict(sum_cast=rollup.DEC, encode_blocks=False, now=datetime.datetime(2024, 2, 1),
+              policy=RetentionPolicy(t1d_keep_months=0))
+    ingest_pages(cat, _days(spark, 1, 31), n_buckets=2)
+    run_rollup_pipeline(spark, cat, **kw)
+    before = sorted(cat.read("agg_1mo").collect())
+    assert sum(r["cnt_value"] for r in before) == 4 * 48 * 31
+
+    day = _days(spark, 30, 1).withColumn("value", F.col("value") * 2)
+    ingest_pages(cat, day, n_buckets=2, mode="dynamic")
+    run_rollup_pipeline(spark, cat, **kw)
+
+    assert cat.list_partitions("agg_1d", "month_bucket") == []
+    assert sorted(cat.read("agg_1mo").collect()) == before
+
+
 def _fingerprint(cat, table: str) -> tuple:
     """Order-free content fingerprint of a table: row count plus a sum
     and an xor of per-row hashes over every column."""
@@ -516,13 +539,9 @@ def test_failed_stage_keeps_independent_commits_and_resumes(spark, tmp_path, mon
         assert _tables_equal(cat.read(t), fresh.read(t)), t
 
 
-def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
-    """agg_30m and hist_30m shuffle once: the exchange that clusters the
-    aggregation also distributes the partitioned write, and each day
-    still holds at most one file per write salt."""
+def _write_plans(monkeypatch) -> dict[str, str]:
+    """The executed plan of each table's next write, by table name."""
     from pyspark.sql.readwriter import DataFrameWriter
-
-    from isp_trace_parser_spark.plans.partitioning import write_salt_buckets
 
     plans: dict[str, str] = {}
     orig = DataFrameWriter.parquet
@@ -535,6 +554,16 @@ def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
         return orig(self, path, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return plans
+
+
+def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
+    """agg_30m and hist_30m shuffle once: the exchange that clusters the
+    aggregation also distributes the partitioned write, and each day
+    still holds at most one file per write salt."""
+    from isp_trace_parser_spark.plans.partitioning import write_salt_buckets
+
+    plans = _write_plans(monkeypatch)
     pages = synth.pages(spark, n_urls=16, n_slots=48 * 3)
     ingest_pages(cat, pages, n_buckets=2)
     run_rollup_pipeline(spark, cat, histogram_bin_width=0.5)
@@ -544,6 +573,27 @@ def test_raw_tier_writes_pay_one_exchange(spark, cat, monkeypatch):
         parts = cat.last_snapshot(t)["partitions"]
         assert len(parts) == 3
         assert all(m["files"] <= write_salt_buckets(spark) for m in parts.values())
+
+
+def test_blocks_write_pays_one_exchange(spark, cat, monkeypatch):
+    """blocks_30m is keyed on its write's key as a raw tier is: the
+    exchange that groups each block's points also distributes the
+    partitioned write, which does not shuffle again."""
+    plans = _write_plans(monkeypatch)
+    shuffled: dict[str, bool] = {}
+    orig = Catalog.write
+
+    def write(self, df, name, *a, **kw):
+        shuffled[name] = kw.get("repartition", True)
+        return orig(self, df, name, *a, **kw)
+
+    monkeypatch.setattr(Catalog, "write", write)
+    ingest_pages(cat, synth.pages(spark, n_urls=16, n_slots=48 * 9), n_buckets=2)
+    run_rollup_pipeline(spark, cat)
+
+    assert shuffled["blocks_30m"] is False
+    assert plans["blocks_30m"].count("Exchange") == 1, plans["blocks_30m"]
+    assert codec.block_points(cat.read("blocks_30m")).count() == 16 * 48 * 9
 
 
 def test_rewritten_month_tier_keeps_its_log(spark, cat):

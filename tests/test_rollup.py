@@ -16,7 +16,10 @@ N_URLS, N_SLOTS = 10, 48 * 40  # ~40 days, crosses a month boundary
 @pytest.fixture(scope="module")
 def tiers(spark):
     df = synth.pages(spark, n_urls=N_URLS, n_slots=N_SLOTS, gap_pct=10)
-    return {k: v.toPandas() for k, v in rollup.build_tiers(df).items()}
+    t30 = rollup.rollup_raw(df)
+    t1d = rollup.rollup_cascade(t30, 86400)
+    tiers = {"agg_30m": t30, "agg_1d": t1d, "agg_1mo": rollup.rollup_cascade(t1d, None)}
+    return {k: v.toPandas() for k, v in tiers.items()}
 
 
 @pytest.fixture(scope="module")
@@ -85,7 +88,7 @@ def test_cascade_over_series_partitioned_tier_adds_no_exchange(spark, tmp_path):
     path = str(tmp_path / "t30")
     rollup.rollup_raw(pages, "url", "warc_ts", "value").write.parquet(path)
     t30 = spark.read.parquet(path).repartition("series")
-    t1d = rollup.rollup_cascade(t30, rollup.TIER_SECONDS["1d"])
+    t1d = rollup.rollup_cascade(t30, 86400)
     plan = t1d._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert t1d.count() == 20 * 3
